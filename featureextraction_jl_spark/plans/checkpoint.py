@@ -3,11 +3,16 @@
 The north rule requires runs to be "checkpoint-resumable with per-partition
 lineage manifests and metrics" (BASELINE.json:14).  Spark has no built-in
 batch-job resume, so the unit of resumption here is a **conv_id hash bucket
-group**: unit *i* owns every conversation with ``pmod(xxhash64(conv_id),
-n_units) == i``.  Every engine operator (sessionize, lag/lead, backfill,
-as-of join, projection) partitions by conv_id, so the per-unit decomposition
-is exact — running units independently and unioning their outputs equals one
-global run (tested in tests/test_checkpoint.py).
+group**: unit *i* owns every conversation with ``pmod(hash(conv_id),
+n_units) == i``.  ``hash`` is Spark's Murmur3 (seed 42), the hash the
+chain's conv_id exchange partitions by, so when
+``spark.sql.shuffle.partitions`` is a multiple of ``n_units`` every shuffle
+partition holds exactly one unit, and a write task makes one file per unit
+it holds (one in all without AQE partition coalescing).  Every engine
+operator (sessionize, lag/lead, backfill, as-of join, projection)
+partitions by conv_id, so the per-unit decomposition is exact — computing
+a subset of units equals the same units of one global run (tested in
+tests/test_checkpoint.py).
 
 Protocol (manifest-last, crash-safe):
 
@@ -18,18 +23,28 @@ Protocol (manifest-last, crash-safe):
    ``_manifest/model.npz`` + ``_manifest/fit.json`` (n, wall_s, explained
    variance, moment checksum).  Skipped on resume when fingerprint+config
    match.
-3. **Transform stage**, one unit at a time: filter -> transform-only
-   ``run_features`` -> parquet ``unit=<i>/`` -> gather metrics (rows via
-   ``Observation`` — no second pass — plus bytes/files/wall) -> atomically
-   write ``_manifest/unit_<i>.json`` (tmp + ``os.replace``).  A crash between
-   data write and manifest write simply redoes the unit; the data write is
-   idempotent (per-unit overwrite).
+3. **Transform stage**, every pending unit in ONE Spark write: filter the
+   input to the pending units (only when some are already done) ->
+   transform-only ``run_features`` -> add the ``unit`` column -> parquet
+   ``partitionBy("unit")`` with dynamic partition overwrite, which replaces
+   only the ``unit=<i>/`` dirs it writes (a static overwrite would delete
+   ``_manifest/`` and the resumed units).  One ``Observation`` counts every
+   unit's rows in the same pass.  A pending unit with no rows gets a
+   ``unit=<i>/`` holding an empty file that carries the schema.  Then each
+   unit's bytes/files are listed and ``_manifest/unit_<i>.json`` is written
+   atomically (tmp + fsync + ``os.replace``).
 4. ``_manifest/job.json`` aggregates per-unit metrics (rows, bytes, seconds).
 
-At the 10^12-turn design scale the unit filter aligns with the Iceberg
-``bucket(n, conv_id)`` partition transform, so each unit's scan prunes to its
-own files instead of filtering a full scan; the parquet sandbox path filters
-(still one scan per unit, stated in the manifest as ``pruning: "filter"``).
+Crash window: a crash between the data write and a unit's manifest write
+redoes that unit; the data write is idempotent (its unit dir is
+overwritten).  Because the pending units share one write, a driver crash
+DURING the write redoes every pending unit, not only the unfinished ones;
+failed tasks are still retried by Spark inside the write.
+
+The unit split is a hash-slice filter over a full scan, not storage
+pruning: Spark's Murmur3 does not match Iceberg's ``bucket(n, conv_id)``
+transform, so a resumed run scans the whole input once and keeps the
+pending units' rows.
 """
 
 from __future__ import annotations
@@ -132,10 +147,16 @@ def input_fingerprint(*paths: str) -> str:
 NON_SEMANTIC_CONFIG_FIELDS = ("cache_prepared",)
 
 
+#: how a conversation is assigned its unit; part of config_hash, so output
+#: split any other way is recomputed, never mixed with this split
+UNIT_SPLIT = "pmod(hash(conv_id), n_units)"
+
+
 def config_hash(cfg: FeatureJobConfig, n_units: int) -> str:
     semantic = {k: v for k, v in asdict(cfg).items()
                 if k not in NON_SEMANTIC_CONFIG_FIELDS}
-    payload = json.dumps({**semantic, "n_units": n_units}, sort_keys=True)
+    payload = json.dumps({**semantic, "n_units": n_units,
+                          "unit_split": UNIT_SPLIT}, sort_keys=True)
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
@@ -172,10 +193,6 @@ def _dir_stats(path: str) -> tuple[int, int]:
 # The resumable runner
 # ---------------------------------------------------------------------------
 
-def _unit_filter(df: DataFrame, unit: int, n_units: int) -> DataFrame:
-    return df.filter(F.pmod(F.xxhash64("conv_id"), F.lit(n_units)) == unit)
-
-
 def run_features_resumable(
     spark: SparkSession,
     transcripts_path: str,
@@ -191,7 +208,9 @@ def run_features_resumable(
     Re-invoking with the same inputs/config/out_dir skips every unit whose
     manifest is valid — a killed run resumes where it stopped.  Changed input
     bytes or config invalidate all manifests (fingerprint mismatch) and the
-    job recomputes from scratch.
+    job recomputes from scratch.  ``fail_after_units`` (tests only) raises
+    :class:`SimulatedCrash` after that many unit manifests of this run have
+    been written, i.e. after the data write.
     """
     cfg = cfg or FeatureJobConfig()
     mdir = os.path.join(out_dir, MANIFEST_DIR)
@@ -293,11 +312,11 @@ def run_features_resumable(
         }
         _write_json_atomic(fit_man_path, fit_man)
 
-    # ---- transform stage, unit by unit ----------------------------------
+    # ---- transform stage: every pending unit in one write ---------------
     # Stale-unit sweep: a re-run with a smaller n_units would otherwise
     # leave unit=k (k >= n_units) data dirs from the old split on disk, and
-    # read_feature_output's unit=* glob would union them — duplicating rows
-    # while job.json (which sums only 0..n_units-1) reports clean totals.
+    # read_feature_output(validate=False) would union them — duplicating
+    # rows while job.json (which sums only 0..n_units-1) reports clean totals.
     for entry in os.listdir(out_dir):
         if entry.startswith("unit="):
             try:
@@ -310,59 +329,76 @@ def run_features_resumable(
                 if os.path.exists(stale_man):
                     os.remove(stale_man)
 
-    units_done, units_skipped = [], []
-    for unit in range(n_units):
-        upath = os.path.join(mdir, f"unit_{unit}.json")
-        man = _read_json(upath)
-        # Skip only when the manifest is valid AND its data still exists:
-        # a lost/deleted unit dir with a surviving manifest would otherwise
-        # be silently omitted from the output while job.json reports its
-        # rows as present.
-        if valid(man) and os.path.isdir(os.path.join(out_dir, f"unit={unit}")):
-            units_skipped.append(unit)
-            continue
-        if fail_after_units is not None and len(units_done) >= fail_after_units:
-            raise SimulatedCrash(f"injected crash before unit {unit}")
+    def unit_dir(u: int) -> str:
+        return os.path.join(out_dir, f"unit={u}")
+
+    def unit_manifest(u: int) -> str:
+        return os.path.join(mdir, f"unit_{u}.json")
+
+    # Skip only when the manifest is valid AND its data still exists: a
+    # lost/deleted unit dir with a surviving manifest would otherwise be
+    # silently omitted from the output while job.json reports its rows as
+    # present.
+    units_skipped = [u for u in range(n_units)
+                     if valid(_read_json(unit_manifest(u)))
+                     and os.path.isdir(unit_dir(u))]
+    pending = [u for u in range(n_units) if u not in units_skipped]
+    if pending:
         t0 = time.monotonic()
-        t_u = _unit_filter(transcripts, unit, n_units)
-        s_u = _unit_filter(snapshots, unit, n_units) if snapshots is not None else None
-        out, _ = run_features(t_u, s_u, cfg, model=model)
-        obs = Observation(f"unit_{unit}")
-        out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-        data_dir = os.path.join(out_dir, f"unit={unit}")
-        out.write.mode("overwrite").parquet(data_dir)
-        n_files, n_bytes = _dir_stats(data_dir)
-        man = {
-            "stage": "transform",
-            "unit": unit,
-            "n_units": n_units,
-            "input_fingerprint": fp,
-            "config_hash": chash,
-            "model": os.path.basename(model_path),
-            "pruning": "filter",  # iceberg: bucket-partition pruning instead
-            "rows": int(obs.get["rows"]),
-            "output_files": n_files,
-            "output_bytes": n_bytes,
-            "wall_s": round(time.monotonic() - t0, 3),
-        }
-        _write_json_atomic(upath, man)
-        units_done.append(unit)
+        unit = F.pmod(F.hash("conv_id"), F.lit(n_units))
+        if units_skipped:
+            transcripts = transcripts.filter(unit.isin(pending))
+            if snapshots is not None:
+                snapshots = snapshots.filter(unit.isin(pending))
+        feats, _ = run_features(transcripts, snapshots, cfg, model=model)
+        obs = Observation("units")
+        out = feats.withColumn("unit", unit).observe(
+            obs, *[F.count_if(F.col("unit") == u).alias(str(u))
+                   for u in pending])
+        out.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("unit").parquet(out_dir)
+        # the wall of the one write shared by every pending unit
+        wall_s = round(time.monotonic() - t0, 3)
+        for i, u in enumerate(pending):
+            if fail_after_units is not None and i >= fail_after_units:
+                raise SimulatedCrash(f"injected crash before manifest of unit {u}")
+            rows = int(obs.get[str(u)])
+            if not rows:
+                # partitionBy makes no dir for a unit without rows: write
+                # one empty file carrying the schema, so the unit (and an
+                # all-empty output) stays readable
+                spark.createDataFrame([], feats.schema).write \
+                    .mode("overwrite").parquet(unit_dir(u))
+            n_files, n_bytes = _dir_stats(unit_dir(u))
+            _write_json_atomic(unit_manifest(u), {
+                "stage": "transform",
+                "unit": u,
+                "n_units": n_units,
+                "input_fingerprint": fp,
+                "config_hash": chash,
+                "model": os.path.basename(model_path),
+                "rows": rows,
+                "output_files": n_files,
+                "output_bytes": n_bytes,
+                "wall_s": wall_s,
+            })
 
     # ---- job summary -----------------------------------------------------
     unit_mans = []
     for u in range(n_units):
-        man = _read_json(os.path.join(mdir, f"unit_{u}.json"))
+        man = _read_json(unit_manifest(u))
         if man is None:
             # a manifest written above vanished/corrupted before aggregation
             raise RuntimeError(
                 f"unit manifest missing or unreadable at summary time: "
-                f"{os.path.join(mdir, f'unit_{u}.json')}")
+                f"{unit_manifest(u)}")
         unit_mans.append(man)
     job = {
         "input_fingerprint": fp,
         "config_hash": chash,
         "n_units": n_units,
-        "units_computed_this_run": units_done,
+        "units_computed_this_run": pending,
         "units_resumed": units_skipped,
         "rows": sum(m["rows"] for m in unit_mans),
         "output_bytes": sum(m["output_bytes"] for m in unit_mans),
@@ -377,28 +413,31 @@ def read_feature_output(spark: SparkSession, out_dir: str,
                         validate: bool = True) -> DataFrame:
     """Read the union of all completed units' outputs.
 
-    ``validate`` (default) checks the unit manifests BEFORE the glob
-    union: every unit dir must carry a readable manifest, all manifests
-    must agree on ONE (input_fingerprint, config_hash) version, and the
-    unit set must be complete for the recorded n_units — otherwise a run
-    that crashed mid-recompute over changed input leaves unit=0 holding
-    v2 rows beside v1 units, and the bare glob would return the mixed
-    union with no error.  Pass validate=False to inspect partial output.
+    ``validate`` (default) checks the unit manifests BEFORE the union:
+    every unit dir must carry a readable manifest, all manifests must agree
+    on ONE (input_fingerprint, config_hash) version, and the unit set must
+    be complete for the recorded n_units — otherwise a run that
+    crashed mid-recompute over changed input leaves unit=0 holding v2 rows
+    beside v1 units, and a bare read would return the mixed union with no
+    error.  Pass validate=False to inspect partial output.  Either way the
+    unit dirs listed here are read by name (with ``basePath``, so ``unit``
+    stays a partition column), not through a glob.
     """
+    units = []
+    for entry in os.listdir(out_dir):
+        if entry.startswith("unit="):
+            try:
+                units.append(int(entry.split("=", 1)[1]))
+            except ValueError:
+                raise ValueError(
+                    f"unparseable unit dir {entry!r} under {out_dir}")
+    if not units:
+        raise FileNotFoundError(f"no unit=<i> output under {out_dir}")
+    units.sort()
     if validate:
         mdir = os.path.join(out_dir, MANIFEST_DIR)
-        units = []
-        for entry in os.listdir(out_dir):
-            if entry.startswith("unit="):
-                try:
-                    units.append(int(entry.split("=", 1)[1]))
-                except ValueError:
-                    raise ValueError(
-                        f"unparseable unit dir {entry!r} under {out_dir}")
-        if not units:
-            raise FileNotFoundError(f"no unit=* output under {out_dir}")
         versions, n_units_seen = set(), set()
-        for k in sorted(units):
+        for k in units:
             man = _read_json(os.path.join(mdir, f"unit_{k}.json"))
             if not man:
                 raise ValueError(
@@ -416,7 +455,7 @@ def read_feature_output(spark: SparkSession, out_dir: str,
         n_units = n_units_seen.pop() if len(n_units_seen) == 1 else None
         if n_units is None or set(range(n_units)) - set(units):
             raise ValueError(
-                f"incomplete output: have units {sorted(units)} of "
+                f"incomplete output: have units {units} of "
                 f"n_units={n_units}")
     return spark.read.option("basePath", out_dir).parquet(
-        os.path.join(out_dir, "unit=*"))
+        *[os.path.join(out_dir, f"unit={k}") for k in units])

@@ -52,6 +52,7 @@ projection matches them (``dropna=False`` + NaN->None normalization).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -428,6 +429,11 @@ def _duration_seconds(duration: str) -> float:
                 f"(second/minute/hour/day/week...), got {duration!r} — "
                 f"calendar units are not fixed-length")
         total += float(qty) * mult[u]
+    if not math.isfinite(total):
+        # float() parses 'inf', 'nan' and '1e400': a non-finite width would
+        # project every row to NULL instead of failing here
+        raise ValueError(f"window duration must be finite, got "
+                         f"{duration!r}")
     if total <= 0:
         raise ValueError(f"window duration must be positive, got "
                          f"{duration!r}")

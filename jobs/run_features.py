@@ -12,7 +12,12 @@ Cluster usage (design target, BASELINE.json:6):
 
 Pure Python payload — numpy/pandas/pyarrow come from the cluster runtime, so
 no wheels are shipped.  The job is resumable: re-submitting after a failure
-skips every unit with a valid manifest (plans/checkpoint.py).
+skips every unit with a valid manifest (plans/checkpoint.py).  ``--units``
+is the number of resumable units, slices ``pmod(hash(conv_id), units)`` of
+the conversations; all pending units are computed in one Spark write, so
+keep ``spark.sql.shuffle.partitions`` a multiple of it: every shuffle
+partition then holds one unit, and a write task writes one file per unit
+it holds.
 
 Sandbox smoke run (tests/test_submit.py):
 
@@ -35,7 +40,9 @@ def parse_args(argv=None):
     p.add_argument("--snapshots", default=None)
     p.add_argument("--out", required=True)
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--units", type=int, default=8)
+    p.add_argument("--units", type=int, default=8,
+                   help="resumable units (conv_id hash slices), written in "
+                        "one Spark job as unit=<i>/ dirs")
     p.add_argument("--k", type=int, default=8)
     p.add_argument("--mode", default="pca_whiten",
                    choices=["pca", "pca_whiten", "zca"])

@@ -4,9 +4,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from featureextraction_jl_spark.plans import FeatureJobConfig, run_features
 from featureextraction_jl_spark.plans.checkpoint import (
@@ -59,6 +62,103 @@ def test_resumable_equals_direct(spark, inputs, direct, tmp_path):
     np.testing.assert_allclose(v1, v2, rtol=1e-8, atol=1e-10)
     assert job["rows"] == len(k1)
     assert sorted(job["units_computed_this_run"]) == list(range(N_UNITS))
+    # every unit manifest's rows is what its unit=<i>/ dir holds
+    got = dict(read_feature_output(spark, out).groupBy("unit").count().collect())
+    for u in range(N_UNITS):
+        assert _unit_manifest(out, u)["rows"] == got.get(u, 0), u
+
+
+def _unit_manifest(out: str, u: int) -> dict:
+    with open(os.path.join(out, "_manifest", f"unit_{u}.json")) as f:
+        return json.load(f)
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn`` launches, counted under a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_write_job_whatever_n_units(spark, inputs, tmp_path):
+    """The transform stage is one Spark write for all pending units: a fresh
+    run launches the same number of jobs for 2 units as for 4."""
+    tdir, sdir = inputs
+    counts = [_spark_jobs(spark, lambda n=n: run_features_resumable(
+        spark, tdir, str(tmp_path / f"out{n}"), sdir, CFG, n_units=n))
+        for n in (2, 4)]
+    assert counts[0] == counts[1], counts
+
+
+def test_data_files_bounded_by_shuffle_partitions(spark, inputs, tmp_path):
+    """The unit hash is the conv_id exchange's own, so with the shuffle
+    partitions a multiple of n_units each write task holds one unit and
+    writes one file — not one file per (task, unit)."""
+    tdir, sdir = inputs
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out = str(tmp_path / "out")
+        job = run_features_resumable(spark, tdir, out, sdir, CFG,
+                                     n_units=N_UNITS)
+    finally:
+        spark.conf.set(key, old)
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_tasks % N_UNITS == 0
+    files = sum(_unit_manifest(out, u)["output_files"] for u in range(N_UNITS))
+    assert 0 < files <= n_tasks, files
+    assert job["rows"] > 0
+
+
+def test_empty_units_stay_readable(spark, inputs, tmp_path):
+    """A pending unit without rows still gets a unit=<i>/ carrying the
+    schema and a ``rows: 0`` manifest, and a resume skips it."""
+    tdir, sdir = inputs
+    unit = F.pmod(F.hash("conv_id"), F.lit(N_UNITS))
+    convs = [r.conv_id for r in spark.read.parquet(tdir).filter(unit == 0)
+             .select("conv_id").distinct().orderBy("conv_id").limit(2).collect()]
+    small = {}
+    for name, path in (("transcripts", tdir), ("snapshots", sdir)):
+        small[name] = str(tmp_path / name)
+        spark.read.parquet(path).filter(F.col("conv_id").isin(convs)) \
+            .write.parquet(small[name])
+    out = str(tmp_path / "out")
+    job = run_features_resumable(spark, small["transcripts"], out,
+                                 small["snapshots"], CFG, n_units=N_UNITS)
+    rows = [_unit_manifest(out, u)["rows"] for u in range(N_UNITS)]
+    assert rows[0] == job["rows"] > 0
+    assert all(rows[u] == 0 for u in range(1, N_UNITS))
+
+    empty = spark.read.parquet(os.path.join(out, "unit=1"))
+    assert empty.count() == 0 and "feature_vec" in empty.columns
+    got = read_feature_output(spark, out)
+    assert "unit" in got.columns
+    want, _ = run_features(spark.read.parquet(small["transcripts"]),
+                           spark.read.parquet(small["snapshots"]), CFG)
+    k1, v1 = _collect(got)
+    k2, v2 = _collect(want)
+    assert k1 == k2
+    np.testing.assert_allclose(v1, v2, rtol=1e-8, atol=1e-10)
+
+    job2 = run_features_resumable(spark, small["transcripts"], out,
+                                  small["snapshots"], CFG, n_units=N_UNITS)
+    assert job2["units_resumed"] == list(range(N_UNITS))
+    assert job2["units_computed_this_run"] == []
+
+    # a resume whose only pending unit is empty writes no rows at all
+    shutil.rmtree(os.path.join(out, "unit=1"))
+    job3 = run_features_resumable(spark, small["transcripts"], out,
+                                  small["snapshots"], CFG, n_units=N_UNITS)
+    assert job3["units_computed_this_run"] == [1]
+    assert job3["rows"] == job["rows"]
+    assert spark.read.parquet(os.path.join(out, "unit=1")).count() == 0
 
 
 def test_kill_then_resume(spark, inputs, direct, tmp_path):
@@ -104,8 +204,8 @@ def test_manifest_invalidation_keys():
 
 def test_shrinking_n_units_removes_stale_outputs(spark, inputs, direct, tmp_path):
     """Re-running with a smaller n_units must delete the old split's
-    unit=k (k >= new n_units) dirs — read_feature_output's unit=* glob
-    would otherwise union the old and new splits, duplicating rows while
+    unit=k (k >= new n_units) dirs — reading every unit dir would
+    otherwise union the old and new splits, duplicating rows while
     job.json reports clean totals."""
     import shutil as _sh
 

@@ -411,6 +411,10 @@ def test_windowed_epoch_key_matches_f_window_starts(spark):
     import pytest
     with pytest.raises(ValueError, match="fixed-duration"):
         _duration_seconds("1 month")
+    # non-finite widths would project every row to NULL
+    for dur in ("inf seconds", "nan seconds", "1e400 seconds"):
+        with pytest.raises(ValueError, match="finite"):
+            _duration_seconds(dur)
 
 
 def test_windowed_null_element_vec_projects_null_not_nan(spark):
