@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -151,23 +151,33 @@ def minhash_signature(df: DataFrame, text_col: str, id_col: str,
     Carter–Wegman permutation family h_i(x) = (a_i*x + b_i) mod p with
     p = 2^31 - 1; operands reduced below 2^31 first so the int64 product
     never overflows.  Seeds fixed => deterministic signatures.
-    All array higher-order functions — no Python worker.
+    Built-in expressions only — no Python worker, no lambda.
 
     ``portable=True`` swaps xxhash64 gram hashing for the md5-based 60-bit
     hash so any ANSI engine reproduces the signature (DuckDB oracle); the
     scale path stays on xxhash64.
+
+    The gram hashes equal :func:`shingle_hashes`' (NULL, empty and
+    shorter-than-k text keep their single ``[seed]``/truncated gram).
+    Duplicate grams are not removed: a duplicate cannot change a ``min``.
+    Pinned against the array-lambda formulation by tests/test_dedup.py.
     """
     p = MINHASH_P
     coefs = carter_wegman_coefs(num_hashes)
 
-    # Explode shingles once, then 32 partial+final min-aggregates over the
-    # hashed long column — the shingle hash is computed exactly once per
-    # gram (array-lambda variants re-evaluate the whole shingle array per
-    # permutation after Catalyst's project collapse: 32x the work).
-    mk = portable_shingle_hashes if portable else shingle_hashes
-    grams = df.select(
-        id_col, F.explode(F.array_distinct(mk(text_col, k))).alias("__h"))
-    hh = F.abs(F.col("__h")) % F.lit(p)
+    # lower(text) once per doc, BELOW the explode: Catalyst does not
+    # collapse a projection into the per-gram expression across a Generate.
+    # Then one row per gram position, hashed and reduced below p in one
+    # codegen'd projection (no lambda: higher-order functions run
+    # interpreted), and 32 partial+final min-aggregates over that column.
+    lowered = df.select(id_col, F.lower(F.col(text_col)).alias("__t"))
+    n = F.greatest(F.length("__t") - F.lit(k - 1), F.lit(1))
+    pos = lowered.select(id_col, "__t",
+                         F.explode(F.sequence(F.lit(1), n)).alias("__i"))
+    gram = F.col("__t").substr(F.col("__i"), F.lit(k))
+    h = portable_gram_hash(gram) if portable else F.xxhash64(gram)
+    grams = pos.select(id_col, (F.abs(h) % F.lit(p)).alias("__hh"))
+    hh = F.col("__hh")
     aggs = [
         F.min((hh * F.lit(a) + F.lit(b)) % F.lit(p)).alias(f"mh_{i}")
         for i, (a, b) in enumerate(coefs)
@@ -616,12 +626,13 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     cluster path, surviving executor loss mid-iteration), else
     ``localCheckpoint()`` (executor-loss-fragile but dir-free; fine in
     local mode).  Identical outputs under both are test-pinned
-    (tests/test_dedup.py).  A driver-side
-    O(1) decimal-sum convergence test stops early: labels only ever
-    decrease, so an unchanged sum <=> fixed point.  If the sum never
-    stabilizes within ``max_iter`` rounds the labels may still be
-    mid-propagation, so the loop raises rather than silently returning a
-    wrong (under-merged) clustering.
+    (tests/test_dedup.py).  A decimal-sum convergence test stops early:
+    labels only ever decrease, so an unchanged sum <=> fixed point.  The
+    sum (with the row count and the non-numeric-label count) is an
+    ``Observation`` on the round's eager checkpoint, so a round is ONE
+    Spark action.  If the sum never stabilizes within ``max_iter`` rounds
+    the labels may still be mid-propagation, so the loop raises rather
+    than silently returning a wrong (under-merged) clustering.
 
     ``edges`` is eagerly checkpointed ONCE at entry: each round's
     ``edges.join(labels)`` otherwise re-executes the whole upstream
@@ -661,20 +672,21 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
         # resolving one hop through the mapping halves chain lengths
         lmap = labels.select(F.col("u").alias("__lu"),
                              F.col("label").alias("__ll"))
-        labels = _chk(
-            labels.join(lmap, labels["label"] == lmap["__lu"], "left")
-                  .select(F.col("u"),
-                          F.coalesce("__ll", "label").alias("label")))
+        labels = labels.join(lmap, labels["label"] == lmap["__lu"], "left") \
+                       .select(F.col("u"),
+                               F.coalesce("__ll", "label").alias("label"))
         # try_cast, not cast: under ANSI (Spark 4 default) a plain cast of
         # a non-numeric label THROWS mid-probe; try_cast yields NULL so we
         # can diagnose it as `bad` and raise our own actionable error
         lnum = F.col("label").try_cast("decimal(38,0)")
-        probe = labels.agg(
+        obs = Observation()
+        labels = _chk(labels.observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(F.col("label").isNotNull() & lnum.isNull(),
                            1)).alias("bad"),
-            F.sum(lnum).alias("s")
-        ).collect()[0]
+            F.sum(lnum).alias("s")))
+        probe = obs.get
         if probe["n"] == 0:
             # 0-row id set (empty corpus upstream): trivially converged —
             # without this, the NULL sum never equals itself and the loop

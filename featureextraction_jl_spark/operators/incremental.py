@@ -63,7 +63,9 @@ is an idempotent no-op (config hash must match, else it raises).
 
 Scale notes (100 TB corpus, 1000 executors):
  * Per-batch compute is O(batch): shingling/signatures run over the new
-   docs only.  The digest anti-join and the band equi-join scan the index
+   docs only, spread over at least ``defaultParallelism`` tasks (a no-op
+   once the batch's exact stage already has that many partitions).  The
+   digest anti-join and the band equi-join scan the index
    side once per batch; on plain parquet (this sandbox) that is one
    index-side exchange per join.  On a real cluster write the index
    through a layout bucketed by the join key ((d1, d2) and
@@ -189,11 +191,12 @@ def _read_committed(spark: SparkSession, index_dir: str, sub: str,
     """Union of the committed ``batch=<id>`` dirs, read by EXPLICIT path
     (never a partition-discovery scan of the parent): uncommitted dirs are
     excluded by construction and no partition-type inference can mangle a
-    numeric-looking batch id."""
+    numeric-looking batch id.  The stored ``schema`` is passed to the
+    reader, so building the frame runs no schema-inference job."""
     if not committed:
         return spark.createDataFrame([], schema)
     paths = [os.path.join(index_dir, sub, f"batch={b}") for b in committed]
-    return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 #: eager lineage truncation — the ONE reliable-vs-local checkpoint policy,
@@ -214,7 +217,15 @@ def _prepare(spark: SparkSession, docs: DataFrame, index_dir: str,
     — the pairs self-join, the cross-index join, the CC id set, the
     survivor semi-join, and the index writes — and without the checkpoint
     the shingle -> signature pipeline re-executes up to 3x per batch
-    (round-5 review finding)."""
+    (round-5 review finding).
+
+    The banding explodes each doc ~text-length times into gram rows, so it
+    runs on the exact stage hash-repartitioned by id to
+    ``defaultParallelism`` whenever the checkpointed exact stage has fewer
+    partitions than that (AQE coalesces a small batch to one partition,
+    which would leave the banding on one core).  The signature's
+    ``groupBy(id)`` reuses that partitioning, so the spread adds one small
+    exchange of the exact-stage rows and no other."""
     id_c, txt = cfg.id_col, cfg.text_col
     docs = exact_dedup(docs, txt, id_c)
     committed = committed_batches(index_dir)
@@ -229,7 +240,10 @@ def _prepare(spark: SparkSession, docs: DataFrame, index_dir: str,
                  .select(id_c))
         docs = docs.join(fresh, on=id_c, how="left_semi")
     docs = _chk(docs)
-    banded = _chk(minhash_bands(docs, txt, id_c, cfg.num_hashes, cfg.bands,
+    cores = spark.sparkContext.defaultParallelism
+    spread = (docs.repartition(cores, id_c)
+              if docs.rdd.getNumPartitions() < cores else docs)
+    banded = _chk(minhash_bands(spread, txt, id_c, cfg.num_hashes, cfg.bands,
                                 cfg.shingle_k))
     return docs, banded, committed
 
@@ -285,8 +299,9 @@ def dedup_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
     batch and against every committed batch in ``index_dir``.
 
     EAGER: the exact stage and banding are checkpointed, and the
-    connected-components step runs its Spark jobs (per-round convergence
-    probes), DURING this call — do not schedule around laziness; only the
+    connected-components step runs its Spark jobs (one checkpoint per
+    round, carrying its convergence probe), DURING this call — do not
+    schedule around laziness; only the
     final survivor semi-join remains lazy in the returned frame.  With no committed batches (or a missing
     index dir) this equals the plain one-shot pipeline: ``exact_dedup`` +
     ``minhash_lsh_pairs`` + ``near_dedup_survivors``.
@@ -407,7 +422,7 @@ def _commit_prepared(docs: DataFrame, banded: DataFrame, index_dir: str,
     # additive per-batch counts so readers can bound corpus bucket widths
     # without scanning the band index (see module docstring)
     bobs = Observation()
-    stats = (docs.sparkSession.read.parquet(
+    stats = (docs.sparkSession.read.schema(_BANDS_SCHEMA).parquet(
                  os.path.join(index_dir, "bands", f"batch={batch_id}"))
              .groupBy("band", "band_hash")
              .agg(F.count(F.lit(1)).alias("n"))
@@ -566,7 +581,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict[str, Any]:
     _read_committed(spark, index_dir, "bands", _BANDS_SCHEMA, committed) \
         .write.mode("overwrite").parquet(
             os.path.join(index_dir, "bands", f"batch={target}"))
-    (spark.read.parquet(os.path.join(index_dir, "bands", f"batch={target}"))
+    (spark.read.schema(_BANDS_SCHEMA)
+     .parquet(os.path.join(index_dir, "bands", f"batch={target}"))
      .groupBy("band", "band_hash")
      .agg(F.count(F.lit(1)).alias("n"))
      .write.mode("overwrite").parquet(

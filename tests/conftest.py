@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -17,6 +18,25 @@ def spark():
     s = get_spark("fe-tests", master="local[8]",
                   extra_confs={"spark.sql.shuffle.partitions": "8"})
     yield s
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)``: the number of Spark jobs ``fn()`` launches,
+    counted under a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

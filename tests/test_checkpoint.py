@@ -5,7 +5,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 
 import numpy as np
 import pytest
@@ -73,24 +72,11 @@ def _unit_manifest(out: str, u: int) -> dict:
         return json.load(f)
 
 
-def _spark_jobs(spark, fn) -> int:
-    """Number of Spark jobs ``fn`` launches, counted under a job group."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_one_write_job_whatever_n_units(spark, inputs, tmp_path):
+def test_one_write_job_whatever_n_units(spark, spark_jobs, inputs, tmp_path):
     """The transform stage is one Spark write for all pending units: a fresh
     run launches the same number of jobs for 2 units as for 4."""
     tdir, sdir = inputs
-    counts = [_spark_jobs(spark, lambda n=n: run_features_resumable(
+    counts = [spark_jobs(lambda n=n: run_features_resumable(
         spark, tdir, str(tmp_path / f"out{n}"), sdir, CFG, n_units=n))
         for n in (2, 4)]
     assert counts[0] == counts[1], counts

@@ -19,10 +19,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from featureextraction_jl_spark.operators.dedup import (
+    MINHASH_P,
+    carter_wegman_coefs,
     embedding_near_dup_pairs,
+    minhash_bands,
     minhash_lsh_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
+    portable_gram_hash,
     simhash,
 )
 
@@ -303,6 +307,61 @@ def test_minhash_signature_deterministic(spark):
     assert len(s1[0]["signature"]) == 8
 
 
+def _lambda_minhash_bands(df, num_hashes=32, bands=8, k=5, portable=False):
+    """Reference banding: the array-lambda shingle formulation
+    (``transform(sequence(1, n), i -> hash(substr(lower(text), i, k)))``,
+    ``array_distinct``, explode) followed by the same Carter–Wegman mins
+    and band keys.  Committed indexes hold band hashes made this way."""
+    p = MINHASH_P
+    t = F.lower(F.col("text"))
+    n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
+    gram_hash = portable_gram_hash if portable else F.xxhash64
+    shingles = F.transform(F.sequence(F.lit(1), n),
+                           lambda i: gram_hash(t.substr(i, F.lit(k))))
+    grams = df.select("doc_id",
+                      F.explode(F.array_distinct(shingles)).alias("__h"))
+    hh = F.abs(F.col("__h")) % F.lit(p)
+    sig = grams.groupBy("doc_id").agg(
+        *[F.min((hh * F.lit(a) + F.lit(b)) % F.lit(p)).alias(f"mh_{i}")
+          for i, (a, b) in enumerate(carter_wegman_coefs(num_hashes))])
+    sig = sig.select("doc_id", F.array(*[f"mh_{i}" for i in range(num_hashes)])
+                     .alias("signature"))
+    r = num_hashes // bands
+    if portable:
+        band_key = lambda b: F.concat_ws(
+            ",", F.slice("signature", b * r + 1, r).cast("array<string>"))
+    else:
+        band_key = lambda b: F.xxhash64(
+            F.slice("signature", b * r + 1, r).cast("string"))
+    return sig.select("doc_id", F.posexplode(F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)), band_key))
+        .alias("band", "band_hash"))
+
+
+def test_minhash_bands_match_array_lambda_reference(spark):
+    """The exploded-position gram pipeline gives band hashes identical to
+    the array-lambda formulation, on both hash paths, over the edge texts:
+    NULL, '', shorter than k, mixed case, 'İ' (whose lowercase is two
+    chars), astral-plane characters and repeated grams, on a
+    multi-partition input."""
+    import random
+
+    rnd = random.Random(7)
+    words = ["alpha", "Beta", "GAMMA", "delta", "ünï", "İstanbul", "😀", "𝔘𝔫"]
+    texts = [None, "", "abc", "ABCD", "MiXeD CaSe TeXt here", "İ", "İİİİİİ",
+             "😀🎉 party 🎉😀 𝔘𝔫𝔦𝔠𝔬𝔡𝔢", "aaaaaaaaaaaa", "abababababab"]
+    texts += [" ".join(rnd.choices(words, k=rnd.randrange(1, 12)))
+              for _ in range(40)]
+    d = spark.createDataFrame(list(enumerate(texts)),
+                              "doc_id long, text string").repartition(5)
+    for portable in (False, True):
+        got = sorted(minhash_bands(d, "text", "doc_id", portable=portable)
+                     .collect())
+        want = sorted(_lambda_minhash_bands(d, portable=portable).collect())
+        assert len(got) == 8 * len(texts)
+        assert got == want, portable
+
+
 # ---------------------------------------------------------------------------
 # Connected components / near-dedup survivors
 # ---------------------------------------------------------------------------
@@ -547,6 +606,48 @@ def test_connected_components_raises_when_unconverged(spark):
     ids = spark.createDataFrame([(i,) for i in range(9)], "doc_id long")
     with pytest.raises(RuntimeError, match="fixed point"):
         connected_components(pairs, ids, "doc_id", max_iter=1)
+
+
+def _cc_rounds(edges: list[tuple[int, int]], ids: list[int]) -> int:
+    """Rounds connected_components runs: min-label propagation plus one
+    pointer-doubling hop per round, until the label sum repeats."""
+    label = {u: u for u in ids}
+    prev, rounds = None, 0
+    while True:
+        rounds += 1
+        new = dict(label)
+        for a, b in edges:
+            new[a] = min(new[a], label[b])
+            new[b] = min(new[b], label[a])
+        label = {u: new.get(lab, lab) for u, lab in new.items()}
+        if sum(label.values()) == prev:
+            return rounds
+        prev = sum(label.values())
+
+
+def test_connected_components_one_action_per_round(spark, spark_jobs):
+    """The convergence probe rides each round's eager checkpoint as an
+    Observation: with AQE off (so an action is one job) a chain costs the
+    two entry checkpoints plus ONE job per round, not two."""
+    from featureextraction_jl_spark.operators.dedup import connected_components
+
+    n = 33
+    edges = [(i, i + 1) for i in range(n - 1)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    rounds = _cc_rounds(edges, list(range(n)))
+    assert rounds > 2
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out = []
+        jobs = spark_jobs(lambda: out.append(
+            connected_components(pairs, ids, "doc_id")))
+    finally:
+        spark.conf.set(key, old)
+    assert jobs == 2 + rounds, (jobs, rounds)
+    assert {r["cluster_id"] for r in out[0].collect()} == {0}
 
 
 def test_simhash_null_text_and_duplicate_ids_keep_row_semantics(spark):

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from featureextraction_jl_spark.operators.dedup import (
     exact_dedup,
+    minhash_bands,
     minhash_lsh_pairs,
     near_dedup_survivors,
 )
@@ -685,3 +686,74 @@ def test_recommit_with_different_text_col_raises(spark, tmp_path):
                                    text_col="body")
     with pytest.raises(ValueError, match="config_hash"):
         commit_batch(docs, idx, "b1", other)
+
+
+def _prepared_plans(spark, docs, idx, monkeypatch):
+    """``_prepare``'s outputs plus the executed plans of the two frames it
+    checkpoints (exact stage, banding)."""
+    from featureextraction_jl_spark.operators import incremental as mod
+
+    plans = []
+
+    def chk(df):
+        out = mod.eager_checkpoint(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(mod, "_chk", chk)
+    return mod._prepare(spark, docs, idx, CFG), plans
+
+
+def test_banding_spread_over_default_parallelism(spark, tmp_path,
+                                                 monkeypatch):
+    """A one-file batch's exact stage is one partition; its banding runs
+    hash-repartitioned by id over defaultParallelism tasks.  An exact stage
+    that already has that many partitions is banded without a repartition
+    Exchange."""
+    cores = spark.sparkContext.defaultParallelism
+    rows = [(i, FAM_A * (2 + i % 3) if i % 4 == 0 else _unique_text(i))
+            for i in range(40)]
+    src = str(tmp_path / "batch")
+    _docs(spark, rows).coalesce(1).write.parquet(src)
+    (docs, banded, _), plans = _prepared_plans(
+        spark, spark.read.parquet(src), str(tmp_path / "idx1"), monkeypatch)
+    assert docs.rdd.getNumPartitions() < cores
+    assert banded.rdd.getNumPartitions() == cores
+    assert "REPARTITION_BY_NUM" in plans[1]
+    # bands equal the unspread banding's
+    plain = minhash_bands(docs, "text", "doc_id", CFG.num_hashes, CFG.bands,
+                          CFG.shingle_k)
+    assert sorted(banded.collect()) == sorted(plain.collect())
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        wide = _docs(spark, rows).repartition(cores)
+        (docs, banded, _), plans = _prepared_plans(
+            spark, wide, str(tmp_path / "idx2"), monkeypatch)
+    finally:
+        spark.conf.set(key, old)
+    assert docs.rdd.getNumPartitions() >= cores
+    assert "REPARTITION_BY_NUM" not in plans[1]
+
+
+def test_read_committed_runs_no_job_and_keeps_stored_schema(
+        spark, spark_jobs, tmp_path):
+    """Index reads pass the stored schema: building the frame launches no
+    schema-inference job, and the frame has exactly that schema."""
+    from featureextraction_jl_spark.operators import incremental as mod
+
+    idx = str(tmp_path / "idx")
+    dedup_and_commit(spark, _docs(spark, [(0, FAM_A * 2),
+                                          (1, _unique_text(1))]),
+                     idx, "b1", CFG)
+    committed = committed_batches(idx)
+    for sub, schema in (("digests", mod._DIGESTS_SCHEMA),
+                        ("bands", mod._BANDS_SCHEMA),
+                        ("band_stats", mod._STATS_SCHEMA)):
+        out = []
+        assert spark_jobs(lambda: out.append(mod._read_committed(
+            spark, idx, sub, schema, committed))) == 0, sub
+        assert out[0].schema == spark.createDataFrame([], schema).schema
+        assert out[0].count() > 0
