@@ -12,8 +12,6 @@ from featureextraction_jl_spark.functions.moments import (  # noqa: F401
     merge_moments,
     compute_moments,
     compute_moments_bucketed,
-    compute_moments_expr,
-    compute_moments_tree,
     compute_grouped_moments,
 )
 from featureextraction_jl_spark.functions.pca import (  # noqa: F401

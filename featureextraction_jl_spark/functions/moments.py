@@ -11,25 +11,25 @@ is associative and commutative up to float round-off — this exactness under
 arbitrary splits is what makes skew salting (plans/salting.py) and
 treeAggregate partials correct.
 
-Distributed strategies, all Arrow-vectorized (no per-row Python):
+Distributed accumulation, Arrow-vectorized (no per-row Python):
 
 * :func:`compute_moments` — the mapInArrow worker Chan-merges every Arrow
   batch of its partition in-worker and emits ONE partial row per PARTITION
-  (1 + p + p*p doubles); with ``merge="auto"`` those partials are collected
-  and Chan-merged on the driver when the partition count is small, and
-  reduced through :func:`compute_moments_bucketed` above
-  ``_BUCKETED_THRESHOLD`` partitions so driver traffic is O(buckets * p^2)
-  — constant in input size — at any scale (VERDICT r03 #1: the per-batch
-  collect was ~10^8 rows ≈ 500 GB at the 10^12-turn design point; the
-  per-partition worker merge plus the bucketed reduce removes both the
-  batch and the partition factor).
+  (1 + p + p*p doubles); those partials are collected and Chan-merged on
+  the driver when the partition count is small, and reduced through
+  :func:`compute_moments_bucketed` above ``_BUCKETED_THRESHOLD`` partitions
+  so driver traffic is O(buckets * p^2) — constant in input size — at any
+  scale (VERDICT r03 #1: the per-batch collect was ~10^8 rows ≈ 500 GB at
+  the 10^12-turn design point; the per-partition worker merge plus the
+  bucketed reduce removes both the batch and the partition factor).
 * :func:`compute_moments_bucketed` — two-level DataFrame reduction: partials
   -> groupBy(partition_id % buckets) applyInPandas Chan-merge on executors
   -> collect <= buckets rows.  One tiny shuffle of O(partitions * p^2)
-  bytes, never row data.
-* :func:`compute_moments_tree` — same per-partition partials, reduced with
-  ``RDD.treeAggregate(depth=2)`` so the merge itself happens on executors
-  ("treeAggregate-style partial moment matrices", BASELINE.json:6).
+  bytes, never row data: the executor-side, treeAggregate-style reduce.
+
+No JVM-expression form: raw-sum aggregate expressions lose the Chan
+update's cancellation protection and measured slower than the Arrow
+partials (25.8 s vs 19.4 s at local[8], ``BENCH/moments_ab.log``).
 
 Grouped/windowed variant: :func:`compute_grouped_moments` emits one moment
 row per group key via ``applyInPandas`` (feeds windowed PCA features).
@@ -38,7 +38,6 @@ row per group key via ``applyInPandas`` (feeds windowed PCA features).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -114,8 +113,8 @@ def _batch_to_matrix(col) -> "np.ndarray | None":
     (~5x faster than np.stack over per-row object arrays, measured
     in-sandbox).  None when no valid rows remain.
 
-    Null semantics (shared with compute_moments_expr and the scalar-column
-    path): rows that are NULL or contain a null OR NaN element are DROPPED
+    Null semantics (shared with the scalar-column path): rows that are NULL
+    or contain a null OR NaN element are DROPPED
     before accumulation.  Element nulls are invisible to the list-level
     ``null_count`` and np.asarray would render them as NaN, silently
     poisoning every downstream moment — they must be masked via the child
@@ -147,14 +146,13 @@ def _batch_to_matrix(col) -> "np.ndarray | None":
         raise ValueError(
             f"ragged vector batch: lengths {sorted(set(lens.tolist()))[:5]} "
             "— moments require fixed-dimension vectors (filter or pad "
-            "upstream; compute_moments_expr with explicit p drops "
-            "wrong-length rows instead)")
+            "upstream)")
     m = np.asarray(flat, dtype=np.float64).reshape(len(col), int(lens[0]))
     # genuine NaN VALUES (Arrow-valid, not null) poison moments exactly like
     # masked nulls would — drop those rows too, so every moments path
-    # (Arrow, expr, grouped/salted/streaming pandas kernels, where NaN and
-    # null are indistinguishable anyway) shares ONE contract: rows with a
-    # null OR NaN element never contribute.
+    # (Arrow, grouped/salted/streaming pandas kernels, where NaN and null
+    # are indistinguishable anyway) shares ONE contract: rows with a null
+    # OR NaN element never contribute.
     m = m[~np.isnan(m).any(axis=1)]
     return m if len(m) else None
 
@@ -259,42 +257,32 @@ def merge_moment_rows(rows) -> Moments:
     return acc
 
 
-#: partition count above which compute_moments(merge="auto") inserts the
-#: executor-side bucketed reduce instead of collecting per-partition partials
-#: straight to the driver.  Below it the collect is < ~2048 * 5 KB ≈ 10 MB
-#: (p=25) and the extra shuffle stage would only add latency; above it the
-#: bucketed path keeps driver traffic at O(buckets * p^2) no matter how many
+#: partition count above which compute_moments inserts the executor-side
+#: bucketed reduce instead of collecting per-partition partials straight to
+#: the driver.  Below it the collect is < ~2048 * 5 KB ≈ 10 MB (p=25) and
+#: the extra shuffle stage would only add latency; above it the bucketed
+#: path keeps driver traffic at O(buckets * p^2) no matter how many
 #: partitions the 10^12-turn scan has.
 _BUCKETED_THRESHOLD = 2048
 
 
-def compute_moments(df: DataFrame, vec_col, merge: str = "auto") -> Moments:
+def compute_moments(df: DataFrame, vec_col) -> Moments:
     """Scale-adaptive moment accumulation: Arrow partials -> Chan-merge.
 
     The mapInArrow worker already merges its partition's batches in-worker,
-    so the partial frame has ONE row per partition.  ``merge`` picks the
-    reduce strategy for those rows:
-
-    * ``"auto"`` — driver collect+merge when the source has <=
-      ``_BUCKETED_THRESHOLD`` partitions (cheapest: no extra stage),
-      otherwise the executor-side bucketed reduce.  The probe is
-      ``df.rdd.getNumPartitions()`` — plan analysis only, no job.
-    * ``"driver"`` — always collect the per-partition rows (O(partitions *
-      p^2) driver bytes, never row data).
-    * ``"bucketed"`` — always :func:`compute_moments_bucketed` (O(buckets *
-      p^2) driver bytes — the design-scale path).
+    so the partial frame has ONE row per partition.  With at most
+    ``_BUCKETED_THRESHOLD`` source partitions those rows are collected and
+    merged on the driver (O(partitions * p^2) driver bytes, no extra
+    stage); above it they go through the executor-side
+    :func:`compute_moments_bucketed` (O(buckets * p^2) driver bytes — the
+    design-scale path).  The probe is ``df.rdd.getNumPartitions()`` — plan
+    analysis only, no job.
 
     ``vec_col``: an array<double> column name, or a list of scalar double
     column names (faster — fully columnar Arrow transfer).
     """
-    if merge == "auto":
-        merge = ("bucketed"
-                 if df.rdd.getNumPartitions() > _BUCKETED_THRESHOLD
-                 else "driver")
-    if merge == "bucketed":
+    if df.rdd.getNumPartitions() > _BUCKETED_THRESHOLD:
         return compute_moments_bucketed(df, vec_col)
-    if merge != "driver":
-        raise ValueError(f"merge must be auto|driver|bucketed, got {merge!r}")
     return merge_moment_rows(_partials_df(df, vec_col).collect())
 
 
@@ -323,98 +311,6 @@ def compute_moments_bucketed(df: DataFrame, vec_col,
     return merge_moment_rows(merged.collect())
 
 
-def compute_moments_expr(df: DataFrame, vec_col, p: int | None = None) -> Moments:
-    """Whole-stage-codegen strategy: raw sums as JVM aggregate expressions.
-
-    No Python boundary at all — ``count``, ``sum(x_i)`` and the upper
-    triangle of ``sum(x_i * x_j)`` run inside Catalyst HashAggregate with
-    map-side partials (1 + p + p(p+1)/2 agg buffers), then the driver
-    recovers the centered moments:
-
-        mean = s / n
-        M2   = Q - n * outer(mean, mean)
-
-    Trade-off vs :func:`compute_moments` (Arrow partials + Chan merge):
-    raw sums lose the Chan update's cancellation protection, so this path
-    is for well-scaled features (the flagship's log1p-scaled raw_vec);
-    exactness vs the NumPy oracle at the 1e-8 gate is pinned in
-    tests/test_kernels.py.  Null semantics match the Arrow paths: rows with
-    a null vector, a null element, or a vector of the wrong length are
-    dropped before accumulation (ADVICE r03: without the element/size guard
-    a null element made count() include a row whose sum buffers skipped it,
-    silently skewing mean/M2).
-
-    ``vec_col``: array<double> column name or a list of scalar double
-    column names.  For the array form, prefer passing ``p`` explicitly: the
-    dimension probe is an extra ``limit(1)`` Spark job over the upstream
-    plan, and on ragged input it adopts whatever length the first-seen row
-    has (rows of any other length are then filtered out, consistently but
-    perhaps not the p you meant).
-    """
-    if isinstance(vec_col, (list, tuple)):
-        if not vec_col:
-            raise ValueError(
-                "compute_moments_expr: the scalar-column form needs a "
-                "non-empty list of column names")
-        cols = [F.col(c).cast("double") for c in vec_col]
-        src = df.select(*[c.alias(f"_x{i}") for i, c in enumerate(cols)])
-        cond = None
-        for i in range(len(cols)):
-            c = F.col(f"_x{i}").isNotNull() & ~F.isnan(f"_x{i}")
-            cond = c if cond is None else (cond & c)
-        src = src.filter(cond)
-        xs = [F.col(f"_x{i}") for i in range(len(cols))]
-    else:
-        if p is None:
-            probe = df.select(F.size(F.col(vec_col)).alias("p")) \
-                      .filter("p >= 0").limit(1).collect()
-            if not probe:
-                return Moments(0, np.zeros(0), np.zeros((0, 0)))
-            p = int(probe[0]["p"])
-        src = df.select(F.col(vec_col).alias("_v")).filter(
-            F.col("_v").isNotNull()
-            & (F.size("_v") == F.lit(p))
-            & ~F.exists("_v", lambda x: x.isNull() | F.isnan(x)))
-        xs = [F.col("_v")[i] for i in range(p)]
-
-    p = len(xs)
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    aggs += [F.sum(xs[i]).alias(f"_s{i}") for i in range(p)]
-    aggs += [F.sum(xs[i] * xs[j]).alias(f"_q{i}_{j}")
-             for i in range(p) for j in range(i, p)]
-    row = src.agg(*aggs).collect()[0]
-
-    n = int(row["_n"])
-    if n == 0:
-        return Moments(0, np.zeros(p), np.zeros((p, p)))
-    s = np.array([row[f"_s{i}"] for i in range(p)], dtype=np.float64)
-    q = np.zeros((p, p))
-    for i in range(p):
-        for j in range(i, p):
-            q[i, j] = q[j, i] = row[f"_q{i}_{j}"]
-    mean = s / n
-    m2 = q - n * np.outer(mean, mean)
-    return Moments(n, mean, m2)
-
-
-def compute_moments_tree(df: DataFrame, vec_col: str, depth: int = 2) -> Moments:
-    """treeAggregate strategy: executor-side pairwise merge of partials.
-
-    The leaves are already per-partition partials (vectorized, merged
-    in-worker); the tree only merges tiny (n, mean, m2) rows, so seqOp cost
-    is O(p^2) on one row per partition — no per-row loop over data rows.
-    Kept alongside :func:`compute_moments_bucketed` as the RDD-API twin;
-    the bucketed DataFrame reduce is preferred (Arrow transfer end-to-end).
-    """
-    zero = Moments(0, np.zeros(0), np.zeros((0, 0)))
-    return _partials_df(df, vec_col).rdd.treeAggregate(
-        zero,
-        lambda acc, row: merge_moments(acc, _row_to_moments(row)),
-        merge_moments,
-        depth=depth,
-    )
-
-
 def pandas_clean_stack(vals: "pd.Series") -> "np.ndarray | None":
     """pandas twin of ``_batch_to_matrix`` for applyInPandas group kernels:
     drop NULL rows AND rows containing a null element, raise on ragged
@@ -425,7 +321,7 @@ def pandas_clean_stack(vals: "pd.Series") -> "np.ndarray | None":
     eigh LinAlgError or a NaN model in the windowed-PCA fit) — the exact
     hazard _batch_to_matrix documents and masks on the global path.
     Genuine NaN VALUES are dropped under the same rule: every moments path
-    (Arrow, expr, pandas kernels) shares the contract "rows with a null or
+    (Arrow, pandas kernels) shares the contract "rows with a null or
     NaN element never contribute", so the pinned cross-path equivalences
     hold on NaN-bearing data too.  Both group kernels (grouped + salted
     partial) share this helper, so their equivalence is by construction.

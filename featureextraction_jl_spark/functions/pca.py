@@ -143,31 +143,6 @@ def project_udf(model: PCAModel, col: str | Column) -> Column:
     return _project(col)
 
 
-def project_expr(model: PCAModel, cols: list[str]) -> Column:
-    """JVM-codegen projection over p scalar double columns — no Python.
-
-    Keeps the whole plan Python-worker-free, which matters when a cluster
-    forbids Python workers or when fusing with other JVM stages.  NOT the
-    speed default: A/B at p=25, k=8 (5 reps, 1.26M rows, local[32]) measured
-    median 7.7s vs 4.6s for the Arrow-batched :func:`project_udf` — one BLAS
-    GEMM per Arrow batch beats the p*k multiply-add expression tree.
-
-    Precomputes the constant offset  c = −mu·W  so each output component is
-    ``c_j + Σ_i x_i W_ij`` — one literal and p multiply-adds.
-    """
-    w = model.projection                     # (p, k)
-    offset = -(model.mu @ w)                 # (k,)
-    outs = []
-    for j in range(w.shape[1]):
-        expr = F.lit(float(offset[j]))
-        for i, c in enumerate(cols):
-            wij = float(w[i, j])
-            if wij != 0.0:
-                expr = expr + F.col(c) * F.lit(wij)
-        outs.append(expr)
-    return F.array(*outs)
-
-
 def inverse_udf(model: PCAModel, col: str | Column) -> Column:
     """Reconstruction X_hat = Y W^T + mu (op A8; exact when k == p, mode=pca)."""
     mu, w = model.mu, model.projection

@@ -5,18 +5,14 @@ For each left row (key, ts) attach the latest right row with
 or the earliest with ``right.ts >= left.ts`` (forward), or the closer of the
 two (nearest), optionally bounded by a tolerance.
 
-Spark has no built-in batch as-of primitive, so two implementations:
-
-* **union trick** (default, :func:`asof_join`): tag the sides, ``unionByName``,
-  one Window ``last(right_col, ignorenulls=True)`` sweep ordered by
-  ``(ts, side)``, filter back to left rows.  Exactly ONE shuffle on the key,
-  sort-merge friendly, JVM-only (no Python worker), AQE-skew-splittable.
-  This is the scale path: at 10^12 turns the whole join is one Exchange +
-  one Sort per side.
-* **bucketed pandas merge** (:func:`asof_join_pandas`): co-group both sides
-  by key and run ``pandas.merge_asof`` per group via ``applyInPandas``.
-  Used as a cross-check and when per-key state must sit in one frame.
-  Memory is O(key group), so mega-keys should not take this path.
+Spark has no built-in batch as-of primitive, so :func:`asof_join` uses the
+union trick: tag the sides, ``unionByName``, one Window
+``last(right_col, ignorenulls=True)`` sweep ordered by ``(ts, side)``,
+filter back to left rows.  Exactly ONE shuffle on the key, sort-merge
+friendly, JVM-only (no Python worker), AQE-skew-splittable.  This is the
+scale path: at 10^12 turns the whole join is one Exchange + one Sort per
+side.  The cogrouped ``pandas.merge_asof`` cross-check it is tested
+against lives in ``tests/oracle.py``.
 
 Tie-break semantics (pinned by tests): if several right rows share one
 ``ts``, the last one under ``(ts, *right_order)`` wins — pass
@@ -26,8 +22,6 @@ Tie-break semantics (pinned by tests): if several right rows share one
 from __future__ import annotations
 
 from typing import Sequence
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -76,8 +70,8 @@ def _union_sweep(left: DataFrame, right: DataFrame, on: Sequence[str],
     # LAST — which parked NULL-ts left rows after every right row and
     # attached the EARLIEST right payload to them in the forward/nearest
     # sweeps (round-5 review, confirmed live): a temporally untraceable,
-    # leakage-shaped match the backward path and the pandas twin both
-    # refuse.
+    # leakage-shaped match the backward path and the pandas oracle
+    # (tests/oracle.py) both refuse.
     ts_key = (F.col(left_ts).desc_nulls_first() if descending
               else F.col(left_ts).asc_nulls_first())
     # ``left_order`` columns slot BETWEEN ts and the side tag so that the
@@ -186,76 +180,3 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str] | str,
         out = out.drop(_MATCH_TS)
     return out
 
-
-def asof_join_pandas(left: DataFrame, right: DataFrame, on: str,
-                     left_ts: str = "ts", right_ts: str = "ts",
-                     direction: str = "backward",
-                     tolerance_seconds: float | None = None) -> DataFrame:
-    """Cogrouped ``pandas.merge_asof`` cross-check implementation (C1b).
-
-    Both sides shuffle once on the key; each key's rows land in one pandas
-    frame (cogroup), merged with the library asof.  O(key group) memory.
-    """
-    right_cols = [c for c in right.columns if c != on and c != right_ts]
-    # Mirror asof_join's plan-time collision check (round-5 review): without
-    # it a duplicate payload name builds a schema with two same-named fields
-    # and dies mid-job inside the Python worker with an opaque
-    # RESULT_COLUMN_NAMES_MISMATCH — a cross-check that crashes differently
-    # from the path it checks.
-    overlap = set(right_cols) & set(left.columns)
-    if overlap:
-        raise ValueError(
-            f"right payload columns collide with left: {sorted(overlap)}")
-    fields = []
-    for c in left.schema.fields:
-        fields.append(f"{c.name} {c.dataType.simpleString()}")
-    rtypes = dict((f.name, f.dataType.simpleString()) for f in right.schema.fields)
-    for c in right_cols:
-        fields.append(f"{c} {rtypes[c]}")
-    schema = ", ".join(fields)
-    # `is not None`, not falsy: tolerance_seconds=0.0 means exact-ts-only
-    # matches (the production path's semantics at asof_join), not unbounded
-    tol = (pd.Timedelta(seconds=tolerance_seconds)
-           if tolerance_seconds is not None else None)
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=list(lpdf.columns) + right_cols)
-        # Null-ts handling mirrors the production sweep (_union_sweep):
-        # right rows with NULL ts can never be an as-of match -> dropped;
-        # left rows with NULL ts pass through unmatched.  Without this,
-        # pd.merge_asof raises ValueError("Merge keys contain null values")
-        # on a single NaT on EITHER side, killing the task — a cross-check
-        # that dies on inputs the primary path tolerates checks nothing.
-        null_left = lpdf[lpdf[left_ts].isna()]
-        lpdf = lpdf[lpdf[left_ts].notna()]
-        rpdf = rpdf[rpdf[right_ts].notna()]
-        parts = []
-        if len(null_left):
-            nl = null_left.copy()
-            for c in right_cols:
-                nl[c] = None
-            parts.append(nl)
-        if len(lpdf):
-            lo = lpdf.sort_values(left_ts, kind="stable")
-            if len(rpdf) == 0:
-                out = lo.copy()
-                for c in right_cols:
-                    out[c] = None
-                parts.append(out)
-            else:
-                ro = (rpdf.sort_values(right_ts, kind="stable")
-                      [[right_ts] + right_cols])
-                merged = pd.merge_asof(lo, ro, left_on=left_ts,
-                                       right_on=right_ts,
-                                       direction=direction, tolerance=tol,
-                                       suffixes=("", "__r"))
-                drop = [c for c in (f"{right_ts}__r", right_ts)
-                        if c in merged.columns and c not in lpdf.columns]
-                parts.append(merged.drop(columns=drop))
-        # parts is never empty here: the len(lpdf)==0 early return above
-        # guarantees at least one of null_left / filtered lpdf is non-empty
-        return parts[0] if len(parts) == 1 else pd.concat(parts,
-                                                          ignore_index=True)
-
-    return left.groupBy(on).cogroup(right.groupBy(on)).applyInPandas(merge, schema)

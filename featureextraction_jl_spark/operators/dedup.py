@@ -799,9 +799,9 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
     if dim is None:
         # O(1) build-time probe, but still an extra Spark job over the
         # upstream plan — prefer passing ``dim`` when the embedding width
-        # is known (same advice as compute_moments_expr's ``p``).  Probe
-        # past NULL embeddings (a null first row is routine in scraped
-        # corpora and len(None) would fail on the driver).
+        # is known.  Probe past NULL embeddings (a null first row is
+        # routine in scraped corpora and len(None) would fail on the
+        # driver).
         first = df.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
         if first is None:
             return (df.sparkSession.createDataFrame(

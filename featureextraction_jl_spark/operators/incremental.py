@@ -56,10 +56,12 @@ Index layout (all paths under ``index_dir``)::
     manifests/<id>.json            commit marker, written LAST
 
 Crash safety: data dirs are written (mode=overwrite, so a retry clobbers a
-half-written dir) before the manifest; readers list ``manifests/`` and read
-ONLY the committed ``batch=<id>`` dirs by explicit path, so a killed commit
-is invisible and retryable.  Re-committing an already-manifested batch id
-is an idempotent no-op (config hash must match, else it raises).
+half-written dir) before the manifest, which ``manifest.write_atomic``
+fsyncs and renames into place; readers list ``manifests/*.json`` (never a
+leftover ``.json.tmp``) and read ONLY the committed ``batch=<id>`` dirs by
+explicit path, so a killed commit is invisible and retryable.
+Re-committing an already-manifested batch id is an idempotent no-op
+(config hash must match, else it raises).
 
 Scale notes (100 TB corpus, 1000 executors):
  * Per-batch compute is O(batch): shingling/signatures run over the new
@@ -94,6 +96,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import manifest
 from .dedup import (
     cap_bucket_width,
     connected_components,
@@ -160,9 +163,8 @@ def _check_index_config(index_dir: str, cfg: IncrementalDedupConfig,
     """Validate (and at first commit, persist) the banding parameters."""
     path = os.path.join(index_dir, "index.json")
     sig = cfg.index_signature()
-    if os.path.exists(path):
-        with open(path) as fh:
-            cur = json.load(fh)
+    cur = manifest.read(path)
+    if cur is not None:
         if {k: cur.get(k) for k in sig} != sig:
             raise ValueError(
                 f"incremental dedup index at {index_dir!r} was built with "
@@ -171,10 +173,7 @@ def _check_index_config(index_dir: str, cfg: IncrementalDedupConfig,
                 f"(rebuild the index or match the params)")
     elif create:
         os.makedirs(index_dir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(sig, fh, sort_keys=True)
-        os.replace(tmp, path)
+        manifest.write_atomic(path, sig)
 
 
 def committed_batches(index_dir: str) -> list[str]:
@@ -439,13 +438,8 @@ def _commit_prepared(docs: DataFrame, banded: DataFrame, index_dir: str,
         "index_signature": cfg.index_signature(),
         **(raw or {}),
     }
-    mdir = os.path.join(index_dir, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    mpath = os.path.join(mdir, f"{batch_id}.json")
-    tmp = mpath + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(man, fh, sort_keys=True, indent=1)
-    os.replace(tmp, mpath)
+    os.makedirs(os.path.join(index_dir, "manifests"), exist_ok=True)
+    manifest.write_atomic(_manifest_path(index_dir, batch_id), man)
     return man
 
 
@@ -524,7 +518,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict[str, Any]:
     Returns the target manifest (or ``{"compacted": False}`` when ≤1
     committed batch remains after cleanup — nothing to do).
     """
-    mdir = os.path.join(index_dir, "manifests")
     # finish any interrupted retirement first: every compaction manifest
     # lists its sources; a source still manifested is a leftover.  Only
     # compact-* manifests can carry sources — don't open the (possibly
@@ -596,22 +589,18 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict[str, Any]:
            "rows": int(obs.get["rows"]),
            "compacted": True,
            "config_hash": f"compact:{src_hash}"}
-    tmp = os.path.join(mdir, f"{target}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(man, fh, sort_keys=True, indent=1)
-    os.replace(tmp, os.path.join(mdir, f"{target}.json"))
+    manifest.write_atomic(_manifest_path(index_dir, target), man)
     for src in committed:
         _retire_batch(index_dir, src)
     return man
 
 
+def _manifest_path(index_dir: str, batch_id: str) -> str:
+    return os.path.join(index_dir, "manifests", f"{batch_id}.json")
+
+
 def _read_manifest(index_dir: str, batch_id: str) -> dict[str, Any] | None:
-    try:
-        with open(os.path.join(index_dir, "manifests",
-                               f"{batch_id}.json")) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return None
+    return manifest.read(_manifest_path(index_dir, batch_id))
 
 
 def _retired_config_hashes(index_dir: str) -> dict[str, Any]:
@@ -672,7 +661,7 @@ def _retire_batch(index_dir: str, batch_id: str) -> None:
     data dirs (best-effort — an orphaned unmanifested dir is harmless)."""
     import shutil
 
-    mpath = os.path.join(index_dir, "manifests", f"{batch_id}.json")
+    mpath = _manifest_path(index_dir, batch_id)
     if os.path.exists(mpath):
         os.remove(mpath)
     for sub in ("digests", "bands", "band_stats"):

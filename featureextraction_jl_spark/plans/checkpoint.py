@@ -32,7 +32,7 @@ Protocol (manifest-last, crash-safe):
    unit's rows in the same pass.  A pending unit with no rows gets a
    ``unit=<i>/`` holding an empty file that carries the schema.  Then each
    unit's bytes/files are listed and ``_manifest/unit_<i>.json`` is written
-   atomically (tmp + fsync + ``os.replace``).
+   atomically (:func:`featureextraction_jl_spark.manifest.write_atomic`).
 4. ``_manifest/job.json`` aggregates per-unit metrics (rows, bytes, seconds).
 
 Crash window: a crash between the data write and a unit's manifest write
@@ -60,6 +60,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from featureextraction_jl_spark import manifest
 from featureextraction_jl_spark.functions.pca import PCAModel, fit_pca
 from featureextraction_jl_spark.functions.moments import compute_moments
 from featureextraction_jl_spark.plans.windowed_pca import WindowedPCA
@@ -77,7 +78,7 @@ class SimulatedCrash(RuntimeError):
 
 
 # ---------------------------------------------------------------------------
-# Fingerprints and atomic manifest IO
+# Fingerprints and config hash
 # ---------------------------------------------------------------------------
 
 def iceberg_fingerprint(spark: SparkSession, *tables: str) -> str:
@@ -140,41 +141,15 @@ def input_fingerprint(*paths: str) -> str:
     return h.hexdigest()
 
 
-#: config fields that CANNOT change what a run writes — pure performance
-#: knobs.  Excluded from config_hash so toggling one between a run and its
-#: resume does not invalidate every manifest and force a full recompute of
-#: byte-identical outputs (round-5 review).
-NON_SEMANTIC_CONFIG_FIELDS = ("cache_prepared",)
-
-
 #: how a conversation is assigned its unit; part of config_hash, so output
 #: split any other way is recomputed, never mixed with this split
 UNIT_SPLIT = "pmod(hash(conv_id), n_units)"
 
 
 def config_hash(cfg: FeatureJobConfig, n_units: int) -> str:
-    semantic = {k: v for k, v in asdict(cfg).items()
-                if k not in NON_SEMANTIC_CONFIG_FIELDS}
-    payload = json.dumps({**semantic, "n_units": n_units,
+    payload = json.dumps({**asdict(cfg), "n_units": n_units,
                           "unit_split": UNIT_SPLIT}, sort_keys=True)
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
-
-
-def _write_json_atomic(path: str, obj: dict[str, Any]) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)  # atomic on POSIX: manifest appears fully or not at all
-
-
-def _read_json(path: str) -> dict[str, Any] | None:
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
 
 
 def _dir_stats(path: str) -> tuple[int, int]:
@@ -251,7 +226,7 @@ def run_features_resumable(
     model_ready = os.path.exists(
         os.path.join(model_path, "index.json") if windowed else model_path)
     fit_man_path = os.path.join(mdir, "fit.json")
-    fit_man = _read_json(fit_man_path)
+    fit_man = manifest.read(fit_man_path)
     # The artifact carries its own provenance sidecar (written atomically
     # AFTER the artifact, BEFORE fit.json): fit.json alone cannot vouch for
     # the artifact bytes — a crash between a NEWER run's model.save and its
@@ -259,7 +234,7 @@ def run_features_resumable(
     # manifest, and resuming would project every remaining unit through the
     # wrong model (windowed keys would all miss -> silent all-NULL units).
     meta_path = os.path.join(mdir, "model.meta.json")
-    model_ready = model_ready and valid(_read_json(meta_path))
+    model_ready = model_ready and valid(manifest.read(meta_path))
     if valid(fit_man) and model_ready:
         model = (WindowedPCA.load(model_path) if windowed
                  else PCAModel.load(model_path))
@@ -273,7 +248,7 @@ def run_features_resumable(
         model = fit_windowed_pca(prepared, "raw_vec", "ts",
                                  cfg.window_duration, k=cfg.k, mode=cfg.mode)
         model.save(model_path)
-        _write_json_atomic(meta_path, {
+        manifest.write_atomic(meta_path, {
             "input_fingerprint": fp, "config_hash": chash,
             "artifact": os.path.basename(model_path)})
         fit_man = {
@@ -288,14 +263,14 @@ def run_features_resumable(
             "windows_skipped": len(model.skipped),
             "wall_s": round(time.monotonic() - t0, 3),
         }
-        _write_json_atomic(fit_man_path, fit_man)
+        manifest.write_atomic(fit_man_path, fit_man)
     else:
         t0 = time.monotonic()
         prepared = build_turn_features(transcripts, snapshots, cfg)
         moments = compute_moments(prepared, "raw_vec")
         model = fit_pca(moments, k=cfg.k, mode=cfg.mode)
         model.save(model_path)
-        _write_json_atomic(meta_path, {
+        manifest.write_atomic(meta_path, {
             "input_fingerprint": fp, "config_hash": chash,
             "artifact": os.path.basename(model_path)})
         fit_man = {
@@ -310,7 +285,7 @@ def run_features_resumable(
                 round(float(r), 8) for r in model.explained_variance_ratio],
             "wall_s": round(time.monotonic() - t0, 3),
         }
-        _write_json_atomic(fit_man_path, fit_man)
+        manifest.write_atomic(fit_man_path, fit_man)
 
     # ---- transform stage: every pending unit in one write ---------------
     # Stale-unit sweep: a re-run with a smaller n_units would otherwise
@@ -340,7 +315,7 @@ def run_features_resumable(
     # silently omitted from the output while job.json reports its rows as
     # present.
     units_skipped = [u for u in range(n_units)
-                     if valid(_read_json(unit_manifest(u)))
+                     if valid(manifest.read(unit_manifest(u)))
                      and os.path.isdir(unit_dir(u))]
     pending = [u for u in range(n_units) if u not in units_skipped]
     if pending:
@@ -371,7 +346,7 @@ def run_features_resumable(
                 spark.createDataFrame([], feats.schema).write \
                     .mode("overwrite").parquet(unit_dir(u))
             n_files, n_bytes = _dir_stats(unit_dir(u))
-            _write_json_atomic(unit_manifest(u), {
+            manifest.write_atomic(unit_manifest(u), {
                 "stage": "transform",
                 "unit": u,
                 "n_units": n_units,
@@ -387,9 +362,9 @@ def run_features_resumable(
     # ---- job summary -----------------------------------------------------
     unit_mans = []
     for u in range(n_units):
-        man = _read_json(unit_manifest(u))
+        man = manifest.read(unit_manifest(u))
         if man is None:
-            # a manifest written above vanished/corrupted before aggregation
+            # a manifest written above vanished before aggregation
             raise RuntimeError(
                 f"unit manifest missing or unreadable at summary time: "
                 f"{unit_manifest(u)}")
@@ -405,7 +380,7 @@ def run_features_resumable(
         "wall_s_per_unit": {str(m["unit"]): m["wall_s"] for m in unit_mans},
         "fit": fit_man,
     }
-    _write_json_atomic(os.path.join(mdir, "job.json"), job)
+    manifest.write_atomic(os.path.join(mdir, "job.json"), job)
     return job
 
 
@@ -438,7 +413,7 @@ def read_feature_output(spark: SparkSession, out_dir: str,
         mdir = os.path.join(out_dir, MANIFEST_DIR)
         versions, n_units_seen = set(), set()
         for k in units:
-            man = _read_json(os.path.join(mdir, f"unit_{k}.json"))
+            man = manifest.read(os.path.join(mdir, f"unit_{k}.json"))
             if not man:
                 raise ValueError(
                     f"unit={k} has data but no readable manifest — "

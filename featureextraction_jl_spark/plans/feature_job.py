@@ -28,8 +28,10 @@ Measured plan decisions (local[32], 6.6M-turn fixture):
   payload.  The projection pass still carries text (byte-equal passthrough).
 * Recompute beats cache: persisting the prepared frame between the two
   passes measured 365s vs 197s recompute (text-heavy rows defeat the
-  cache; codegen fusion is lost).  ``cache_prepared`` remains for
-  compute-bound configs (wide windows, many snapshots).
+  cache; codegen fusion is lost), so the chain is never persisted.
+* Arrow-batched projection: one BLAS GEMM per Arrow batch beat a p*k
+  codegen multiply-add expression, 4.6s vs 7.7s (5 reps, 1.26M turns,
+  local[32]) and 38.3s vs 69.6s at local[8] (``BENCH/proj_ab.log``).
 
 Zero temporal leakage by construction: every input to the vector at
 (conv_id, ts) is a backward-looking Window (rowsBetween ... currentRow), the
@@ -59,7 +61,6 @@ class FeatureJobConfig:
     mode: str = "pca_whiten"        # pca | pca_whiten | zca
     snap_dim: int = 16              # dim of snapshot vectors
     rolling_turns: int = 8
-    cache_prepared: bool = False    # persist the pre-kernel frame between passes
     #: fit one model PER TUMBLING WINDOW of this duration (e.g. "1 hour")
     #: instead of one global model — the "windowed PCA/whitening features"
     #: path (plans/windowed_pca.py).  None = global model (default).
@@ -166,14 +167,6 @@ def run_features(transcripts: DataFrame, snapshots: DataFrame | None = None,
         )
 
         if model is None:
-            # Same two-pass shape as the global path (moment fit +
-            # projection both traverse `prepared`), so the same opt-in
-            # cache applies — but ONLY when fitting: a transform-only call
-            # (pre-fitted model, e.g. once per resumable unit) traverses
-            # the chain exactly once and would just leak a cached
-            # text-heavy frame per unit.
-            if cfg.cache_prepared:
-                prepared = prepared.persist()
             model = fit_windowed_pca(prepared, "raw_vec", "ts",
                                      cfg.window_duration, k=cfg.k,
                                      mode=cfg.mode)
@@ -201,18 +194,10 @@ def run_features(transcripts: DataFrame, snapshots: DataFrame | None = None,
             "with (or pass a global PCAModel)")
     if model is None:
         # Fit pass reads only raw_vec (column-pruned chain); the projection
-        # pass recomputes the chain with the text payload.  Measured: caching
-        # `prepared` costs more than recomputing the JVM chain because cache
-        # population materializes the text-heavy rows; set
-        # cfg.cache_prepared=True to trade memory for the second pass when
-        # the chain is compute-bound instead (wide windows, many snapshots).
-        if cfg.cache_prepared:
-            prepared = prepared.persist()
+        # pass recomputes the chain with the text payload (module
+        # docstring: recompute beats cache).
         moments = compute_moments(prepared, "raw_vec")
         model = fit_pca(moments, k=cfg.k, mode=cfg.mode)
-    # A/B (5 reps, 1.26M turns, local[32]): Arrow-batched project_udf median
-    # 4.6s vs 7.7s for the p*k codegen expression (project_expr) — the BLAS
-    # GEMM per Arrow batch wins even at p=25, so the UDF is the default.
     out = prepared.select(
         "conv_id", "turn_idx", "ts", "role", "text", "tool", "session_id",
         project_udf(model, "raw_vec").alias("feature_vec"),

@@ -62,6 +62,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+from featureextraction_jl_spark import manifest
 from featureextraction_jl_spark.functions.moments import (
     Moments,
     compute_grouped_moments,
@@ -127,7 +128,6 @@ class WindowedPCA:
 
         Group-key serialization: JSON list, window start as ISO-8601.
         """
-        import json
         import os
 
         os.makedirs(dir_path, exist_ok=True)
@@ -143,18 +143,16 @@ class WindowedPCA:
             model.save(os.path.join(dir_path, fname))
             index["models"].append([_key_to_json(gk), fname,
                                     counts.get(gk)])
-        tmp = os.path.join(dir_path, "index.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(index, f)
-        os.replace(tmp, os.path.join(dir_path, "index.json"))
+        manifest.write_atomic(os.path.join(dir_path, "index.json"), index)
 
     @staticmethod
     def load(dir_path: str) -> "WindowedPCA":
-        import json
         import os
 
-        with open(os.path.join(dir_path, "index.json")) as f:
-            index = json.load(f)
+        index = manifest.read(os.path.join(dir_path, "index.json"))
+        if index is None:
+            raise FileNotFoundError(
+                f"no windowed model index.json under {dir_path!r}")
         models, counts = {}, {}
         for jk, fname, n in index["models"]:
             gk = _key_from_json(jk)

@@ -81,8 +81,8 @@ def streaming_windowed_moments(stream: DataFrame, cols: list[str],
     :func:`finalize_windowed_moments` once the window closes.  State per
     window is 1 + p + p(p+1)/2 doubles — bounded by the watermark, which
     also defines when a window's moments are final (append mode emits each
-    exactly once).  Null handling matches compute_moments_expr: rows with
-    any null OR NaN component are dropped before accumulation (the
+    exactly once).  Null handling matches the batch moments paths: rows
+    with any null OR NaN component are dropped before accumulation (the
     NaN-unified moments contract — a bare isNotNull filter would let one
     Arrow-valid NaN poison its whole window's sums while the batch twin
     drops the row, silently breaking the pinned stream==batch equivalence).
@@ -113,8 +113,8 @@ def streaming_windowed_moments(stream: DataFrame, cols: list[str],
 def finalize_windowed_moments(rows, p: int) -> dict:
     """Recover {win_start: (n, mean, m2)} from drained raw-sum rows.
 
-    Driver-side NumPy over O(windows) tiny rows (same recovery as
-    compute_moments_expr): mean = s/n, M2 = Q - n * outer(mean, mean).
+    Driver-side NumPy over O(windows) tiny rows: mean = s/n,
+    M2 = Q - n * outer(mean, mean).
     """
     import numpy as np
 

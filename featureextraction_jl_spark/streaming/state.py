@@ -9,6 +9,9 @@ rows (merge-invariance, tested), and both equal the reference's
 
 Arrow-vectorized throughout: each micro-batch group arrives as pandas frames,
 reduced with one BLAS GEMM (``batch_moments``) — never a per-row Python loop.
+
+The one stateful form is ``applyInPandasWithState`` (Spark 3.4+), which
+also carries the ``state_ttl_ms`` eviction option.
 """
 
 from __future__ import annotations
@@ -103,67 +106,3 @@ def streaming_moments(stream: DataFrame, key_col: str, vec_col: str,
                                 "update", timeout)
     )
 
-
-def streaming_moments_tws(stream: DataFrame, key_col: str,
-                          vec_col: str) -> DataFrame:
-    """Spark 4.x ``transformWithStateInPandas`` twin of
-    :func:`streaming_moments` (same Chan-merge state, same emissions).
-
-    The TWS API is the forward path for custom stateful operators (typed
-    value state, timers, TTL, RocksDB-backed); the applyInPandasWithState
-    variant stays as the portable fallback (which carries the state_ttl_ms
-    eviction option — under TWS the same bound comes natively from value
-    state TTL).  NOTE: in this sandbox the TWS
-    driver-side pre-init Python worker cannot complete its socket handshake
-    (verified with a minimal count-state processor — env-level, same class
-    of gating as the Iceberg scan branch), so tests/test_streaming.py
-    skips with the live error when the backend is unavailable and the
-    moments math is covered through the applyInPandasWithState twin.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_type = stream.schema[key_col].dataType.simpleString()
-    out_schema = f"key {key_type}, n long, mean array<double>, m2 array<double>"
-
-    class MomentsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("moments", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n0, mean0, m20 = self._state.get()
-                mean0 = np.asarray(mean0, dtype=np.float64)
-                p = mean0.shape[0]
-                acc = Moments(int(n0), mean0,
-                              np.asarray(m20, dtype=np.float64).reshape(p, p))
-            else:
-                acc = Moments(0, np.zeros(0), np.zeros((0, 0)))
-            for pdf in rows:
-                # same null-element/ragged mask as the applyInPandasWithState
-                # twin (shared pandas_clean_stack)
-                x = pandas_clean_stack(pdf[vec_col])
-                if x is None:
-                    continue
-                acc = merge_moments(acc, batch_moments(x))
-            if acc.n == 0:
-                # all-invalid key: no state, no emission (same contract as
-                # the applyInPandasWithState twin and the batch paths)
-                return
-            self._state.update((acc.n, acc.mean.tolist(),
-                                acc.m2.ravel().tolist()))
-            yield pd.DataFrame({"key": [key[0]], "n": [acc.n],
-                                "mean": [acc.mean.tolist()],
-                                "m2": [acc.m2.ravel().tolist()]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select(key_col, vec_col)
-        .groupBy(key_col)
-        .transformWithStateInPandas(MomentsProcessor(), out_schema,
-                                    "Update", "None")
-    )

@@ -35,7 +35,8 @@ exact shuffles (digest, id) only; neardup is the expensive stage
 so a crash in hour 10 of CC never re-pays the stats/exact scans; final
 is a narrow filter.  Each stage's parquet write is idempotent
 (per-stage-dir overwrite) and the manifest is written AFTER the data
-(tmp + os.replace), so a crash between the two redoes only that stage.
+(``manifest.write_atomic``: fsynced, then renamed into place), so a
+crash between the two redoes only that stage.
 """
 
 from __future__ import annotations
@@ -68,11 +69,10 @@ from featureextraction_jl_spark.operators.dedup import (
     near_dedup_survivors,
     simhash_pairs,
 )
+from featureextraction_jl_spark.manifest import read as read_manifest, write_atomic
 from featureextraction_jl_spark.plans.checkpoint import (
     MANIFEST_DIR,
     SimulatedCrash,
-    _read_json,
-    _write_json_atomic,
     input_fingerprint,
 )
 
@@ -262,7 +262,7 @@ def curate_corpus(
         aux_fp = (input_fingerprint(cfg.embeddings_path)
                   if stage == "neardup" and cfg.neardup_method == "embedding"
                   else None)
-        man = _read_json(spath)
+        man = read_manifest(spath)
         if (man and man.get("input_fingerprint") == fp
                 and man.get("config_hash") == chash
                 and man.get("aux_fingerprint") == aux_fp
@@ -303,13 +303,13 @@ def curate_corpus(
             "rows_out": int(obs.get["rows"]),
             "wall_s": round(time.monotonic() - t0, 3),
         }
-        _write_json_atomic(spath, man)
+        write_atomic(spath, man)
         upstream_hash = _manifest_hash(man)
         stages_done.append(stage)
 
     stage_mans = {}
     for stage in STAGES:
-        man = _read_json(os.path.join(mdir, f"stage_{stage}.json"))
+        man = read_manifest(os.path.join(mdir, f"stage_{stage}.json"))
         if man is None:
             raise RuntimeError(
                 f"stage manifest missing at summary time: {stage}")
@@ -323,7 +323,7 @@ def curate_corpus(
         "wall_s_per_stage": {s: m["wall_s"] for s, m in stage_mans.items()},
         "rows_final": stage_mans["final"]["rows_out"],
     }
-    _write_json_atomic(os.path.join(mdir, "job.json"), job)
+    write_atomic(os.path.join(mdir, "job.json"), job)
     return job
 
 
@@ -337,7 +337,7 @@ def read_curated(spark: SparkSession, out_dir: str,
     mdir = os.path.join(out_dir, MANIFEST_DIR)
     upstream_hash = "<source>"
     for s in STAGES[:STAGES.index(stage) + 1]:
-        man = _read_json(os.path.join(mdir, f"stage_{s}.json"))
+        man = read_manifest(os.path.join(mdir, f"stage_{s}.json"))
         if not man:
             raise FileNotFoundError(
                 f"stage {s!r} has no readable manifest under {mdir} — "

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 
 RTOL, ATOL = 1e-8, 1e-10
 EPS = 1e-12
@@ -90,3 +91,77 @@ def sessionize(ts: pd.Series, gap_seconds: float) -> pd.Series:
 
 def forward_fill(s: pd.Series) -> pd.Series:
     return s.ffill()
+
+
+def asof_join_pandas(left: DataFrame, right: DataFrame, on: str,
+                     left_ts: str = "ts", right_ts: str = "ts",
+                     direction: str = "backward",
+                     tolerance_seconds: float | None = None) -> DataFrame:
+    """Cogrouped ``pandas.merge_asof`` cross-check implementation (C1b).
+
+    Both sides shuffle once on the key; each key's rows land in one pandas
+    frame (cogroup), merged with the library asof.  O(key group) memory.
+    """
+    right_cols = [c for c in right.columns if c != on and c != right_ts]
+    # Mirror asof_join's plan-time collision check (round-5 review): without
+    # it a duplicate payload name builds a schema with two same-named fields
+    # and dies mid-job inside the Python worker with an opaque
+    # RESULT_COLUMN_NAMES_MISMATCH — a cross-check that crashes differently
+    # from the path it checks.
+    overlap = set(right_cols) & set(left.columns)
+    if overlap:
+        raise ValueError(
+            f"right payload columns collide with left: {sorted(overlap)}")
+    fields = []
+    for c in left.schema.fields:
+        fields.append(f"{c.name} {c.dataType.simpleString()}")
+    rtypes = dict((f.name, f.dataType.simpleString()) for f in right.schema.fields)
+    for c in right_cols:
+        fields.append(f"{c} {rtypes[c]}")
+    schema = ", ".join(fields)
+    # `is not None`, not falsy: tolerance_seconds=0.0 means exact-ts-only
+    # matches (the production path's semantics at asof_join), not unbounded
+    tol = (pd.Timedelta(seconds=tolerance_seconds)
+           if tolerance_seconds is not None else None)
+
+    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if len(lpdf) == 0:
+            return pd.DataFrame(columns=list(lpdf.columns) + right_cols)
+        # Null-ts handling mirrors the production sweep (_union_sweep):
+        # right rows with NULL ts can never be an as-of match -> dropped;
+        # left rows with NULL ts pass through unmatched.  Without this,
+        # pd.merge_asof raises ValueError("Merge keys contain null values")
+        # on a single NaT on EITHER side, killing the task — a cross-check
+        # that dies on inputs the primary path tolerates checks nothing.
+        null_left = lpdf[lpdf[left_ts].isna()]
+        lpdf = lpdf[lpdf[left_ts].notna()]
+        rpdf = rpdf[rpdf[right_ts].notna()]
+        parts = []
+        if len(null_left):
+            nl = null_left.copy()
+            for c in right_cols:
+                nl[c] = None
+            parts.append(nl)
+        if len(lpdf):
+            lo = lpdf.sort_values(left_ts, kind="stable")
+            if len(rpdf) == 0:
+                out = lo.copy()
+                for c in right_cols:
+                    out[c] = None
+                parts.append(out)
+            else:
+                ro = (rpdf.sort_values(right_ts, kind="stable")
+                      [[right_ts] + right_cols])
+                merged = pd.merge_asof(lo, ro, left_on=left_ts,
+                                       right_on=right_ts,
+                                       direction=direction, tolerance=tol,
+                                       suffixes=("", "__r"))
+                drop = [c for c in (f"{right_ts}__r", right_ts)
+                        if c in merged.columns and c not in lpdf.columns]
+                parts.append(merged.drop(columns=drop))
+        # parts is never empty here: the len(lpdf)==0 early return above
+        # guarantees at least one of null_left / filtered lpdf is non-empty
+        return parts[0] if len(parts) == 1 else pd.concat(parts,
+                                                          ignore_index=True)
+
+    return left.groupBy(on).cogroup(right.groupBy(on)).applyInPandas(merge, schema)

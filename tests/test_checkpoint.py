@@ -174,18 +174,65 @@ def test_kill_then_resume(spark, inputs, direct, tmp_path):
     assert set(man["wall_s_per_unit"]) == {str(u) for u in range(N_UNITS)}
 
 
+def test_torn_unit_manifest_tmp_recomputes_unit(spark, inputs, direct,
+                                                tmp_path):
+    """A crash inside the manifest write leaves only ``unit_0.json.tmp``:
+    it never counts as a unit manifest, so the resume recomputes unit 0.
+    A malformed FINAL-name manifest cannot come from a crash and raises
+    instead of reading as "not done"."""
+    tdir, sdir = inputs
+    out = str(tmp_path / "out")
+    run_features_resumable(spark, tdir, out, sdir, CFG, n_units=N_UNITS)
+    mdir = os.path.join(out, "_manifest")
+    os.remove(os.path.join(mdir, "unit_0.json"))
+    with open(os.path.join(mdir, "unit_0.json.tmp"), "w") as f:
+        f.write('{"stage": "transform", "unit": 0, "input_fing')
+    job = run_features_resumable(spark, tdir, out, sdir, CFG, n_units=N_UNITS)
+    assert job["units_computed_this_run"] == [0]
+    assert job["units_resumed"] == [1, 2, 3]
+    assert not [f for f in os.listdir(mdir) if f.endswith(".tmp")]
+    k1, _ = _collect(read_feature_output(spark, out))
+    assert k1 == direct[0]
+
+    with open(os.path.join(mdir, "unit_1.json"), "w") as f:
+        f.write('{"stage": "transf')
+    with pytest.raises(ValueError, match="unit_1.json"):
+        read_feature_output(spark, out)
+    with pytest.raises(ValueError, match="unit_1.json"):
+        run_features_resumable(spark, tdir, out, sdir, CFG, n_units=N_UNITS)
+
+
+def test_write_atomic_fsyncs_file_and_directory(tmp_path, monkeypatch):
+    import stat
+
+    from featureextraction_jl_spark import manifest
+
+    synced = []
+    real_fsync = os.fsync
+
+    def spy(fd):
+        synced.append(stat.S_ISDIR(os.fstat(fd).st_mode))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", spy)
+    path = str(tmp_path / "m.json")
+    manifest.write_atomic(path, {"b": 1, "a": [2]})
+    assert synced == [False, True]          # the file, then its directory
+    assert os.listdir(tmp_path) == ["m.json"]
+    assert manifest.read(path) == {"a": [2], "b": 1}
+    assert manifest.read(str(tmp_path / "missing.json")) is None
+
+
 def test_manifest_invalidation_keys():
     # config changes and input changes must invalidate manifests
     assert config_hash(CFG, 4) != config_hash(CFG, 8)
     assert config_hash(CFG, 4) != config_hash(FeatureJobConfig(num_buckets=8, k=5), 4)
     assert input_fingerprint("/root/testdata/sf0.001") \
         != input_fingerprint("/root/testdata/sf0.01")
-    # ...but pure performance knobs must NOT (round-5 review: toggling
-    # cache_prepared between a run and its resume invalidated every
-    # manifest and recomputed byte-identical outputs from scratch)
-    import dataclasses
-    assert config_hash(CFG, 4) == config_hash(
-        dataclasses.replace(CFG, cache_prepared=not CFG.cache_prepared), 4)
+    # pinned literals: a config field removed or renamed must not change
+    # the hash, or every existing _manifest/ dir would silently recompute
+    assert config_hash(FeatureJobConfig(), 8) == "d73602dbb50832ff"
+    assert config_hash(CFG, 4) == "3799be82418e03fb"
 
 
 def test_shrinking_n_units_removes_stale_outputs(spark, inputs, direct, tmp_path):

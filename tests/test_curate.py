@@ -138,14 +138,14 @@ def test_crash_between_data_and_manifest_never_reads_stale(
     other = str(tmp_path / "docs_v2")
     spark.read.parquet(_docs_path(sf_dir)).limit(20).write.parquet(other)
 
-    real_write = cc._write_json_atomic
+    real_write = cc.write_atomic
 
     def crash_on_manifest(path, payload):
         if os.path.basename(path) == "stage_stats.json":
             raise SimulatedCrash("killed between data and manifest write")
         return real_write(path, payload)
 
-    monkeypatch.setattr(cc, "_write_json_atomic", crash_on_manifest)
+    monkeypatch.setattr(cc, "write_atomic", crash_on_manifest)
     with pytest.raises(SimulatedCrash):
         curate_corpus(spark, other, out, CFG)
     monkeypatch.undo()

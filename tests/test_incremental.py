@@ -189,6 +189,28 @@ def test_unmanifested_data_dirs_are_invisible(spark, tmp_path):
     assert _ids(got) == {10, 11}
 
 
+def test_torn_manifest_tmp_is_invisible(tmp_path):
+    """A crash inside the commit's manifest write leaves only
+    ``<batch>.json.tmp``: the batch is not committed, so a retry commits
+    it.  A malformed final-name manifest raises, naming the file."""
+    from featureextraction_jl_spark.operators.incremental import (
+        _check_committed)
+
+    idx = str(tmp_path / "idx")
+    mdir = os.path.join(idx, "manifests")
+    os.makedirs(mdir)
+    with open(os.path.join(mdir, "b1.json.tmp"), "w") as f:
+        f.write('{"batch_id": "b1", "config_')
+    assert committed_batches(idx) == []
+    assert _check_committed(idx, "b1", CFG) is None
+
+    with open(os.path.join(mdir, "b1.json"), "w") as f:
+        f.write('{"batch_id": "b1", "config_')
+    assert committed_batches(idx) == ["b1"]
+    with pytest.raises(ValueError, match="b1.json"):
+        _check_committed(idx, "b1", CFG)
+
+
 def test_heavy_corpus_bucket_guard_sums_stats_across_batches(spark,
                                                              tmp_path):
     """band_stats are additive: two committed batches of 3+2 same-family

@@ -11,7 +11,6 @@ from featureextraction_jl_spark.functions import (
     batch_moments,
     merge_moments,
     compute_moments,
-    compute_moments_tree,
     compute_grouped_moments,
     fit_pca,
     project_udf,
@@ -102,65 +101,31 @@ def test_merge_permutation_invariance():
 
 def test_distributed_moments_both_strategies(spark):
     df = vec_df(spark, X)
-    for m in (compute_moments(df, "vec"), compute_moments_tree(df, "vec")):
-        assert m.n == 400
-        close(m.mean, oracle.mean(X))
-        close(m.cov, oracle.cov(X))
-
-
-def test_moments_expr_strategy(spark):
-    """JVM-codegen raw-sum strategy equals the Chan-merge Arrow paths."""
-    from featureextraction_jl_spark.functions import compute_moments_expr
-
-    df = vec_df(spark, X)
-    for m in (compute_moments_expr(df, "vec"),            # dim-probe path
-              compute_moments_expr(df, "vec", p=X.shape[1])):
-        assert m.n == 400
-        close(m.mean, oracle.mean(X))
-        close(m.cov, oracle.cov(X))
-    # column-list form, with null rows dropped like the Arrow path
-    pdf = pd.DataFrame({f"c{i}": X[:, i] for i in range(X.shape[1])})
-    pdf.loc[3, "c0"] = None
-    cols_df = spark.createDataFrame(pdf).repartition(5)
-    m = compute_moments_expr(cols_df, [f"c{i}" for i in range(X.shape[1])])
-    kept = np.delete(X, [3], axis=0)
-    assert m.n == 399
-    close(m.mean, oracle.mean(kept))
-    close(m.cov, oracle.cov(kept))
-    # null array rows dropped
-    pdf2 = pd.DataFrame({"vec": list(X.astype(np.float64))})
-    pdf2.loc[5, "vec"] = None
-    null_df = spark.createDataFrame(pdf2).repartition(5)
-    m = compute_moments_expr(null_df, "vec")
-    kept2 = np.delete(X, [5], axis=0)
-    assert m.n == 399
-    close(m.mean, oracle.mean(kept2))
-    close(m.cov, oracle.cov(kept2))
+    m = compute_moments(df, "vec")
+    assert m.n == 400
+    close(m.mean, oracle.mean(X))
+    close(m.cov, oracle.cov(X))
 
 
 def test_moments_bucketed_and_auto(spark):
     """Executor-side two-level reduce (VERDICT r03 #1) equals the oracle for
-    every bucket count and both input forms; merge='auto' stays green."""
+    every bucket count and both input forms; compute_moments stays green."""
     from featureextraction_jl_spark.functions import compute_moments_bucketed
 
     df = vec_df(spark, X)
     for m in (compute_moments_bucketed(df, "vec"),
               compute_moments_bucketed(df, "vec", buckets=3),
-              compute_moments(df, "vec", merge="bucketed"),
-              compute_moments(df, "vec", merge="auto")):
+              compute_moments(df, "vec")):
         assert m.n == 400
         close(m.mean, oracle.mean(X))
         close(m.cov, oracle.cov(X))
     # column-list (fully columnar) form through the bucketed reduce
     pdf = pd.DataFrame({f"c{i}": X[:, i] for i in range(X.shape[1])})
     cols_df = spark.createDataFrame(pdf).repartition(5)
-    m = compute_moments(cols_df, [f"c{i}" for i in range(X.shape[1])],
-                        merge="bucketed")
+    m = compute_moments_bucketed(cols_df, [f"c{i}" for i in range(X.shape[1])])
     assert m.n == 400
     close(m.mean, oracle.mean(X))
     close(m.cov, oracle.cov(X))
-    with pytest.raises(ValueError, match="merge must be"):
-        compute_moments(df, "vec", merge="nope")
 
 
 def test_moments_empty_and_all_null_input(spark):
@@ -168,23 +133,17 @@ def test_moments_empty_and_all_null_input(spark):
     all-null source instead of crashing — the degenerate partition case the
     per-partition worker merge must emit nothing for."""
     from featureextraction_jl_spark.functions import compute_moments_bucketed
-    from featureextraction_jl_spark.functions.moments import (
-        compute_moments_expr,
-        compute_moments_tree,
-    )
 
     empty = spark.createDataFrame([], "vec array<double>")
     nulls = spark.createDataFrame([(None,), (None,)], "vec array<double>")
     for df in (empty, nulls):
-        for m in (compute_moments(df, "vec", merge="driver"),
-                  compute_moments_bucketed(df, "vec"),
-                  compute_moments_tree(df, "vec"),
-                  compute_moments_expr(df, "vec", p=4)):
+        for m in (compute_moments(df, "vec"),
+                  compute_moments_bucketed(df, "vec")):
             assert m.n == 0, m
 
 
 def test_moments_auto_switch_routes_to_bucketed(spark, monkeypatch):
-    """merge='auto' must route through the executor-side bucketed reduce
+    """compute_moments must route through the executor-side bucketed reduce
     once the source partition count exceeds the threshold (the design-scale
     path); below it, the driver merge is chosen.  Threshold lowered via
     monkeypatch so the test doesn't need 2048 real partitions."""
@@ -200,10 +159,10 @@ def test_moments_auto_switch_routes_to_bucketed(spark, monkeypatch):
     monkeypatch.setattr(M, "compute_moments_bucketed", spy)
     df = vec_df(spark, X)                      # 5 partitions
     monkeypatch.setattr(M, "_BUCKETED_THRESHOLD", 4)
-    m = M.compute_moments(df, "vec", merge="auto")
+    m = M.compute_moments(df, "vec")
     assert calls["bucketed"] == 1 and m.n == 400
     monkeypatch.setattr(M, "_BUCKETED_THRESHOLD", 2048)
-    m = M.compute_moments(df, "vec", merge="auto")
+    m = M.compute_moments(df, "vec")
     assert calls["bucketed"] == 1 and m.n == 400   # driver path, no new call
 
 
@@ -225,22 +184,6 @@ def test_moments_partials_one_row_per_partition(spark):
         close(m.cov, oracle.cov(X))
     finally:
         spark.conf.set(key, old)
-
-
-def test_moments_expr_array_null_element_and_ragged(spark):
-    """ADVICE r03: the expr strategy's array form must drop rows with a null
-    element or the wrong length (count/sum buffers stay consistent)."""
-    from featureextraction_jl_spark.functions import compute_moments_expr
-
-    rows = [(r.tolist(),) for r in X]
-    rows[7] = ([1.0, None, 2.0, 3.0, 4.0, 5.0],)   # null element
-    rows[9] = ([1.0, 2.0],)                          # ragged (size 2, p=6)
-    df = spark.createDataFrame(rows, "vec array<double>").repartition(5)
-    m = compute_moments_expr(df, "vec", p=X.shape[1])
-    kept = np.delete(X, [7, 9], axis=0)
-    assert m.n == 398
-    close(m.mean, oracle.mean(kept))
-    close(m.cov, oracle.cov(kept))
 
 
 def test_grouped_moments(spark):
@@ -401,15 +344,13 @@ def test_moments_element_null_and_ragged(spark):
     All moments paths drop such rows; ragged batches raise loudly instead
     of the old divisible-length mis-reshape."""
     from featureextraction_jl_spark.functions import compute_moments_bucketed
-    from featureextraction_jl_spark.functions.moments import compute_moments_expr
 
     good = [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]]
     rows = [(v,) for v in good] + [([7.0, None],), (None,)]
     df = spark.createDataFrame(rows, "vec array<double>").coalesce(1)
     want_mean = np.mean(good, axis=0)
-    for m in (compute_moments(df, "vec", merge="driver"),
-              compute_moments_bucketed(df, "vec"),
-              compute_moments_expr(df, "vec", p=2)):
+    for m in (compute_moments(df, "vec"),
+              compute_moments_bucketed(df, "vec")):
         assert m.n == 3
         np.testing.assert_allclose(m.mean, want_mean, rtol=1e-12)
     # ragged: lengths {1, 3} with total 4 elements over 2 rows would have
@@ -417,7 +358,7 @@ def test_moments_element_null_and_ragged(spark):
     ragged = spark.createDataFrame([([1.0],), ([2.0, 3.0, 4.0],)],
                                    "vec array<double>").coalesce(1)
     with pytest.raises(Exception, match="ragged"):
-        compute_moments(ragged, "vec", merge="driver")
+        compute_moments(ragged, "vec")
 
 
 def test_grouped_moments_null_vectors_dropped(spark):
@@ -467,16 +408,14 @@ def test_projection_udfs_propagate_nulls(spark):
 
 
 def test_moments_empty_cols_raise(spark):
-    """The scalar-column moment builders must reject an empty column list
-    with a clear error, not crash in filter(None) (round-5 review)."""
+    """The scalar-column streaming moment builder must reject an empty
+    column list with a clear error, not crash in filter(None) (round-5
+    review)."""
     import pytest
-    from featureextraction_jl_spark.functions import compute_moments_expr
     from featureextraction_jl_spark.streaming.ingest import (
         streaming_windowed_moments)
 
     df = spark.createDataFrame([(1.0,)], "x double")
-    with pytest.raises(ValueError, match="non-empty"):
-        compute_moments_expr(df, [])
     with pytest.raises(ValueError, match="non-empty"):
         streaming_windowed_moments(df, [])
 
@@ -557,19 +496,14 @@ def test_moment_paths_share_nan_row_contract(spark):
     them in while the pandas kernels (where NaN and null are
     indistinguishable) dropped them — silently un-pinning the cross-path
     equivalences on NaN-bearing data."""
-    from featureextraction_jl_spark.functions.moments import (
-        compute_moments_expr,
-    )
     from featureextraction_jl_spark.plans.salting import salted_grouped_moments
 
     rows = [("a", [1.0, 2.0]), ("a", [3.0, 6.0]),
             ("a", [float("nan"), 1.0]), ("a", [2.0, None])]
     df = spark.createDataFrame(rows, "g string, vec array<double>")
     g = compute_moments(df, "vec")
-    e = compute_moments_expr(df, "vec", p=2)
-    assert g.n == e.n == 2
+    assert g.n == 2
     np.testing.assert_allclose(g.mean, [2.0, 4.0])
-    np.testing.assert_allclose(e.mean, [2.0, 4.0])
     grp = {r["g"]: r for r in
            compute_grouped_moments(df, ["g"], "vec").collect()}
     sal = {r["g"]: r for r in

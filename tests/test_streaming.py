@@ -111,44 +111,6 @@ def test_streaming_moments_equal_batch(spark, tmp_path):
     np.testing.assert_allclose(streamed.m2, batch.m2, rtol=1e-8, atol=1e-8)
 
 
-def test_transform_with_state_moments_equal_batch(spark, tmp_path):
-    """Spark 4.x transformWithStateInPandas twin == batch moments."""
-    from featureextraction_jl_spark.streaming.state import streaming_moments_tws
-
-    rng = np.random.default_rng(9)
-    vdir = str(tmp_path / "vecs_tws")
-    for i in range(3):
-        pdf = pd.DataFrame({
-            "key": [f"k{j % 3}" for j in range(150)],
-            "vec": list(rng.normal(size=(150, 4))),
-        })
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(vdir)
-
-    stream = (spark.readStream.schema("key string, vec array<double>")
-              .option("maxFilesPerTrigger", 1).parquet(vdir))
-    try:
-        run_to_memory(streaming_moments_tws(stream, "key", "vec"),
-                      "mom_tws", output_mode="update")
-    except Exception as e:  # pragma: no cover - env-dependent state backend
-        msg = str(e)
-        if any(s in msg for s in ("RocksDB", "ransformWithState",
-                                  "Python worker failed to connect")):
-            pytest.skip(f"TWS backend unavailable in this sandbox "
-                        f"(see state.py docstring): {msg[:200]}")
-        raise
-
-    emitted = spark.table("mom_tws")
-    last = emitted.withColumn(
-        "rk", F.row_number().over(
-            Window.partitionBy("key").orderBy(F.col("n").desc()))
-    ).filter("rk = 1").drop("rk")
-    streamed = merge_moment_rows(last)
-
-    batch = compute_moments(spark.read.parquet(vdir), "vec")
-    assert streamed.n == batch.n == 450
-    np.testing.assert_allclose(streamed.mean, batch.mean, rtol=1e-8, atol=1e-10)
-    np.testing.assert_allclose(streamed.m2, batch.m2, rtol=1e-8, atol=1e-8)
-
 
 def test_streaming_windowed_moments_equal_batch(spark, tdir):
     """Streaming per-window moment accumulation (the windowed-PCA fit's

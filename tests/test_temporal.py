@@ -19,10 +19,10 @@ from featureextraction_jl_spark.operators import (
     tumbling,
     latest_row,
 )
-from featureextraction_jl_spark.operators.asof import asof_join_pandas
 from featureextraction_jl_spark.sources import generate_transcripts, generate_snapshots
 
 from tests import oracle
+from tests.oracle import asof_join_pandas
 
 
 @pytest.fixture(scope="module")
