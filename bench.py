@@ -27,7 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-BENCH_CACHE = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/root/repo/.bench_cache")
+BENCH_CACHE = os.environ.get(
+    "SPARK_GRAFT_BENCH_CACHE",
+    os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache"))
 N_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "60000"))
 MEGA_TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_MEGA", "120000"))
 

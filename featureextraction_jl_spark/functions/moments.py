@@ -275,8 +275,12 @@ def compute_moments(df: DataFrame, vec_col) -> Moments:
     merged on the driver (O(partitions * p^2) driver bytes, no extra
     stage); above it they go through the executor-side
     :func:`compute_moments_bucketed` (O(buckets * p^2) driver bytes — the
-    design-scale path).  The probe is ``df.rdd.getNumPartitions()`` — plan
-    analysis only, no job.
+    design-scale path).  The probe is ``df.rdd.getNumPartitions()``.  It is
+    NOT free when ``df`` ends in a shuffle: under AQE, building the RDD
+    runs the map stages below the last exchange as a Spark job (on
+    ``feature_job``'s chain that is the as-of exchange: 0.23–0.33 s warm
+    at perfbench seed 61 on a 4-core VM), and the partials' collect then
+    runs that stage again.
 
     ``vec_col``: an array<double> column name, or a list of scalar double
     column names (faster — fully columnar Arrow transfer).

@@ -74,6 +74,14 @@ Scale notes (100 TB corpus, 1000 executors):
    (band, band_hash) respectively — sources/tables.py's bucketed writer)
    so the storage-partitioned join leaves the index unshuffled and only
    the (small) batch side moves.
+ * Connected components runs over the batch's candidate pairs only
+   (within-batch plus cross-index), never over the index, so its graph is
+   O(batch) too.  Up to ``dedup.DRIVER_CC_MAX_EDGES`` (2^20) edge rows
+   it finishes on the driver: one edge checkpoint and one Arrow collect
+   per batch, however many rounds the graph needs, and ~16 MB of driver
+   arrays at the bound.  A batch whose candidate set is larger (a huge
+   batch, or a near-dup storm) runs the same rounds as Spark actions, one
+   checkpoint per round.
  * Degenerate buckets: the batch side inherits ``max_bucket`` (one window
    over the batch's band rows, reused for the self-join AND the cross
    join); the CORPUS side's bucket widths come from the tiny
@@ -297,13 +305,18 @@ def dedup_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
     """Rows of ``docs`` that survive exact + near dedup BOTH within the
     batch and against every committed batch in ``index_dir``.
 
-    EAGER: the exact stage and banding are checkpointed, and the
-    connected-components step runs its Spark jobs (one checkpoint per
-    round, carrying its convergence probe), DURING this call — do not
-    schedule around laziness; only the
-    final survivor semi-join remains lazy in the returned frame.  With no committed batches (or a missing
-    index dir) this equals the plain one-shot pipeline: ``exact_dedup`` +
-    ``minhash_lsh_pairs`` + ``near_dedup_survivors``.
+    EAGER: the exact stage, the banding and (with an index) the cross
+    pairs are checkpointed, and the connected-components step runs its
+    Spark jobs, DURING this call — do not schedule around laziness.  A
+    batch's candidate graph is small, so connected components checkpoints
+    its edges, collects them and runs its rounds on the driver (two actions;
+    graphs over ``dedup.DRIVER_CC_MAX_EDGES`` edge rows run one
+    checkpointed Spark action per round instead).  What stays lazy in the
+    returned frame is the join of the driver's labels back onto the batch
+    ids and the survivor semi-join; they run inside the caller's action.
+    With no committed batches (or a missing index dir) this equals the
+    plain one-shot pipeline: ``exact_dedup`` + ``minhash_lsh_pairs`` +
+    ``near_dedup_survivors``.
     """
     _check_index_config(index_dir, cfg, create=False)
     pdocs, banded, committed = _prepare(spark, docs, index_dir, cfg)

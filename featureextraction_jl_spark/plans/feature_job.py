@@ -40,12 +40,12 @@ backward as-of match, or the row itself.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from featureextraction_jl_spark.functions.moments import compute_moments, Moments
+from featureextraction_jl_spark.functions.moments import compute_moments
 from featureextraction_jl_spark.functions.timeutil import epoch_seconds
 from featureextraction_jl_spark.functions.pca import PCAModel, fit_pca, project_udf
 from featureextraction_jl_spark.operators.sessionize import sessionize

@@ -10,8 +10,6 @@ Schemas are explicit and asserted, never inferred (SURVEY.md §1.1 row 5).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (

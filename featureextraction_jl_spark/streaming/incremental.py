@@ -37,7 +37,7 @@ run is never visible downstream.
 from __future__ import annotations
 
 import os
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery

@@ -48,7 +48,10 @@ N_PROBE = int(os.environ.get("SPARK_GRAFT_ANN_PROBE", "8"))
 K = 10
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 SEED = 7
-CACHE = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/root/repo/.bench_cache")
+CACHE = os.environ.get(
+    "SPARK_GRAFT_BENCH_CACHE",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                 ".bench_cache"))
 
 
 def gen_corpus(spark, n: int, dim: int):

@@ -126,7 +126,8 @@ def main() -> None:
     # reuse the bench fixture
     env = {**os.environ, "SPARK_GRAFT_BENCH_CONVS": str(args.convs),
            "SPARK_GRAFT_BENCH_MEGA": str(args.mega)}
-    cache = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/root/repo/.bench_cache")
+    cache = os.environ.get("SPARK_GRAFT_BENCH_CACHE",
+                           os.path.join(REPO, ".bench_cache"))
     tdir = os.path.join(cache, f"transcripts_c{args.convs}_m{args.mega}")
     sdir = os.path.join(cache, f"snapshots_c{args.convs}")
     if not os.path.exists(os.path.join(tdir, "_SUCCESS")):

@@ -366,26 +366,38 @@ def test_minhash_bands_match_array_lambda_reference(spark):
 # Connected components / near-dedup survivors
 # ---------------------------------------------------------------------------
 
-def test_connected_components_chain_and_isolated(spark):
+def _cc_paths(monkeypatch):
+    """Loop once per connected-components path: the default bound sends
+    the tests' small graphs to the driver; a bound of -1 sends every
+    input, edgeless ones included, through the Spark rounds."""
+    from featureextraction_jl_spark.operators import dedup
+
+    for bound in (dedup.DRIVER_CC_MAX_EDGES, -1):
+        monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", bound)
+        yield "driver" if bound >= 0 else "spark"
+
+
+def test_connected_components_chain_and_isolated(spark, monkeypatch):
     from featureextraction_jl_spark.operators.dedup import (
         connected_components, near_dedup_survivors)
 
-    # chain 0-1-2-3 (diameter 3 => needs >1 propagation round), pair 10-11,
-    # isolated 20
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
-    ids = spark.createDataFrame([(i,) for i in [0, 1, 2, 3, 10, 11, 20]],
-                                "doc_id long")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in connected_components(pairs, ids, "doc_id").collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 20: 20}
+    for path in _cc_paths(monkeypatch):
+        # chain 0-1-2-3 (diameter 3 => needs >1 propagation round), pair 10-11,
+        # isolated 20
+        pairs = spark.createDataFrame(
+            [(0, 1), (1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+        ids = spark.createDataFrame([(i,) for i in [0, 1, 2, 3, 10, 11, 20]],
+                                    "doc_id long")
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in connected_components(pairs, ids, "doc_id").collect()}
+        assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 20: 20}, path
 
-    docs = ids.withColumn("text", F.concat(F.lit("doc"), "doc_id"))
-    surv = {r["doc_id"] for r in near_dedup_survivors(docs, pairs).collect()}
-    assert surv == {0, 10, 20}
+        docs = ids.withColumn("text", F.concat(F.lit("doc"), "doc_id"))
+        surv = {r["doc_id"] for r in near_dedup_survivors(docs, pairs).collect()}
+        assert surv == {0, 10, 20}, path
 
 
-def test_connected_components_random_graphs_vs_union_find(spark):
+def test_connected_components_random_graphs_vs_union_find(spark, monkeypatch):
     """Randomized F11 gate: Spark min-label CC vs an independent union-find
     oracle on random sparse graphs (isolated nodes, multi-edges, chains)."""
     import random
@@ -416,12 +428,13 @@ def test_connected_components_random_graphs_vs_union_find(spark):
 
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-        got = {r["doc_id"]: r["cluster_id"]
-               for r in connected_components(pairs, ids, "doc_id").collect()}
-        assert got == expect, f"seed {seed}"
+        for path in _cc_paths(monkeypatch):
+            got = {r["doc_id"]: r["cluster_id"]
+                   for r in connected_components(pairs, ids, "doc_id").collect()}
+            assert got == expect, f"seed {seed}, {path} path"
 
 
-def test_connected_components_caches_edges_upstream_once(spark):
+def test_connected_components_caches_edges_upstream_once(spark, monkeypatch):
     """The edge frame is localCheckpoint-ed ONCE at entry (VERDICT r2 #1):
     each propagation round must NOT re-execute the upstream candidate-pair
     pipeline.  An accumulator-instrumented mapInPandas source counts
@@ -431,33 +444,35 @@ def test_connected_components_caches_edges_upstream_once(spark):
     would push the count to >= 6."""
     from featureextraction_jl_spark.operators.dedup import connected_components
 
-    acc = spark.sparkContext.accumulator(0)
-    base = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (3, 4)], "id_a long, id_b long").coalesce(1)
+    for path in _cc_paths(monkeypatch):
+        acc = spark.sparkContext.accumulator(0)
+        base = spark.createDataFrame(
+            [(0, 1), (1, 2), (2, 3), (3, 4)], "id_a long, id_b long").coalesce(1)
 
-    def mark(batches):
-        acc.add(1)
-        yield from batches
+        def mark(batches):
+            acc.add(1)
+            yield from batches
 
-    pairs = base.mapInPandas(mark, base.schema)
+        pairs = base.mapInPandas(mark, base.schema)
 
-    # ids is likewise eagerly checkpointed at entry (VERDICT r03 #5): its
-    # upstream (source -> distinct) must run exactly once, in the checkpoint
-    # job, not again inside round 1's first join.
-    acc_ids = spark.sparkContext.accumulator(0)
-    ids_base = spark.createDataFrame(
-        [(i,) for i in range(5)], "doc_id long").coalesce(1)
+        # ids runs exactly once: on the Spark path in the eager labels
+        # checkpoint (VERDICT r03 #5), not again inside round 1's first join;
+        # on the driver path in the collect below, the returned frame being
+        # lazy over ids.
+        acc_ids = spark.sparkContext.accumulator(0)
+        ids_base = spark.createDataFrame(
+            [(i,) for i in range(5)], "doc_id long").coalesce(1)
 
-    def mark_ids(batches):
-        acc_ids.add(1)
-        yield from batches
+        def mark_ids(batches):
+            acc_ids.add(1)
+            yield from batches
 
-    ids = ids_base.mapInPandas(mark_ids, ids_base.schema)
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in connected_components(pairs, ids, "doc_id").collect()}
-    assert got == {i: 0 for i in range(5)}
-    assert acc.value == 2, f"upstream evaluated {acc.value}x (expected 2: one checkpoint job, union reads source twice)"
-    assert acc_ids.value == 1, f"ids evaluated {acc_ids.value}x (expected 1: the eager labels checkpoint job)"
+        ids = ids_base.mapInPandas(mark_ids, ids_base.schema)
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in connected_components(pairs, ids, "doc_id").collect()}
+        assert got == {i: 0 for i in range(5)}, path
+        assert acc.value == 2, f"{path}: upstream evaluated {acc.value}x (expected 2: one checkpoint job, union reads source twice)"
+        assert acc_ids.value == 1, f"{path}: ids evaluated {acc_ids.value}x (expected 1)"
 
 
 def _signed64(v: int) -> int:
@@ -571,7 +586,7 @@ def test_simhash_pairs_compose_with_survivors(spark):
     assert surv == {0, 2}
 
 
-def test_connected_components_empty_ids_returns_empty(spark):
+def test_connected_components_empty_ids_returns_empty(spark, monkeypatch):
     """Code-review r05: a 0-row id set must converge trivially (empty
     labels frame), not spin to max_iter on a NULL convergence sum and
     raise a misleading non-convergence error."""
@@ -579,12 +594,14 @@ def test_connected_components_empty_ids_returns_empty(spark):
 
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     ids = spark.createDataFrame([], "doc_id long")
-    out = connected_components(pairs, ids, "doc_id")
-    assert out.columns == ["doc_id", "cluster_id"]
-    assert out.count() == 0
+    for path in _cc_paths(monkeypatch):
+        out = connected_components(pairs, ids, "doc_id")
+        assert out.columns == ["doc_id", "cluster_id"], path
+        assert out.count() == 0, path
 
 
-def test_connected_components_non_numeric_ids_raise_clearly(spark):
+def test_connected_components_non_numeric_ids_raise_clearly(spark,
+                                                            monkeypatch):
     """The sum-based convergence probe is only sound for numeric-castable
     labels; non-numeric string ids must fail loudly at round 1, not fake
     convergence or exhaust max_iter."""
@@ -592,11 +609,12 @@ def test_connected_components_non_numeric_ids_raise_clearly(spark):
 
     pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
     ids = spark.createDataFrame([("a",), ("b",), ("c",)], "doc_id string")
-    with pytest.raises(TypeError, match="numeric"):
-        connected_components(pairs, ids, "doc_id")
+    for _path in _cc_paths(monkeypatch):
+        with pytest.raises(TypeError, match="numeric"):
+            connected_components(pairs, ids, "doc_id")
 
 
-def test_connected_components_raises_when_unconverged(spark):
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
     """ADVICE r2: exiting via max_iter without a sum fixpoint must raise,
     not silently return under-merged labels."""
     from featureextraction_jl_spark.operators.dedup import connected_components
@@ -604,8 +622,9 @@ def test_connected_components_raises_when_unconverged(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "id_a long, id_b long")
     ids = spark.createDataFrame([(i,) for i in range(9)], "doc_id long")
-    with pytest.raises(RuntimeError, match="fixed point"):
-        connected_components(pairs, ids, "doc_id", max_iter=1)
+    for _path in _cc_paths(monkeypatch):
+        with pytest.raises(RuntimeError, match="fixed point"):
+            connected_components(pairs, ids, "doc_id", max_iter=1)
 
 
 def _cc_rounds(edges: list[tuple[int, int]], ids: list[int]) -> int:
@@ -625,11 +644,16 @@ def _cc_rounds(edges: list[tuple[int, int]], ids: list[int]) -> int:
         prev = sum(label.values())
 
 
-def test_connected_components_one_action_per_round(spark, spark_jobs):
+def test_connected_components_one_action_per_round(spark, spark_jobs,
+                                                   monkeypatch):
     """The convergence probe rides each round's eager checkpoint as an
-    Observation: with AQE off (so an action is one job) a chain costs the
-    two entry checkpoints plus ONE job per round, not two."""
+    Observation: with AQE off (so an action is one job) a chain on the
+    Spark path costs the two entry checkpoints plus ONE job per round, not
+    two."""
+    from featureextraction_jl_spark.operators import dedup
     from featureextraction_jl_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", -1)
 
     n = 33
     edges = [(i, i + 1) for i in range(n - 1)]
@@ -648,6 +672,96 @@ def test_connected_components_one_action_per_round(spark, spark_jobs):
         spark.conf.set(key, old)
     assert jobs == 2 + rounds, (jobs, rounds)
     assert {r["cluster_id"] for r in out[0].collect()} == {0}
+
+
+def test_connected_components_driver_path_two_jobs(spark, spark_jobs):
+    """A small integral graph finishes on the driver: with AQE off, the
+    edge checkpoint and its Arrow collect are the only jobs, whatever the
+    chain's length (its round count)."""
+    from featureextraction_jl_spark.operators.dedup import connected_components
+
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    for n in (5, 65):
+        edges = [(i, i + 1) for i in range(n - 1)]
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        spark.conf.set(key, "false")
+        try:
+            out = []
+            jobs = spark_jobs(lambda: out.append(
+                connected_components(pairs, ids, "doc_id")))
+        finally:
+            spark.conf.set(key, old)
+        assert jobs == 2, (n, jobs, _cc_rounds(edges, list(range(n))))
+        assert {r["cluster_id"] for r in out[0].collect()} == {0}
+
+
+def _cc_result(pairs, ids, bound, **kw):
+    """Rows and schema of one connected_components call with the driver
+    bound set to ``bound``, or the exception type and message it raised."""
+    from featureextraction_jl_spark.operators import dedup
+
+    old = dedup.DRIVER_CC_MAX_EDGES
+    dedup.DRIVER_CC_MAX_EDGES = bound
+    try:
+        out = dedup.connected_components(pairs, ids, "doc_id", **kw)
+        rows = sorted(((r[0] is None, r[0], r[1]) for r in out.collect()),
+                      key=lambda t: (t[0], t[1] or 0))
+        return out.schema, rows
+    except (RuntimeError, TypeError) as e:
+        return type(e), str(e)
+    finally:
+        dedup.DRIVER_CC_MAX_EDGES = old
+
+
+@pytest.mark.parametrize("edges,eschema,ids,ischema", [
+    # chain, pair, isolated id
+    ([(0, 1), (1, 2), (2, 3), (10, 11)], "id_a long, id_b long",
+     [0, 1, 2, 3, 10, 11, 20], "doc_id long"),
+    # pair-only nodes: a pair-only component minimum and a component with
+    # no id at all
+    ([(5, 3), (7, 8), (0, 100)], "id_a long, id_b long", [0, 5, 9],
+     "doc_id long"),
+    ([(0, 1)], "id_a long, id_b long", [0, 1, None, 2], "doc_id long"),
+    ([(0, None), (None, 1), (1, 2)], "id_a long, id_b long",
+     [0, 1, 2, None], "doc_id long"),
+    ([(0, 1), (1, 2)], "id_a int, id_b int", [0, 1, 2, 3], "doc_id int"),
+    ([(0, 1), (1, 2)], "id_a int, id_b int", [0, 1, 2, 3], "doc_id long"),
+    ([(-5, 3), (3, -7)], "id_a long, id_b long", [-5, 3, -7, 0],
+     "doc_id long"),
+    ([], "id_a long, id_b long", [1, 2], "doc_id long"),
+    ([], "id_a long, id_b long", [], "doc_id long"),
+    ([("a", "b")], "id_a string, id_b string", ["a", "b", "c"],
+     "doc_id string"),
+], ids=["chain", "pair_only", "null_id", "null_endpoint", "int", "int_long",
+        "negative", "edgeless", "empty", "string"])
+def test_connected_components_paths_agree(spark, edges, eschema, ids,
+                                          ischema):
+    """The driver path and the Spark path give the same rows and schema,
+    or raise the same error, at the same ``max_iter`` — NULL ids, NULL
+    pair endpoints, pair-only nodes, 0-row and edgeless inputs included."""
+    pairs = spark.createDataFrame(edges, eschema)
+    idf = spark.createDataFrame([(i,) for i in ids], ischema)
+    for max_iter in (20, 1, 0):
+        assert (_cc_result(pairs, idf, 1 << 20, max_iter=max_iter)
+                == _cc_result(pairs, idf, -1, max_iter=max_iter)), \
+            max_iter
+
+
+def test_connected_components_pair_only_nodes_are_seeded(spark, monkeypatch):
+    """Every pair endpoint is a node seeded with its own id: a pair-only
+    node can be its component's minimum, and a component with no id in
+    ``ids`` still appears."""
+    from featureextraction_jl_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(5, 3), (7, 8), (0, 100)],
+                                  "id_a long, id_b long")
+    ids = spark.createDataFrame([(0,), (5,), (9,)], "doc_id long")
+    for path in _cc_paths(monkeypatch):
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in connected_components(pairs, ids, "doc_id").collect()}
+        assert got == {0: 0, 100: 0, 3: 3, 5: 3, 7: 7, 8: 7, 9: 9}, path
 
 
 def test_simhash_null_text_and_duplicate_ids_keep_row_semantics(spark):
@@ -819,7 +933,8 @@ def test_exact_dedup_digest_pair_not_functionally_dependent(spark):
     assert {r["doc_id"] for r in exact_dedup(dup).collect()} == {1, 3}
 
 
-def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
+def test_connected_components_reliable_checkpoint_dir(spark, tmp_path,
+                                                     monkeypatch):
     """VERDICT r04 next #4: with a checkpoint dir configured the iterative
     lineage truncation must use RELIABLE checkpoint() (executor-loss-safe on
     a real cluster) and produce output identical to the localCheckpoint
@@ -832,24 +947,26 @@ def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
         [(0, 1), (1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
     ids = spark.createDataFrame([(i,) for i in [0, 1, 2, 3, 10, 11, 20]],
                                 "doc_id long")
-    local = {r["doc_id"]: r["cluster_id"]
-             for r in connected_components(pairs, ids, "doc_id").collect()}
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None  # precondition: default is local
-    sc.setCheckpointDir(str(tmp_path / "ccdir"))
-    try:
-        rel = {r["doc_id"]: r["cluster_id"]
-               for r in connected_components(pairs, ids, "doc_id").collect()}
-        assert rel == local == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 20: 20}
-        written = []
-        for root, _dirs, files in os.walk(tmp_path / "ccdir"):
-            written += files
-        assert written, "no reliable checkpoint files were written"
-    finally:
-        # unset so later tests in the shared session stay on localCheckpoint
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            sc._jvm.scala.Option.apply(None))
-        assert sc.getCheckpointDir() is None
+    for path in _cc_paths(monkeypatch):
+        local = {r["doc_id"]: r["cluster_id"]
+                 for r in connected_components(pairs, ids, "doc_id").collect()}
+        sc = spark.sparkContext
+        assert sc.getCheckpointDir() is None  # precondition: default is local
+        sc.setCheckpointDir(str(tmp_path / path))
+        try:
+            rel = {r["doc_id"]: r["cluster_id"]
+                   for r in connected_components(pairs, ids, "doc_id").collect()}
+            assert rel == local == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10,
+                                    20: 20}, path
+            written = []
+            for root, _dirs, files in os.walk(tmp_path / path):
+                written += files
+            assert written, f"{path}: no reliable checkpoint files were written"
+        finally:
+            # unset so later tests in the shared session stay on localCheckpoint
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+                sc._jvm.scala.Option.apply(None))
+            assert sc.getCheckpointDir() is None
 
 
 def test_ngram_default_caps_degenerate_corpus(spark):
