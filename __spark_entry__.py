@@ -25,7 +25,10 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from featureextraction_jl_spark.functions.moments import compute_moments
+from featureextraction_jl_spark.functions.moments import (
+    compute_grouped_moments,
+    compute_moments,
+)
 from featureextraction_jl_spark.functions.pca import fit_pca, inverse_udf, project_udf
 from featureextraction_jl_spark.functions.text import (
     LANG_STOPWORDS,
@@ -656,22 +659,22 @@ def q35_pca_project(spark, sf):
 
 
 def q36_grouped_moments(spark, sf):
-    """A3 grouped moments + E1 skew salting at the driver surface.
+    """A3 grouped moments at the driver surface, through the one moments
+    core (``compute_grouped_moments``).
 
-    ``salted_grouped_moments`` with a heavy-threshold low enough (5k rows)
-    that every l_returnflag group actually takes the salted two-stage path
-    at sf>=0.01 — so the driver's value check covers salting, not just the
-    pytest equivalence test.  The Chan merge is exact, so salted moments
-    match DuckDB's AVG/VAR_SAMP/COVAR_SAMP to well under the 6-dp rounding.
+    Each lineitem partition emits one (n, mean, m2) partial per
+    l_returnflag it holds and only those partials are shuffled to the
+    per-flag re-merge: the partition id is the salt (E1), so the driver's
+    value check covers the partial + re-merge path.  The Chan merge is
+    exact, so the moments match DuckDB's AVG/VAR_SAMP/COVAR_SAMP to well
+    under the 6-dp rounding.
     """
-    from featureextraction_jl_spark.plans.salting import salted_grouped_moments
     li = _t(spark, sf, "lineitem")
     vecs = li.select(
         "l_returnflag",
         F.array(F.col("l_quantity").cast("double"),
                 F.col("l_discount").cast("double")).alias("v"))
-    m = salted_grouped_moments(vecs, "l_returnflag", "v",
-                               heavy_threshold=5000, num_salts=8)
+    m = compute_grouped_moments(vecs, ["l_returnflag"], "v")
     nm1 = (F.col("n") - 1).cast("double")
     return m.select(
         "l_returnflag", "n",

@@ -19,8 +19,8 @@ north_rule.
 Design rules (BASELINE.json:6):
   * DataFrame/Catalyst-first; vectorized Arrow/pandas UDFs only where
     built-ins can't express the semantics; never a per-row Python loop.
-  * Moments are mergeable (n, s, S) partials — treeAggregate-style —
-    so skew salting and two-phase aggregation are exact.
+  * Moments are mergeable (n, mean, M2) partials — treeAggregate-style —
+    so per-partition partials and their re-merge are exact.
   * Zero temporal leakage: every feature at (conv_id, ts) is a function of
     turns with ts' <= ts only.
 """

@@ -11,7 +11,6 @@ from featureextraction_jl_spark.functions.moments import (  # noqa: F401
     batch_moments,
     merge_moments,
     compute_moments,
-    compute_moments_bucketed,
     compute_grouped_moments,
 )
 from featureextraction_jl_spark.functions.pca import (  # noqa: F401

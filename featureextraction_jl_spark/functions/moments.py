@@ -7,43 +7,55 @@ n-1).  Here the accumulator is the *mergeable* centered-moment triple
     (n, mean, M2)    with    M2 = sum_i (x_i - mean)(x_i - mean)^T
 
 merged pairwise with the Chan/Golub/LeVeque update (SURVEY.md §1.4.4), which
-is associative and commutative up to float round-off — this exactness under
-arbitrary splits is what makes skew salting (plans/salting.py) and
-treeAggregate partials correct.
+is associative and commutative up to float round-off — so the moments of a
+group are exact under any split of its rows into partials.
 
-Distributed accumulation, Arrow-vectorized (no per-row Python):
+One moments core, two Arrow workers (no per-row Python, no pandas group):
 
-* :func:`compute_moments` — the mapInArrow worker Chan-merges every Arrow
-  batch of its partition in-worker and emits ONE partial row per PARTITION
-  (1 + p + p*p doubles); those partials are collected and Chan-merged on
-  the driver when the partition count is small, and reduced through
-  :func:`compute_moments_bucketed` above ``_BUCKETED_THRESHOLD`` partitions
-  so driver traffic is O(buckets * p^2) — constant in input size — at any
-  scale (VERDICT r03 #1: the per-batch collect was ~10^8 rows ≈ 500 GB at
-  the 10^12-turn design point; the per-partition worker merge plus the
-  bucketed reduce removes both the batch and the partition factor).
-* :func:`compute_moments_bucketed` — two-level DataFrame reduction: partials
-  -> groupBy(partition_id % buckets) applyInPandas Chan-merge on executors
-  -> collect <= buckets rows.  One tiny shuffle of O(partitions * p^2)
-  bytes, never row data: the executor-side, treeAggregate-style reduce.
+* the PARTIAL worker (``_arrow_partials``, a mapInArrow over the key columns
+  plus one array<double> column) Chan-merges every Arrow batch of its
+  partition per group key and emits ONE ``(keys..., n, mean, m2)`` row per
+  (partition, group).  With no key columns it emits one row per partition.
+* the RE-MERGE worker (``_arrow_remerge``, a mapInArrow behind
+  ``repartition(*keys)``) folds every partial row of a key into one.
+
+The partition id acts as the salt: a mega-key's rows become one O(p^2)
+partial per partition that holds them, and only partials are shuffled, so
+no group is ever materialized in one task and no heavy-key probe is needed
+(map-side partial aggregation).  Every caller goes through these two
+workers:
+
+* :func:`compute_grouped_moments` — partials, then the keyed re-merge: one
+  moment row per group key (windowed PCA, q36).
+* :func:`compute_moments` — keyless partials collected and Chan-merged on
+  the driver; above ``_BUCKETED_THRESHOLD`` source partitions the partials
+  first go through the re-merge keyed on ``spark_partition_id() % 64``, so
+  driver traffic stays O(64 * p^2) at any scale.
 
 No JVM-expression form: raw-sum aggregate expressions lose the Chan
 update's cancellation protection and measured slower than the Arrow
 partials (25.8 s vs 19.4 s at local[8], ``BENCH/moments_ab.log``).
-
-Grouped/windowed variant: :func:`compute_grouped_moments` emits one moment
-row per group key via ``applyInPandas`` (feeds windowed PCA features).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 
 @dataclass
@@ -94,6 +106,12 @@ def merge_moments(a: Moments, b: Moments) -> Moments:
         return b
     if b.n == 0:
         return a
+    if a.mean.shape != b.mean.shape:
+        # NumPy would broadcast a 1-vector against a p-vector silently
+        raise ValueError(
+            f"ragged vectors: cannot merge moments of dimension "
+            f"{a.mean.shape[0]} and {b.mean.shape[0]} — moments require "
+            "fixed-dimension vectors (filter or pad upstream)")
     n = a.n + b.n
     delta = b.mean - a.mean
     mean = a.mean + delta * (b.n / n)
@@ -102,45 +120,51 @@ def merge_moments(a: Moments, b: Moments) -> Moments:
 
 
 # ---------------------------------------------------------------------------
-# Distributed accumulation
+# The moments core: partial worker + re-merge worker
 # ---------------------------------------------------------------------------
 
-_PARTIAL_SCHEMA = "n long, mean array<double>, m2 array<double>"
+_MOMENT_FIELDS = [StructField("n", LongType()),
+                  StructField("mean", ArrayType(DoubleType())),
+                  StructField("m2", ArrayType(DoubleType()))]
 
 
-def _batch_to_matrix(col) -> "np.ndarray | None":
-    """Arrow list column -> (n, p) float64 matrix via the flat values buffer
-    (~5x faster than np.stack over per-row object arrays, measured
-    in-sandbox).  None when no valid rows remain.
+def _batch_to_matrix(col) -> "tuple[np.ndarray | None, np.ndarray | None]":
+    """Arrow list column -> ((n, p) float64 matrix, kept row positions).
 
-    Null semantics (shared with the scalar-column path): rows that are NULL
-    or contain a null OR NaN element are DROPPED
-    before accumulation.  Element nulls are invisible to the list-level
-    ``null_count`` and np.asarray would render them as NaN, silently
-    poisoning every downstream moment — they must be masked via the child
-    validity.  Ragged batches raise: the old ``flat.size % n == 0``
+    The matrix comes from the flat values buffer (~5x faster than np.stack
+    over per-row object arrays, measured in-sandbox) and is None when no
+    valid row remains.  The positions index the rows of ``col`` that made
+    it into the matrix, in order, so key columns stay aligned; they are
+    None when every row was kept.
+
+    THE drop rule of every moments path: a row that is NULL or contains a
+    null OR NaN element never contributes.  Element nulls are invisible to
+    the list-level ``null_count`` and np.asarray would render them as NaN,
+    silently poisoning every downstream moment — they are masked via the
+    child validity.  Ragged batches raise: the old ``flat.size % n == 0``
     heuristic silently mis-reshaped any ragged batch whose total element
     count happened to divide the row count, mixing values across rows.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
+    kept = None
+
+    def keep(mask):
+        nonlocal col, kept
+        col = col.filter(pa.array(mask))
+        kept = np.flatnonzero(mask) if kept is None else kept[mask]
+
     if col.null_count:
-        col = col.drop_null()
-    if len(col) == 0:
-        return None
+        keep(np.asarray(col.is_valid()))
     flat = pc.list_flatten(col)
     if flat.null_count:
-        child_null = np.asarray(pc.is_null(flat))
-        bad = np.unique(np.asarray(pc.list_parent_indices(col))[child_null])
         mask = np.ones(len(col), dtype=bool)
-        mask[bad] = False
-        col = col.filter(pa.array(mask))
-        if len(col) == 0:
-            return None
+        mask[np.asarray(pc.list_parent_indices(col))[
+            np.asarray(pc.is_null(flat))]] = False
+        keep(mask)
         flat = pc.list_flatten(col)
+    if len(col) == 0:
+        return None, kept
     lens = np.asarray(pc.list_value_length(col))
     if not (lens == lens[0]).all():
         raise ValueError(
@@ -148,88 +172,156 @@ def _batch_to_matrix(col) -> "np.ndarray | None":
             "— moments require fixed-dimension vectors (filter or pad "
             "upstream)")
     m = np.asarray(flat, dtype=np.float64).reshape(len(col), int(lens[0]))
-    # genuine NaN VALUES (Arrow-valid, not null) poison moments exactly like
-    # masked nulls would — drop those rows too, so every moments path
-    # (Arrow, grouped/salted/streaming pandas kernels, where NaN and null
-    # are indistinguishable anyway) shares ONE contract: rows with a null
-    # OR NaN element never contribute.
-    m = m[~np.isnan(m).any(axis=1)]
-    return m if len(m) else None
+    # genuine NaN VALUES are Arrow-valid (not null) but poison moments
+    # exactly like masked nulls would
+    nan = np.isnan(m).any(axis=1)
+    if nan.any():
+        keep(~nan)
+        m = m[~nan]
+    return (m if len(m) else None), kept
 
 
-def _emit_partial(m: "Moments | None"):
-    """One (n, mean, flattened m2) RecordBatch, or nothing for an empty/
-    all-null partition (the reduce side treats absence as the zero moment)."""
-    import pyarrow as pa
+def _canonical(col: pa.Array) -> pa.Array:
+    """Float keys as Spark's groupBy sees them: -0.0 is 0.0 and every NaN is
+    one NaN (Arrow hashes both bitwise).  Other types pass through."""
+    if not pa.types.is_floating(col.type):
+        return col
+    return pc.if_else(pc.is_nan(col), pa.scalar(float("nan"), col.type),
+                      pc.add(col, pa.scalar(0.0, col.type)))
 
-    if m is None or m.n == 0:
+
+def _group_index(keys: list) -> "tuple[np.ndarray, np.ndarray]":
+    """(group code of every row, first row of every group) over the key
+    arrays.  NULL is a key value of its own, distinct from NaN — as in
+    Spark's groupBy."""
+    codes = None
+    for col in keys:
+        enc = pc.dictionary_encode(col, null_encoding="encode")
+        idx = np.asarray(enc.indices, dtype=np.int64)
+        # mixed radix, re-densified per column so it cannot overflow
+        codes = idx if codes is None else np.unique(
+            codes * len(enc.dictionary) + idx, return_inverse=True)[1]
+    _, first, codes = np.unique(codes, return_index=True, return_inverse=True)
+    return codes, first
+
+
+def _split_by_code(codes: np.ndarray, n_groups: int) -> list:
+    """Row positions of each group, in group-code order."""
+    order = np.argsort(codes, kind="stable")
+    return np.split(order, np.searchsorted(codes[order],
+                                           np.arange(1, n_groups)))
+
+
+def _fold(keys: "list | None", moms: list) -> "tuple[list | None, list]":
+    """Chan-merge the moments that share a key: (key arrays of the groups,
+    one Moments per group).  ``keys`` None is the keyless fold."""
+    if keys is None:
+        return None, [reduce(merge_moments, moms)]
+    codes, first = _group_index(keys)
+    return ([k.take(first) for k in keys],
+            [reduce(merge_moments, [moms[i] for i in ix])
+             for ix in _split_by_code(codes, len(first))])
+
+
+def _list_array(vecs: list) -> pa.Array:
+    offsets = np.zeros(len(vecs) + 1, dtype=np.int32)
+    np.cumsum([len(v) for v in vecs], out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets),
+                                    pa.array(np.concatenate(vecs)))
+
+
+def _emit(names: list, keys: "list | None", moms: list) -> pa.RecordBatch:
+    """One (keys..., n, mean, flattened m2) row per group."""
+    return pa.RecordBatch.from_arrays(
+        [*(keys or []),
+         pa.array([m.n for m in moms], pa.int64()),
+         _list_array([m.mean for m in moms]),
+         _list_array([m.m2.ravel() for m in moms])],
+        names=[*names, "n", "mean", "m2"])
+
+
+def _arrow_partials(batches, n_keys: int):
+    """mapInArrow PARTIAL worker over (keys..., vec): Chan-merge every Arrow
+    batch of this partition per group key, emit ONE (keys..., n, mean,
+    flattened m2) row per (partition, group).
+
+    Worker state is O(groups * p^2) whatever the partition size.  With no
+    key columns this is one row per partition and no per-row work beyond
+    ``_batch_to_matrix``: the first level of the two-level reduction that
+    keeps the flagship's moment pass off the driver at design scale.  Float
+    NaN keys stay distinct from NULL here; the re-merge renders them."""
+    names, keys, moms = [], [], []
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        x, kept = _batch_to_matrix(b.column(n_keys))
+        if x is None:          # batch had no valid vectors
+            continue
+        if not n_keys:
+            moms.append(batch_moments(x))
+            continue
+        names = b.schema.names[:n_keys]
+        k = [_canonical(b.column(i)) for i in range(n_keys)]
+        if kept is not None:
+            k = [c.take(kept) for c in k]
+        codes, first = _group_index(k)
+        keys.append([c.take(first) for c in k])
+        moms += [batch_moments(x[ix])
+                 for ix in _split_by_code(codes, len(first))]
+    # a partition without a valid row emits nothing: the reduce side treats
+    # absence as the zero moment
+    if moms:
+        cols = ([pa.concat_arrays(c) for c in zip(*keys)] if n_keys
+                else None)
+        yield _emit(names, *_fold(cols, moms))
+
+
+def _arrow_remerge(batches, n_keys: int):
+    """mapInArrow RE-MERGE worker behind ``repartition(*keys)``: fold every
+    partial row of a key into one.  A float NaN key stays a group of its
+    own and is emitted as NULL, so a NULL and a NaN group both come out
+    with a NULL key (``fit_windowed_pca`` raises on that collision)."""
+    parts = [b for b in batches if b.num_rows]
+    if not parts:
         return
-    yield pa.RecordBatch.from_pydict({
-        "n": pa.array([m.n], pa.int64()),
-        "mean": pa.array([m.mean.tolist()], pa.list_(pa.float64())),
-        "m2": pa.array([m.m2.ravel().tolist()], pa.list_(pa.float64())),
-    })
+    t = pa.Table.from_batches(parts).combine_chunks()
+    keys = [c.chunk(0) for c in t.columns[:n_keys]]
+    keys, moms = _fold(keys, _decode(t))
+    keys = [pc.if_else(pc.is_nan(k), pa.scalar(None, k.type), k)
+            if pa.types.is_floating(k.type) else k for k in keys]
+    yield _emit(t.schema.names[:n_keys], keys, moms)
 
 
-def _arrow_partials(batches, col_idx: int = 0):
-    """mapInArrow worker: Chan-merge every Arrow batch of this partition
-    in-worker, emit ONE (n, mean, flattened m2) row per PARTITION.
+def _decode(t: pa.Table) -> list:
+    """The (n, mean, m2) columns of a partial table -> one Moments per row."""
+    def rows(c):
+        flat = pc.list_flatten(t.column(c)).to_numpy()
+        return np.split(flat, np.cumsum(
+            pc.list_value_length(t.column(c)).to_numpy())[:-1])
 
-    The in-worker merge keeps worker state at O(p^2) regardless of
-    partition size and cuts downstream partial rows from O(batches) to
-    O(partitions) — the first level of the two-level reduction that keeps
-    the flagship's moment pass off the driver at design scale."""
-    acc = None
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        x = _batch_to_matrix(b.column(col_idx))
-        if x is None:          # batch had no valid (non-null) vectors
-            continue
-        m = batch_moments(x)
-        acc = m if acc is None else merge_moments(acc, m)
-    yield from _emit_partial(acc)
+    return [Moments(int(n), mean, m2.reshape(len(mean), len(mean)))
+            for n, mean, m2 in zip(t.column("n").to_numpy(), rows("mean"),
+                                   rows("m2"))]
 
 
-def _arrow_partials_cols(batches):
-    """mapInArrow worker over p scalar double columns — column_stack is
-    zero-copy per column (no per-row array objects anywhere).
-
-    Null semantics mirror the array-column path (_batch_to_matrix): rows
-    containing any null are dropped before the moments are computed —
-    np.asarray alone would render Arrow nulls as NaN and silently poison
-    every moment (pinned in tests/test_kernels.py).
-    """
-    import pyarrow as pa
-
-    acc = None
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        cols = [b.column(i) for i in range(b.num_columns)]
-        if any(c.null_count for c in cols):
-            keep = np.ones(b.num_rows, dtype=bool)
-            for c in cols:
-                keep &= np.asarray(c.is_valid())
-            cols = [c.filter(pa.array(keep)) for c in cols]
-            if len(cols[0]) == 0:
-                continue
-        x = np.column_stack([np.asarray(c, dtype=np.float64) for c in cols])
-        m = batch_moments(x)
-        acc = m if acc is None else merge_moments(acc, m)
-    yield from _emit_partial(acc)
+def _partial_schema(df: DataFrame, keys) -> StructType:
+    # nullable keys: the re-merge emits a float NaN key as NULL
+    return StructType([StructField(c, df.schema[c].dataType, True)
+                       for c in keys] + _MOMENT_FIELDS)
 
 
-def _partials_df(df: DataFrame, vec_col) -> DataFrame:
+def _partials_df(df: DataFrame, vec_col: str, keys=()) -> DataFrame:
     # Select-before-map: column pruning can't see inside the UDF, so prune
-    # explicitly (SURVEY.md §4 column-pruning caveat).  A list of scalar
-    # double columns takes the fully-columnar path (preferred: the plan
-    # never builds a per-row array); a single array<double> column reshapes
-    # the flat Arrow values buffer.
-    if isinstance(vec_col, (list, tuple)):
-        return df.select(*vec_col).mapInArrow(_arrow_partials_cols,
-                                              schema=_PARTIAL_SCHEMA)
-    return df.select(vec_col).mapInArrow(_arrow_partials, schema=_PARTIAL_SCHEMA)
+    # explicitly (SURVEY.md §4 column-pruning caveat).
+    return df.select(*keys, vec_col).mapInArrow(
+        partial(_arrow_partials, n_keys=len(keys)),
+        schema=_partial_schema(df, keys))
+
+
+def _remerge(partials: DataFrame, keys) -> DataFrame:
+    """The one shuffle of the core: partial rows only, hashed by key."""
+    return partials.repartition(*keys).mapInArrow(
+        partial(_arrow_remerge, n_keys=len(keys)), schema=partials.schema)
 
 
 def _row_to_moments(row) -> Moments:
@@ -239,16 +331,12 @@ def _row_to_moments(row) -> Moments:
 
 
 def merge_moment_rows(rows) -> Moments:
-    """Chan-fold (n, mean, m2) partial rows into one Moments.
+    """Chan-fold (n, mean, m2) partial rows into one Moments on the driver.
 
-    Accepts a (small) DataFrame of partial rows — collected on the driver —
-    or any iterable of rows that index by field name (Spark Rows, pandas
-    rows).  THE one decode+fold for partial-moment rows, shared by the
-    driver collect path, the bucketed-reduce kernel, and the salted
-    re-merge (round-5 review: three hand-rolled copies of the 'read
-    n/mean/m2, reshape by p, merge' loop had appeared — a partial-row
-    format change must land everywhere at once).  Exact under any grouping
-    because the Chan merge is associative/commutative."""
+    Accepts a (small) DataFrame of partial rows — collected here — or any
+    iterable of rows that index by field name (Spark Rows, pandas rows).
+    Exact under any grouping because the Chan merge is
+    associative/commutative."""
     if isinstance(rows, DataFrame):
         rows = rows.select("n", "mean", "m2").collect()
     acc = Moments(0, np.zeros(0), np.zeros((0, 0)))
@@ -257,78 +345,68 @@ def merge_moment_rows(rows) -> Moments:
     return acc
 
 
-#: partition count above which compute_moments inserts the executor-side
-#: bucketed reduce instead of collecting per-partition partials straight to
-#: the driver.  Below it the collect is < ~2048 * 5 KB ≈ 10 MB (p=25) and
-#: the extra shuffle stage would only add latency; above it the bucketed
-#: path keeps driver traffic at O(buckets * p^2) no matter how many
-#: partitions the 10^12-turn scan has.
+#: partition count above which compute_moments re-merges the partials on
+#: executors before collecting them.  Below it the collect is < ~2048 * 5 KB
+#: ≈ 10 MB (p=25) and the extra shuffle stage would only add latency; above
+#: it the re-merge keeps driver traffic at O(_BUCKETS * p^2) no matter how
+#: many partitions the 10^12-turn scan has.
 _BUCKETED_THRESHOLD = 2048
+_BUCKETS = 64
 
 
-def compute_moments(df: DataFrame, vec_col) -> Moments:
-    """Scale-adaptive moment accumulation: Arrow partials -> Chan-merge.
+def compute_moments(df: DataFrame, vec_col: str) -> Moments:
+    """Global moments of an array<double> column: keyless partials -> driver
+    Chan-merge.
 
-    The mapInArrow worker already merges its partition's batches in-worker,
-    so the partial frame has ONE row per partition.  With at most
+    The partial worker merges its partition's batches in-worker, so the
+    partial frame has ONE row per partition.  With at most
     ``_BUCKETED_THRESHOLD`` source partitions those rows are collected and
     merged on the driver (O(partitions * p^2) driver bytes, no extra
-    stage); above it they go through the executor-side
-    :func:`compute_moments_bucketed` (O(buckets * p^2) driver bytes — the
-    design-scale path).  The probe is ``df.rdd.getNumPartitions()``.  It is
-    NOT free when ``df`` ends in a shuffle: under AQE, building the RDD
-    runs the map stages below the last exchange as a Spark job (on
-    ``feature_job``'s chain that is the as-of exchange: 0.23–0.33 s warm
-    at perfbench seed 61 on a 4-core VM), and the partials' collect then
-    runs that stage again.
-
-    ``vec_col``: an array<double> column name, or a list of scalar double
-    column names (faster — fully columnar Arrow transfer).
+    stage); above it they first go through the re-merge worker keyed on
+    ``spark_partition_id() % 64`` (one tiny shuffle of partials, never row
+    data), so the driver folds at most 64 rows.  The probe is
+    ``df.rdd.getNumPartitions()``.  It is NOT free when ``df`` ends in a
+    shuffle: under AQE, building the RDD runs the map stages below the last
+    exchange as a Spark job (on ``feature_job``'s chain that is the as-of
+    exchange: 0.23–0.33 s warm at perfbench seed 61 on a 4-core VM), and
+    the partials' collect then runs that stage again.
     """
+    partials = _partials_df(df, vec_col)
     if df.rdd.getNumPartitions() > _BUCKETED_THRESHOLD:
-        return compute_moments_bucketed(df, vec_col)
-    return merge_moment_rows(_partials_df(df, vec_col).collect())
+        partials = _remerge(partials.select(
+            (F.spark_partition_id() % F.lit(_BUCKETS)).alias("_b"),
+            "n", "mean", "m2"), ["_b"])
+    return merge_moment_rows(partials.collect())
 
 
-def compute_moments_bucketed(df: DataFrame, vec_col,
-                             buckets: int = 64) -> Moments:
-    """Two-level executor-side reduction of the per-partition partials.
+def compute_grouped_moments(df: DataFrame, group_cols: list[str],
+                            vec_col: str) -> DataFrame:
+    """Per-group moments: one (group cols..., n, mean, m2) row per key.
 
-    Level 1: each partial row is keyed by ``spark_partition_id() % buckets``
-    (locality-preserving, no hash needed) and the <= ``buckets`` groups are
-    Chan-merged on executors via applyInPandas — the shuffle moves only
-    O(partitions * p^2) bytes of moments.  Level 2: the driver collects the
-    <= ``buckets`` bucket rows and finishes the merge — O(buckets * p^2)
-    driver traffic, independent of both row and partition count.  Exact
-    under any grouping because the Chan merge is associative/commutative.
+    Partial worker, then the re-merge behind ``repartition(*group_cols)``:
+    the only exchange moves O(partitions * groups * p^2) bytes of partials,
+    never row data, and no group is held in one frame, so mega-groups need
+    no salting.  NULL keys are real groups; a float NaN key is a group of
+    its own, emitted as NULL.  Feeds windowed PCA/whitening (group =
+    (conv_id, window) or a time bucket).
     """
-    partials = _partials_df(df, vec_col).withColumn(
-        "_b", F.spark_partition_id() % F.lit(buckets))
-
-    def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = merge_moment_rows(row for _, row in pdf.iterrows())
-        return pd.DataFrame({"n": [acc.n], "mean": [acc.mean.tolist()],
-                             "m2": [acc.m2.ravel().tolist()]})
-
-    merged = partials.groupBy("_b").applyInPandas(
-        _merge_bucket, schema=_PARTIAL_SCHEMA)
-    return merge_moment_rows(merged.collect())
+    return _remerge(_partials_df(df, vec_col, group_cols), group_cols)
 
 
 def pandas_clean_stack(vals: "pd.Series") -> "np.ndarray | None":
-    """pandas twin of ``_batch_to_matrix`` for applyInPandas group kernels:
-    drop NULL rows AND rows containing a null element, raise on ragged
-    groups.  Returns None when no valid rows remain.
+    """pandas twin of ``_batch_to_matrix`` for the streaming state kernel
+    (streaming/state.py): drop NULL rows AND rows containing a null
+    element, raise on ragged groups.  Returns None when no valid rows
+    remain.
 
     Without the element mask, a single ``[1.0, null, ...]`` vector arrives
     as NaN and silently poisons its group's mean/M2 (NaN covariance ->
     eigh LinAlgError or a NaN model in the windowed-PCA fit) — the exact
     hazard _batch_to_matrix documents and masks on the global path.
     Genuine NaN VALUES are dropped under the same rule: every moments path
-    (Arrow, pandas kernels) shares the contract "rows with a null or
-    NaN element never contribute", so the pinned cross-path equivalences
-    hold on NaN-bearing data too.  Both group kernels (grouped + salted
-    partial) share this helper, so their equivalence is by construction.
+    (Arrow core, streaming state) shares the contract "rows with a null or
+    NaN element never contribute", so the pinned stream == batch
+    equivalence holds on NaN-bearing data too.
     """
     vals = vals.dropna()
     if len(vals) == 0:
@@ -371,40 +449,3 @@ def masked_vector_apply(s: "pd.Series", fn) -> "pd.Series":
     idx = s.index[mask][good]
     out[idx] = pd.Series(list(fn(x[good])), index=idx)
     return out
-
-
-def compute_grouped_moments(df: DataFrame, group_cols: list[str], vec_col: str) -> DataFrame:
-    """Per-group moments via applyInPandas: one (group, n, mean, m2) row each.
-
-    Feeds windowed PCA/whitening (group = (conv_id, window) or a time bucket).
-    Group state is O(p^2), not O(group rows): the incoming group frame is
-    reduced immediately.  Mega-groups should be pre-salted (plans/salting.py)
-    because applyInPandas materializes each group in memory (SURVEY.md §4
-    spill row).
-    """
-    out_schema = ", ".join(f"{c} {t}" for c, t in
-                           [(c, dict(df.dtypes)[c]) for c in group_cols]) \
-        + ", n long, mean array<double>, m2 array<double>"
-
-    def reduce_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # pandas_clean_stack: NULL vectors AND vectors with a null element
-        # dropped, ragged groups raise — the same semantics as every other
-        # moments path; a group with no valid vectors emits nothing.
-        x = pandas_clean_stack(pdf[vec_col])
-        if x is None:
-            # object dtype: Arrow cannot convert an empty float64 ndarray
-            # column to list<double>
-            return pd.DataFrame({c: pd.Series([], dtype=object) for c in
-                                 [*group_cols, "n", "mean", "m2"]})
-        m = batch_moments(x)
-        row = {c: [k] for c, k in zip(group_cols, key)}
-        row.update({"n": [m.n], "mean": [m.mean.tolist()], "m2": [m.m2.ravel().tolist()]})
-        return pd.DataFrame(row)
-
-    return (
-        df.select(*group_cols, vec_col)
-        .groupBy(*group_cols)
-        .applyInPandas(reduce_group, schema=out_schema)
-    )
-
-

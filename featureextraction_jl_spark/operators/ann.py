@@ -59,20 +59,26 @@ _BC_CACHE_MAX = 8
 
 
 def _broadcast_centroids(sc, cents: np.ndarray, c_sq: np.ndarray):
-    """Broadcast (cents, c_sq) once per (application, matrix content)."""
+    """Broadcast (cents, c_sq) once per (application, matrix content).
+
+    Entries of any other application (a stopped SparkContext) are dropped
+    and unpersisted on every call, so they never wait for FIFO pressure."""
     import hashlib
 
+    def evict(k):
+        try:
+            _BC_CACHE.pop(k).unpersist()
+        except Exception:
+            pass    # app shutting down; nothing to free
+
+    for k in [k for k in _BC_CACHE if k[0] != sc.applicationId]:
+        evict(k)
     key = (sc.applicationId, cents.shape,
            hashlib.sha1(cents.tobytes()).hexdigest())
     bc = _BC_CACHE.get(key)
     if bc is None:
         while len(_BC_CACHE) >= _BC_CACHE_MAX:
-            oldest = next(iter(_BC_CACHE))
-            old = _BC_CACHE.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass    # app shutting down; nothing to free
+            evict(next(iter(_BC_CACHE)))
         bc = sc.broadcast((cents, c_sq))
         _BC_CACHE[key] = bc
     return bc

@@ -810,7 +810,7 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
                              id_col: str = "vec_id",
                              threshold: float = 0.95,
                              n_planes: int = 8, n_tables: int = 8,
-                             max_bucket: int | None = None,
+                             max_bucket: int | None = 1000,
                              cap_strategy: str = "window",
                              dim: int | None = None,
                              seed: int = 7) -> DataFrame:
@@ -830,8 +830,12 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
       id pairs, dedup-ed BEFORE vectors are touched;
     * ``max_bucket`` drops degenerate buckets (e.g. all-zeros embeddings)
       above that width — the cap that keeps the within-bucket join from
-      going quadratic on pathological data.  ``cap_strategy`` picks how,
-      and the two differ exactly on the adversarial input the cap guards:
+      going quadratic on pathological data.  The default is the finite
+      1000 of the MinHash/SimHash siblings, so the library default matches
+      its production callers (which all pass a cap); pass
+      ``max_bucket=None`` explicitly for the exact candidate set.
+      ``cap_strategy`` picks how, and the two differ exactly on the
+      adversarial input the cap guards:
 
       - ``"window"`` — width carried as ``count() over (partition by
         table, bucket)`` on the tagged frame itself (the q43 trick).  ONE

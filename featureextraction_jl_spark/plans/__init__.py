@@ -1,6 +1,5 @@
 """Job plans + scale machinery (SURVEY.md §2 Group E, §3.2)."""
 
-from featureextraction_jl_spark.plans.salting import salted_grouped_moments  # noqa: F401
 from featureextraction_jl_spark.plans.feature_job import run_features, FeatureJobConfig  # noqa: F401
 from featureextraction_jl_spark.plans.windowed_pca import (  # noqa: F401
     WindowedPCA,

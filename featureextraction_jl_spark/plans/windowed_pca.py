@@ -12,13 +12,12 @@ per-window fit -> keyed projection pipeline:
 
 Scale shape (the 100 TB argument):
 
-* the grouped moment pass defaults to the SALTED two-stage plan for pure
-  time windows (``salted_grouped_moments(salt_all=True)``: partials per
-  (window, content salt) -> tiny per-window re-merge) because time-window
-  groups are heavy by construction — a direct per-group applyInPandas
-  would cap parallelism at the window count and materialize whole windows
-  in single tasks.  Keyed windows (per-conversation) have bounded groups
-  and use ``compute_grouped_moments`` directly;
+* the grouped moment pass is the one moments core
+  (``compute_grouped_moments``): every partition emits one (n, mean, m2)
+  partial per (keys, window) it holds and only those partials are shuffled
+  to the per-group re-merge.  The partition id is the salt, so a pure time
+  window of millions of rows is never materialized in one task and keeps
+  the scan's full parallelism;
 * what reaches the driver is ONE (n, mean, m2) row per group — O(groups *
   p^2) bytes, never row data.  The eigh per group is p x p (p ~ tens), so
   10^4 windows fit in well under a second; ``max_models`` guards the driver
@@ -64,8 +63,8 @@ from pyspark.sql.types import ArrayType, DoubleType
 
 from featureextraction_jl_spark import manifest
 from featureextraction_jl_spark.functions.moments import (
-    Moments,
     compute_grouped_moments,
+    merge_moment_rows,
 )
 from featureextraction_jl_spark.functions.pca import PCAModel, fit_pca
 from featureextraction_jl_spark.functions.timeutil import epoch_seconds
@@ -216,28 +215,14 @@ def _norm_gk(v):
 def fit_windowed_pca(df: DataFrame, vec_col: str, ts_col: str, duration: str,
                      key_cols: tuple | list = (), k: int | None = None,
                      mode: str = "pca_whiten",
-                     max_models: int = DEFAULT_MAX_MODELS,
-                     moments_strategy: str = "auto") -> WindowedPCA:
+                     max_models: int = DEFAULT_MAX_MODELS) -> WindowedPCA:
     """Fit one PCA/whitening model per (key_cols..., tumbling window).
 
-    Only MOMENTS are distributed (one (n, mean, m2) row per group reaches
-    the driver); each group's p x p eigh runs driver-side, mirroring the
-    global fit (functions/pca.py).  Groups with n < 2 are recorded in
-    ``skipped`` instead of fitted.
-
-    ``moments_strategy`` picks the grouped-moment plan (both are exact —
-    the Chan merge is associative; equivalence is test-pinned):
-
-    * ``"salted"`` — two-stage via ``salted_grouped_moments(salt_all=True)``:
-      partials per (window, content salt), tiny re-merge per window.  THE
-      pure-time-window scale path: with key_cols=(), the groups are heavy
-      by construction (a handful of windows x millions of rows each), so a
-      direct applyInPandas would materialize whole windows in single tasks
-      and cap parallelism at the window count.
-    * ``"grouped"`` — direct ``compute_grouped_moments``: one applyInPandas
-      task per group.  Right when key_cols makes groups small/numerous
-      (per-conversation windows).
-    * ``"auto"`` — salted when ``key_cols`` is empty, grouped otherwise.
+    Only MOMENTS are distributed: ``compute_grouped_moments`` shuffles one
+    (n, mean, m2) partial per (partition, group) and re-merges them, so one
+    row per group reaches the driver; each group's p x p eigh runs
+    driver-side, mirroring the global fit (functions/pca.py).  Groups with
+    n < 2 are recorded in ``skipped`` instead of fitted.
     """
     key_cols = tuple(key_cols)
     # Group on the window-start EPOCH (double, JVM-computed) — never on a
@@ -247,25 +232,7 @@ def fit_windowed_pca(df: DataFrame, vec_col: str, ts_col: str, duration: str,
     bucketed = df.select(*key_cols,
                          _window_epoch(ts_col, duration).alias(_WIN),
                          vec_col).filter(F.col(_WIN).isNotNull())
-    if moments_strategy == "auto":
-        moments_strategy = "salted" if not key_cols else "grouped"
-    if moments_strategy == "salted":
-        if key_cols:
-            raise ValueError(
-                "moments_strategy='salted' supports pure time windows only "
-                "(key_cols=()); keyed windows have bounded groups — use "
-                "'grouped'")
-        from featureextraction_jl_spark.plans.salting import (
-            salted_grouped_moments,
-        )
-        grouped = salted_grouped_moments(bucketed, _WIN, vec_col,
-                                         salt_all=True)
-    elif moments_strategy == "grouped":
-        grouped = compute_grouped_moments(bucketed, [*key_cols, _WIN], vec_col)
-    else:
-        raise ValueError(
-            f"moments_strategy must be auto|salted|grouped, got "
-            f"{moments_strategy!r}")
+    grouped = compute_grouped_moments(bucketed, [*key_cols, _WIN], vec_col)
     # Bound the collect BEFORE it happens: limit(max_models + 1) makes the
     # guard itself O(max_models), not a second full count pass.
     rows = grouped.limit(max_models + 1).collect()
@@ -281,24 +248,20 @@ def fit_windowed_pca(df: DataFrame, vec_col: str, ts_col: str, duration: str,
     for r in rows:
         gk = tuple(r[c] for c in key_cols) + (_win_dt(r[_WIN]),)
         if gk in seen:
-            # Two JVM-side groups collapsed to one key: Spark's groupBy
-            # distinguishes NULL from float NaN, but the pandas->Arrow
-            # emission of the group kernels renders a NaN key as NULL — a
-            # corpus with BOTH in one window would silently overwrite one
-            # group's model with the other's.  (NaN-only float keys are
-            # fine: they collapse to the NULL group consistently on the fit
-            # AND projection sides.)  Fail loudly.
+            # Two groups collapsed to one key: the moments core keeps a
+            # float NaN key apart from NULL but emits it as NULL — a corpus
+            # with BOTH in one window would silently overwrite one group's
+            # model with the other's.  (NaN-only float keys are fine: they
+            # collapse to the NULL group consistently on the fit AND
+            # projection sides.)  Fail loudly.
             raise ValueError(
                 f"fit_windowed_pca: duplicate group key {gk!r} after key "
                 f"normalization — typically a float key column containing "
                 f"BOTH NULL and NaN in one window (indistinguishable in "
-                f"the Arrow/pandas kernels); filter or recode such keys "
+                f"the moment rows); filter or recode such keys "
                 f"upstream")
         seen.add(gk)
-        mean = np.asarray(r["mean"], dtype=np.float64)
-        p = mean.shape[0]
-        m = Moments(int(r["n"]), mean,
-                    np.asarray(r["m2"], dtype=np.float64).reshape(p, p))
+        m = merge_moment_rows([r])
         if m.n < 2:
             skipped[gk] = m.n
             continue

@@ -6,7 +6,8 @@ is byte-identical regardless of parallelism or partitioning — the property
 the two-cluster-size bench depends on (both runs read identical parquet).
 
 Skew is intentional: turn counts ~ Zipf(a=1.5) clipped to [2, max_turns] plus
-one mega-conversation (conv 0), exercising the salting path (plans/salting).
+one mega-conversation (conv 0), exercising the moments core's mega-key path
+(functions/moments.py).
 Text includes multi-byte UTF-8 (emoji, CJK), quotes and newlines so the
 byte-equality passthrough gate is meaningful.  5% of inter-turn gaps exceed
 the 30-minute session boundary; ~1% of rows get out-of-order or duplicate ts

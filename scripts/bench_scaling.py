@@ -20,12 +20,11 @@ load, and executor cpu-time itself inflates ~2x under preemption):
 eff(N -> 4N) = (thr_4N / thr_N) / 4
 
 Reports the ladder local[1] -> local[2] -> local[4] -> local[8] ->
-local[32] with every N -> 4N pair (1->4, 2->8, 8->32): this host exposes
-only ~8 uncontended cores' worth of memory-system capacity (above that,
-co-tenant contention + GC-thread competition dominate — see
-BENCH/BASELINE.md notes), so the small-N pairs measure the ENGINE's
-scaling while the wide pairs measure the host's oversubscription; all are
-reported.  Override levels with SPARK_GRAFT_SCALE_LEVELS=2,8,32.
+local[32] with every N -> 4N pair (1->4, 2->8, 8->32).  Override levels
+with SPARK_GRAFT_SCALE_LEVELS=2,8,32.  A level above the host's core count
+would measure the host's oversubscription, not the engine, so the script
+exits non-zero before running anything when the largest level exceeds the
+cores this process may use.
 
 Two ladders per invocation (VERDICT r03 #3/#7):
 
@@ -127,6 +126,14 @@ def main() -> None:
         ap.error("--skip-cold --skip-warm measures nothing; nothing to "
                  "write to BENCH/BASELINE.md (add --no-md to emit the "
                  "empty JSON line if that is really what you want)")
+
+    cores = len(os.sched_getaffinity(0))
+    if max(LEVELS) > cores:
+        sys.exit(f"bench_scaling: the largest level local[{max(LEVELS)}] "
+                 f"needs {max(LEVELS)} cores and this host has {cores}; an "
+                 f"oversubscribed level measures the host, not the engine. "
+                 f"Set SPARK_GRAFT_SCALE_LEVELS to levels of at most "
+                 f"{cores}.")
 
     t0 = time.time()
     samples: dict[int, list[float]] = {c: [] for c in LEVELS}
@@ -243,18 +250,18 @@ Warm N -> 4N scaling efficiencies:
 
 {warm_eff_rows}
 
-Control-normalize against scripts/bench_cpu_control.py on the same pairs:
+Control-normalize against the pure-CPU host control on the same pairs:
 this shared host's own pure-CPU scaling ceiling has measured 0.72-0.76 on
 2->8 (BENCH/cpu_control*.log) — a warm engine efficiency at or above the
 control means the engine retains >=100% of the scaling the host can grant.
 
 At the 10^12-turn design scale the same properties that make the small-N
 pairs scale — one full-data exchange, sort-only window chain, map-side
-moment partials with O(p^2) reduce traffic, salted mega-keys — are
-executor-count-invariant: nothing in the plan serializes on the driver
-except the p x p eigh.  See BENCH/STAGE_ATTRIBUTION.md for per-stage
-CPU-inflation evidence locating the residual wide-N loss in the host's
-shared memory system.
+moment partials with O(p^2) reduce traffic, mega-keys split into one
+partial per partition — are executor-count-invariant: nothing in the plan
+serializes on the driver except the p x p eigh.  See
+BENCH/STAGE_ATTRIBUTION.md for per-stage CPU-inflation evidence locating
+the residual wide-N loss in the host's shared memory system.
 
 Generated by scripts/bench_scaling.py on {time.strftime('%Y-%m-%d %H:%M:%S')}
 (wall {time.time() - t0:,.0f}s total).

@@ -195,3 +195,28 @@ def test_centroid_broadcast_reused_across_calls(spark, corpus):
     other = np.ascontiguousarray(np.eye(4) * 2.0, dtype=np.float64)
     b3 = _broadcast_centroids(sc, other, (other * other).sum(axis=1))
     assert b3 is not b1 and len(_BC_CACHE) == before + 2
+
+
+def test_centroid_broadcast_cache_drops_stopped_apps(spark):
+    """An entry of another (stopped) application is dropped and
+    unpersisted on the next call, instead of staying pinned until FIFO
+    pressure evicts it."""
+    from featureextraction_jl_spark.operators.ann import (
+        _BC_CACHE,
+        _broadcast_centroids,
+    )
+
+    class StaleBroadcast:
+        unpersisted = False
+
+        def unpersist(self):
+            self.unpersisted = True
+
+    stale = StaleBroadcast()
+    key = ("app-of-a-stopped-context", (2, 2), "0" * 40)
+    _BC_CACHE[key] = stale
+    cents = np.ascontiguousarray(np.eye(2) * 3.0, dtype=np.float64)
+    _broadcast_centroids(spark.sparkContext, cents,
+                         (cents * cents).sum(axis=1))
+    assert key not in _BC_CACHE
+    assert stale.unpersisted

@@ -137,6 +137,22 @@ def test_ann_lsh_recall_on_planted_clusters(spark):
         assert r["cosine"] >= 0.9
 
 
+def test_embedding_near_dup_default_caps_buckets(spark):
+    """The library default caps buckets at 1000 like its MinHash/SimHash
+    siblings and its production callers: 1001 identical vectors under the
+    default arguments form one over-cap bucket per table and emit no pair,
+    instead of the quadratic 500,500."""
+    import inspect
+
+    sig = inspect.signature(embedding_near_dup_pairs)
+    assert sig.parameters["max_bucket"].default == 1000
+    df = spark.range(1001).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.lit(float(v)) for v in (1.0, -2.0, 0.5, 3.0)])
+        .alias("embedding"))
+    assert embedding_near_dup_pairs(df).count() == 0
+
+
 def test_ann_bucket_cap_drops_degenerate_buckets(spark):
     rng = np.random.default_rng(5)
     # 50 near-identical vectors -> one mega-bucket in every table

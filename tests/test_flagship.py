@@ -1,5 +1,5 @@
 """End-to-end flagship job gates (SURVEY.md §5.2.2, §5.2.4):
-leakage-free, byte-equal text passthrough, salting equivalence."""
+leakage-free, byte-equal text passthrough, plan shape."""
 
 from __future__ import annotations
 
@@ -11,12 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from featureextraction_jl_spark.functions.moments import compute_grouped_moments
-from featureextraction_jl_spark.plans import (
-    FeatureJobConfig,
-    run_features,
-    salted_grouped_moments,
-)
+from featureextraction_jl_spark.plans import FeatureJobConfig, run_features
 from featureextraction_jl_spark.sources import generate_transcripts, generate_snapshots
 
 CFG = FeatureJobConfig(snap_dim=4, k=5, num_buckets=8)
@@ -82,25 +77,6 @@ def test_flagship_leakage_free(spark, data):
     np.testing.assert_allclose(a, b, rtol=1e-8, atol=1e-10)
 
 
-def test_salting_equivalence(spark, data):
-    t, s = data
-    from featureextraction_jl_spark.plans.feature_job import build_turn_features
-    prepared = build_turn_features(t, s, CFG).select("conv_id", "raw_vec")
-    plain = {r["conv_id"]: r for r in
-             compute_grouped_moments(prepared, ["conv_id"], "raw_vec").collect()}
-    salted = {r["conv_id"]: r for r in
-              salted_grouped_moments(prepared, "conv_id", "raw_vec",
-                                     heavy_threshold=100, num_salts=8,
-                                     sample_fraction=None).collect()}
-    assert plain.keys() == salted.keys()
-    for k in plain:
-        assert plain[k]["n"] == salted[k]["n"]
-        np.testing.assert_allclose(plain[k]["mean"], salted[k]["mean"],
-                                   rtol=1e-8, atol=1e-10)
-        np.testing.assert_allclose(plain[k]["m2"], salted[k]["m2"],
-                                   rtol=1e-8, atol=1e-8)
-
-
 def test_flagship_null_text_does_not_poison_model(spark, data):
     """A NULL text (legal per the schema) must behave as char_len 0, not
     inject a null raw_vec element — one such element becomes NaN in the
@@ -117,29 +93,6 @@ def test_flagship_null_text_does_not_poison_model(spark, data):
     y = np.stack(out.select("feature_vec").toPandas()["feature_vec"].to_numpy())
     assert np.isfinite(y).all()          # every row, nulled ones included
     assert out.count() == t.count()      # no rows silently dropped
-
-
-def test_salting_null_and_nonstring_key(spark):
-    """NULL as the dominant skew key must be salted (isin() is NULL-valued
-    for a NULL key), and a bigint key must not Arrow-mismatch the partial
-    schema — both verified against the unsalted twin."""
-    rng = np.random.default_rng(11)
-    rows = [(None if i < 300 else int(i % 3),
-             [float(x) for x in rng.normal(size=4)]) for i in range(400)]
-    df = spark.createDataFrame(rows, "k long, vec array<double>")
-    plain = {r["k"]: r for r in
-             compute_grouped_moments(df, ["k"], "vec").collect()}
-    salted = {r["k"]: r for r in
-              salted_grouped_moments(df, "k", "vec", heavy_threshold=50,
-                                     num_salts=8,
-                                     sample_fraction=None).collect()}
-    assert plain.keys() == salted.keys() and None in plain
-    for k in plain:
-        assert plain[k]["n"] == salted[k]["n"], k
-        np.testing.assert_allclose(plain[k]["mean"], salted[k]["mean"],
-                                   rtol=1e-8, atol=1e-10)
-        np.testing.assert_allclose(plain[k]["m2"], salted[k]["m2"],
-                                   rtol=1e-8, atol=1e-8)
 
 
 def test_flagship_plan_invariants(spark, data):
@@ -182,54 +135,6 @@ def test_scan_pushdown_and_pruning(spark, sf01_dir):
     assert m, plan[:2000]
     cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
     assert cols == {"l_orderkey", "l_quantity"}, cols
-
-
-def test_detect_heavy_keys_sampled_default_and_bounded_collect(spark):
-    """VERDICT r04 "what's wrong" #3: the heavy-key probe must (a) SAMPLE by
-    default — never a full unsampled groupBy count before the real job —
-    (b) bound the collected list at max_keys (heaviest first), and (c) stay
-    deterministic (seeded sample)."""
-    import inspect
-
-    from featureextraction_jl_spark.plans.salting import detect_heavy_keys
-
-    sig = inspect.signature(detect_heavy_keys)
-    assert sig.parameters["sample_fraction"].default not in (None, 0)  # (a)
-
-    # 10^5-row degenerate corpus: one dominant key (60%) + 20 medium keys.
-    # The dominant key must be detected from the 5% sample; bounded time.
-    df = spark.range(100_000).select(
-        F.when(F.col("id") % 10 < 6, F.lit("mega"))
-         .otherwise(F.concat(F.lit("k"), (F.col("id") % 20).cast("string")))
-         .alias("k"))
-    got = detect_heavy_keys(df, "k", threshold_rows=10_000)
-    assert "mega" in got
-    assert got == detect_heavy_keys(df, "k", threshold_rows=10_000)  # (c)
-
-    # (b) every key exceeds the threshold, but only the max_keys heaviest
-    # are collected, ordered heaviest-first
-    skew = spark.range(10_000).select(
-        (F.col("id") % 10).alias("k")).withColumn(
-        "k", F.col("k").cast("string"))
-    top = detect_heavy_keys(skew, "k", threshold_rows=1,
-                            sample_fraction=None, max_keys=3)
-    assert len(top) == 3
-
-
-def test_salted_moments_degenerate_corpus_sampled_probe(spark):
-    """10^5 rows funneled into ONE key: the sampled probe must flag it and
-    the salted two-stage path must equal the unsalted grouped moments
-    exactly (Chan merge) — in bounded time."""
-    df = spark.range(100_000).select(
-        F.lit("all").alias("k"),
-        F.array((F.col("id") % 97).cast("double"),
-                (F.col("id") % 13).cast("double")).alias("vec"))
-    plain = compute_grouped_moments(df, ["k"], "vec").collect()[0]
-    salted = salted_grouped_moments(df, "k", "vec", heavy_threshold=10_000,
-                                    num_salts=8).collect()[0]
-    assert plain["n"] == salted["n"] == 100_000
-    np.testing.assert_allclose(plain["mean"], salted["mean"], rtol=1e-10)
-    np.testing.assert_allclose(plain["m2"], salted["m2"], rtol=1e-8)
 
 
 def test_flagship_windowed_models_option(spark, data):
@@ -293,25 +198,6 @@ def test_flagship_windowed_plan_invariants(spark, data):
     assert "ArrowEvalPython" in plan, "projection should be Arrow-batched"
     n_sorts = len(re.findall(r"\bSort \[", plan))
     assert n_sorts <= 1, f"plan has {n_sorts} Sorts:\n{plan[:4000]}"
-
-
-def test_detect_heavy_keys_warns_when_probe_blind(spark):
-    """threshold*fraction < 10 makes borderline keys statistically invisible
-    to the sampled probe — it must say so instead of silently missing them."""
-    import warnings
-
-    from featureextraction_jl_spark.plans.salting import detect_heavy_keys
-
-    df = spark.range(1000).select((F.col("id") % 5).cast("string").alias("k"))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        detect_heavy_keys(df, "k", threshold_rows=50, sample_fraction=0.05)
-    assert any("statistically invisible" in str(x.message) for x in w)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        detect_heavy_keys(df, "k", threshold_rows=50, sample_fraction=None)
-        detect_heavy_keys(df, "k", threshold_rows=10_000, sample_fraction=0.05)
-    assert not any("statistically invisible" in str(x.message) for x in w)
 
 
 def test_global_path_rejects_windowed_model_without_duration(spark, data):

@@ -107,63 +107,44 @@ def test_distributed_moments_both_strategies(spark):
     close(m.cov, oracle.cov(X))
 
 
-def test_moments_bucketed_and_auto(spark):
-    """Executor-side two-level reduce (VERDICT r03 #1) equals the oracle for
-    every bucket count and both input forms; compute_moments stays green."""
-    from featureextraction_jl_spark.functions import compute_moments_bucketed
-
-    df = vec_df(spark, X)
-    for m in (compute_moments_bucketed(df, "vec"),
-              compute_moments_bucketed(df, "vec", buckets=3),
-              compute_moments(df, "vec")):
-        assert m.n == 400
-        close(m.mean, oracle.mean(X))
-        close(m.cov, oracle.cov(X))
-    # column-list (fully columnar) form through the bucketed reduce
-    pdf = pd.DataFrame({f"c{i}": X[:, i] for i in range(X.shape[1])})
-    cols_df = spark.createDataFrame(pdf).repartition(5)
-    m = compute_moments_bucketed(cols_df, [f"c{i}" for i in range(X.shape[1])])
-    assert m.n == 400
-    close(m.mean, oracle.mean(X))
-    close(m.cov, oracle.cov(X))
-
-
-def test_moments_empty_and_all_null_input(spark):
-    """Every reduce strategy returns the zero moment (n=0) on an empty or
+def test_moments_empty_and_all_null_input(spark, monkeypatch):
+    """Both reduce routes return the zero moment (n=0) on an empty or
     all-null source instead of crashing — the degenerate partition case the
     per-partition worker merge must emit nothing for."""
-    from featureextraction_jl_spark.functions import compute_moments_bucketed
+    import featureextraction_jl_spark.functions.moments as M
 
     empty = spark.createDataFrame([], "vec array<double>")
     nulls = spark.createDataFrame([(None,), (None,)], "vec array<double>")
-    for df in (empty, nulls):
-        for m in (compute_moments(df, "vec"),
-                  compute_moments_bucketed(df, "vec")):
-            assert m.n == 0, m
+    for threshold in (2048, 0):          # driver fold, then the re-merge
+        monkeypatch.setattr(M, "_BUCKETED_THRESHOLD", threshold)
+        for df in (empty, nulls):
+            assert compute_moments(df, "vec").n == 0
 
 
 def test_moments_auto_switch_routes_to_bucketed(spark, monkeypatch):
-    """compute_moments must route through the executor-side bucketed reduce
-    once the source partition count exceeds the threshold (the design-scale
-    path); below it, the driver merge is chosen.  Threshold lowered via
-    monkeypatch so the test doesn't need 2048 real partitions."""
+    """compute_moments must route the partials through the executor-side
+    re-merge once the source partition count exceeds the threshold (the
+    design-scale path); below it, the driver merge is chosen.  Threshold
+    lowered via monkeypatch so the test doesn't need 2048 real
+    partitions."""
     import featureextraction_jl_spark.functions.moments as M
 
-    calls = {"bucketed": 0}
-    real = M.compute_moments_bucketed
+    calls = {"remerge": 0}
+    real = M._remerge
 
-    def spy(df, vec_col, buckets=64):
-        calls["bucketed"] += 1
-        return real(df, vec_col, buckets)
+    def spy(partials, keys):
+        calls["remerge"] += 1
+        return real(partials, keys)
 
-    monkeypatch.setattr(M, "compute_moments_bucketed", spy)
+    monkeypatch.setattr(M, "_remerge", spy)
     df = vec_df(spark, X)                      # 5 partitions
     monkeypatch.setattr(M, "_BUCKETED_THRESHOLD", 4)
     m = M.compute_moments(df, "vec")
-    assert calls["bucketed"] == 1 and m.n == 400
+    assert calls["remerge"] == 1 and m.n == 400
+    close(m.cov, oracle.cov(X))
     monkeypatch.setattr(M, "_BUCKETED_THRESHOLD", 2048)
     m = M.compute_moments(df, "vec")
-    assert calls["bucketed"] == 1 and m.n == 400   # driver path, no new call
+    assert calls["remerge"] == 1 and m.n == 400   # driver path, no new call
 
 
 def test_moments_partials_one_row_per_partition(spark):
@@ -206,6 +187,127 @@ def test_merge_moment_rows_equals_global(spark):
     m = merge_moment_rows(partials)
     close(m.mean, oracle.mean(X))
     close(m.cov, oracle.cov(X))
+
+
+# -- the moments core: partials + re-merge vs a NumPy oracle ---------------
+
+_CORE_KEYS = [(), ("g",), ("g", "w")]
+_CORE_LAYOUTS = ["p1", "p7", "mega", "bucketed", "empty", "all_null",
+                 "ragged"]
+
+
+def _core_rows(layout: str) -> list:
+    """(g, w, vec) rows: a mega-key "m" with most rows, NULL g and w keys,
+    and vectors that are NULL, carry a null element or a NaN element."""
+    if layout == "empty":
+        return []
+    rng = np.random.default_rng(7)
+    rows = []
+    for i in range(600):
+        g = "m" if i % 5 else [None, "a", "b", "c"][i // 5 % 4]
+        w = None if i % 7 == 0 else int(i % 3)
+        vec = [float(v) for v in rng.normal(size=3) * (1 + i % 4) + 10]
+        if layout == "all_null" or i % 11 == 0:
+            vec = None
+        elif i % 13 == 0:
+            vec[1] = None
+        elif i % 17 == 0:
+            vec[2] = float("nan")
+        rows.append((g, w, vec))
+    if layout == "ragged":
+        # each new group is fixed-dimension on its own; the batch is not
+        rows += [("r2", 1, [1.0, 2.0]), ("r4", 1, [1.0, 2.0, 3.0, 4.0])]
+    return rows
+
+
+def _core_oracle(rows: list, keys: tuple) -> dict:
+    """Per-key (n, mean, m2) by NumPy over the rows that contribute."""
+    groups = {}
+    for g, w, vec in rows:
+        if vec is None or any(v is None or np.isnan(v) for v in vec):
+            continue
+        k = tuple({"g": g, "w": w}[c] for c in keys)
+        groups.setdefault(k, []).append(vec)
+    out = {}
+    for k, vs in groups.items():
+        x = np.asarray(vs, dtype=np.float64)
+        mean = x.mean(axis=0)
+        out[k] = (len(x), mean, (x - mean).T @ (x - mean))
+    return out
+
+
+@pytest.mark.parametrize("keys,layout", [
+    pytest.param(k, lay, id=f"{'_'.join(k) or 'nokey'}-{lay}")
+    for k in _CORE_KEYS for lay in _CORE_LAYOUTS
+    # the bucketed route is the keyless reduce; a mega-key needs a key
+    if not (lay == "bucketed" and k) and not (lay == "mega" and not k)])
+def test_moments_core_matches_numpy(spark, monkeypatch, keys, layout):
+    """Every moments caller goes through the partial worker and the
+    re-merge: per-group n, mean and m2 equal a NumPy oracle whatever the
+    partitioning — one partition, 7 partitions, a mega-key hashed into a
+    single partition, the keyless re-merge above _BUCKETED_THRESHOLD — and
+    NULL / null-element / NaN-element vectors never contribute.  A NULL key
+    is a group.  A ragged batch raises even when its groups differ in
+    dimension."""
+    import featureextraction_jl_spark.functions.moments as M
+
+    rows = _core_rows(layout)
+    df = spark.createDataFrame(rows, "g string, w long, vec array<double>")
+    if layout == "p1":
+        df = df.coalesce(1)
+    elif layout == "mega":
+        df = df.repartition(7, "g")
+    elif layout == "bucketed":
+        monkeypatch.setattr(M, "_BUCKETED_THRESHOLD", 0)
+        df = df.repartition(7)
+    elif layout == "ragged":
+        df = df.coalesce(1)
+    else:
+        df = df.repartition(7)
+    if keys:
+        run = lambda: compute_grouped_moments(df, list(keys), "vec").collect()
+    else:
+        run = lambda: [compute_moments(df, "vec")]
+    if layout == "ragged":
+        with pytest.raises(Exception, match="ragged"):
+            run()
+        return
+    want = _core_oracle(rows, keys)
+    if keys:
+        got = {tuple(r[c] for c in keys):
+               (r["n"], np.asarray(r["mean"]), np.asarray(r["m2"]))
+               for r in run()}
+        if want:
+            assert any(None in k for k in got)     # a NULL key is a group
+    else:
+        m = run()[0]
+        got = {(): (m.n, m.mean, m.m2)} if m.n else {}
+    assert got.keys() == want.keys()
+    for k, (n, mean, m2) in want.items():
+        assert got[k][0] == n, k
+        np.testing.assert_allclose(got[k][1], mean, rtol=1e-8, atol=1e-10)
+        np.testing.assert_allclose(np.reshape(got[k][2], m2.shape), m2,
+                                   rtol=1e-8, atol=1e-8)
+
+
+def test_grouped_moments_plan_shuffles_only_partials(spark):
+    """The grouped fit runs no pandas group kernel, and its only new
+    Exchange sits directly above the partial MapInArrow: only (n, mean,
+    m2) partials are shuffled, never row data."""
+    df = spark.createDataFrame(_core_rows("p7"),
+                               "g string, w long, vec array<double>")
+    df = df.repartition(4)
+    out = compute_grouped_moments(df, ["g", "w"], "vec")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    base = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("Exchange") == base.count("Exchange") + 1, plan
+    lines = plan.splitlines()
+    ex = [i for i, ln in enumerate(lines)
+          if "Exchange hashpartitioning(g" in ln]
+    assert len(ex) == 1, plan
+    assert "MapInArrow" in lines[ex[0] - 1], plan
+    assert "MapInArrow" in lines[ex[0] + 1], plan
 
 
 # -- correlation -----------------------------------------------------------
@@ -315,42 +417,20 @@ def test_zscore_vec_udf(spark):
     close(np.sort(z, axis=0), np.sort(oracle.zscore(X), axis=0))
 
 
-def test_moments_list_of_columns_path(spark):
-    """compute_moments over p scalar double columns equals the array path."""
-    pdf = pd.DataFrame({f"c{i}": X[:, i] for i in range(X.shape[1])})
-    df = spark.createDataFrame(pdf).repartition(5)
-    m = compute_moments(df, [f"c{i}" for i in range(X.shape[1])])
-    assert m.n == 400
-    close(m.mean, oracle.mean(X))
-    close(m.cov, oracle.cov(X))
-
-
-def test_moments_list_of_columns_drops_null_rows(spark):
-    """Null rows are DROPPED (same as the array-column path), not NaN-poisoned."""
-    pdf = pd.DataFrame({f"c{i}": X[:, i] for i in range(X.shape[1])})
-    pdf.loc[3, "c0"] = None
-    pdf.loc[17, "c2"] = None
-    df = spark.createDataFrame(pdf).repartition(5)
-    m = compute_moments(df, [f"c{i}" for i in range(X.shape[1])])
-    kept = np.delete(X, [3, 17], axis=0)
-    assert m.n == 398
-    close(m.mean, oracle.mean(kept))
-    close(m.cov, oracle.cov(kept))
-
-
-def test_moments_element_null_and_ragged(spark):
+def test_moments_element_null_and_ragged(spark, monkeypatch):
     """Element-level nulls are invisible to the list-level null_count —
     np.asarray would render them NaN and silently poison every moment.
-    All moments paths drop such rows; ragged batches raise loudly instead
+    Both reduce routes drop such rows; ragged batches raise loudly instead
     of the old divisible-length mis-reshape."""
-    from featureextraction_jl_spark.functions import compute_moments_bucketed
+    import featureextraction_jl_spark.functions.moments as M
 
     good = [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]]
     rows = [(v,) for v in good] + [([7.0, None],), (None,)]
     df = spark.createDataFrame(rows, "vec array<double>").coalesce(1)
     want_mean = np.mean(good, axis=0)
-    for m in (compute_moments(df, "vec"),
-              compute_moments_bucketed(df, "vec")):
+    for threshold in (2048, 0):          # driver fold, then the re-merge
+        monkeypatch.setattr(M, "_BUCKETED_THRESHOLD", threshold)
+        m = compute_moments(df, "vec")
         assert m.n == 3
         np.testing.assert_allclose(m.mean, want_mean, rtol=1e-12)
     # ragged: lengths {1, 3} with total 4 elements over 2 rows would have
@@ -439,23 +519,18 @@ def test_zscore_vec_udf_propagates_null_vectors(spark):
 
 def test_grouped_moments_mask_null_elements(spark):
     """A vector with a null ELEMENT must be dropped from its group, not
-    NaN-poison the group's mean/M2 (the global Arrow path masks these via
-    child validity; the grouped/salted pandas kernels share
-    pandas_clean_stack for the same semantics)."""
-    from featureextraction_jl_spark.plans.salting import salted_grouped_moments
-
+    NaN-poison the group's mean/M2 (the partial worker masks these via
+    child validity, the same _batch_to_matrix rule as the global path)."""
     rows = [("a", [1.0, 2.0]), ("a", [3.0, 6.0]), ("a", [1.0, None]),
             ("a", None), ("b", [5.0, 5.0]), ("b", [None, None])]
     df = spark.createDataFrame(rows, "g string, vec array<double>")
-    for frame in (compute_grouped_moments(df, ["g"], "vec"),
-                  salted_grouped_moments(df, "g", "vec",
-                                         sample_fraction=None)):
-        got = {r["g"]: r for r in frame.collect()}
-        assert got["a"]["n"] == 2
-        np.testing.assert_allclose(got["a"]["mean"], [2.0, 4.0])
-        assert not any(np.isnan(got["a"]["m2"]))
-        assert got["b"]["n"] == 1
-        np.testing.assert_allclose(got["b"]["mean"], [5.0, 5.0])
+    got = {r["g"]: r for r in
+           compute_grouped_moments(df, ["g"], "vec").collect()}
+    assert got["a"]["n"] == 2
+    np.testing.assert_allclose(got["a"]["mean"], [2.0, 4.0])
+    assert not any(np.isnan(got["a"]["m2"]))
+    assert got["b"]["n"] == 1
+    np.testing.assert_allclose(got["b"]["mean"], [5.0, 5.0])
 
 
 def test_grouped_moments_ragged_group_raises(spark):
@@ -492,12 +567,9 @@ def test_zscore_null_inputs_stay_null_in_zero_sigma_branch(spark):
 def test_moment_paths_share_nan_row_contract(spark):
     """ONE contract across every moments path: rows with a null OR NaN
     element never contribute.  Genuine NaN values are Arrow-VALID (not
-    null), so without the explicit mask the global Arrow path would fold
-    them in while the pandas kernels (where NaN and null are
-    indistinguishable) dropped them — silently un-pinning the cross-path
-    equivalences on NaN-bearing data."""
-    from featureextraction_jl_spark.plans.salting import salted_grouped_moments
-
+    null), so without the explicit mask the Arrow core would fold them in
+    while the streaming pandas kernel (where NaN and null are
+    indistinguishable) dropped them."""
     rows = [("a", [1.0, 2.0]), ("a", [3.0, 6.0]),
             ("a", [float("nan"), 1.0]), ("a", [2.0, None])]
     df = spark.createDataFrame(rows, "g string, vec array<double>")
@@ -506,9 +578,5 @@ def test_moment_paths_share_nan_row_contract(spark):
     np.testing.assert_allclose(g.mean, [2.0, 4.0])
     grp = {r["g"]: r for r in
            compute_grouped_moments(df, ["g"], "vec").collect()}
-    sal = {r["g"]: r for r in
-           salted_grouped_moments(df, "g", "vec",
-                                  sample_fraction=None).collect()}
-    assert grp["a"]["n"] == sal["a"]["n"] == 2
+    assert grp["a"]["n"] == 2
     np.testing.assert_allclose(grp["a"]["mean"], [2.0, 4.0])
-    np.testing.assert_allclose(sal["a"]["mean"], [2.0, 4.0])

@@ -185,29 +185,6 @@ def test_windowed_max_models_guard(spark, windowed_df):
                          key_cols=("conv_id",), max_models=3)
 
 
-def test_windowed_moments_strategies_equivalent(spark, windowed_df):
-    """The salted two-stage plan (pure-time-window scale path, the auto
-    default for key_cols=()) and the direct grouped plan must fit
-    identical models — the Chan merge is exact under any partial split."""
-    a = fit_windowed_pca(windowed_df, "vec", "ts", "1 hour",
-                         moments_strategy="salted")
-    b = fit_windowed_pca(windowed_df, "vec", "ts", "1 hour",
-                         moments_strategy="grouped")
-    assert a.models.keys() == b.models.keys() and len(a.models) == 4
-    for gk in a.models:
-        np.testing.assert_allclose(a.models[gk].mu, b.models[gk].mu,
-                                   rtol=1e-10, atol=1e-12)
-        np.testing.assert_allclose(a.models[gk].eigenvalues,
-                                   b.models[gk].eigenvalues,
-                                   rtol=1e-8, atol=1e-10)
-    with pytest.raises(ValueError, match="moments_strategy"):
-        fit_windowed_pca(windowed_df, "vec", "ts", "1 hour",
-                         moments_strategy="nope")
-    with pytest.raises(ValueError, match="salted"):
-        fit_windowed_pca(windowed_df, "vec", "ts", "1 hour",
-                         key_cols=("conv_id",), moments_strategy="salted")
-
-
 def test_windowed_model_save_load_roundtrip(spark, windowed_df, tmp_path):
     """WindowedPCA.save/load: a transform-only rerun with the loaded model
     map must produce byte-identical features (the windowed twin of the
