@@ -1,5 +1,5 @@
 """End-to-end flagship job gates (SURVEY.md §5.2.2, §5.2.4):
-leakage-free, byte-equal text passthrough, plan shape."""
+leakage-free, byte-equal text passthrough, plan shape, skewed-key moments."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from featureextraction_jl_spark.functions.moments import compute_grouped_moments
 from featureextraction_jl_spark.plans import FeatureJobConfig, run_features
 from featureextraction_jl_spark.sources import generate_transcripts, generate_snapshots
 
@@ -77,6 +78,48 @@ def test_flagship_leakage_free(spark, data):
     np.testing.assert_allclose(a, b, rtol=1e-8, atol=1e-10)
 
 
+def _split_equivalence(df, key: str, vec_col: str, parts: int) -> dict:
+    """Grouped moments of ``df`` with every key in one partial
+    (``coalesce(1)``) and with every key spread round-robin over ``parts``
+    partitions must agree: the Chan merge is exact under any partial split.
+    Returns the unsplit result keyed by ``key``."""
+    whole = {r[key]: r for r in compute_grouped_moments(
+        df.coalesce(1), [key], vec_col).collect()}
+    split = {r[key]: r for r in compute_grouped_moments(
+        df.repartition(parts), [key], vec_col).collect()}
+    assert whole.keys() == split.keys()
+    for k in whole:
+        assert whole[k]["n"] == split[k]["n"], k
+        np.testing.assert_allclose(whole[k]["mean"], split[k]["mean"],
+                                   rtol=1e-8, atol=1e-10)
+        np.testing.assert_allclose(whole[k]["m2"], split[k]["m2"],
+                                   rtol=1e-8, atol=1e-8)
+    return whole
+
+
+def test_salting_equivalence(spark, data):
+    """The flagship corpus has one mega conversation (600 turns beside
+    conversations of up to 200).  Its per-conv_id moments must be the same
+    whether each key is one partial or the mega key is split over 8
+    partitions (the partition id acting as the salt), and must equal an
+    independent NumPy fit per conversation."""
+    t, s = data
+    from featureextraction_jl_spark.plans.feature_job import build_turn_features
+    prepared = build_turn_features(t, s, CFG).select("conv_id", "raw_vec")
+    got = _split_equivalence(prepared, "conv_id", "raw_vec", 8)
+    pdf = prepared.toPandas()
+    assert got.keys() == set(pdf["conv_id"])
+    assert max(r["n"] for r in got.values()) >= 600   # the mega key is there
+    for k, grp in pdf.groupby("conv_id"):
+        x = np.stack(grp["raw_vec"].to_numpy())
+        mean = x.mean(axis=0)
+        assert got[k]["n"] == len(x), k
+        np.testing.assert_allclose(got[k]["mean"], mean, rtol=1e-8, atol=1e-10)
+        np.testing.assert_allclose(
+            np.reshape(got[k]["m2"], (x.shape[1], x.shape[1])),
+            (x - mean).T @ (x - mean), rtol=1e-8, atol=1e-8)
+
+
 def test_flagship_null_text_does_not_poison_model(spark, data):
     """A NULL text (legal per the schema) must behave as char_len 0, not
     inject a null raw_vec element — one such element becomes NaN in the
@@ -135,6 +178,24 @@ def test_scan_pushdown_and_pruning(spark, sf01_dir):
     assert m, plan[:2000]
     cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
     assert cols == {"l_orderkey", "l_quantity"}, cols
+
+
+def test_salted_moments_degenerate_corpus_sampled_probe(spark):
+    """10^5 rows funneled into ONE key, spread over 8 partitions: the
+    grouped moments (8 partials re-merged) equal the one-partial result and
+    the closed-form moments exactly (Chan merge) — in bounded time."""
+    df = spark.range(100_000).select(
+        F.lit("all").alias("k"),
+        F.array((F.col("id") % 97).cast("double"),
+                (F.col("id") % 13).cast("double")).alias("vec"))
+    got = _split_equivalence(df, "k", "vec", 8)
+    assert got.keys() == {"all"} and got["all"]["n"] == 100_000
+    x = np.stack([np.arange(100_000) % 97,
+                  np.arange(100_000) % 13], axis=1).astype(np.float64)
+    mean = x.mean(axis=0)
+    np.testing.assert_allclose(got["all"]["mean"], mean, rtol=1e-10)
+    np.testing.assert_allclose(np.reshape(got["all"]["m2"], (2, 2)),
+                               (x - mean).T @ (x - mean), rtol=1e-8)
 
 
 def test_flagship_windowed_models_option(spark, data):

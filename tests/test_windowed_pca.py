@@ -185,6 +185,27 @@ def test_windowed_max_models_guard(spark, windowed_df):
                          key_cols=("conv_id",), max_models=3)
 
 
+def test_windowed_moments_strategies_equivalent(spark, windowed_df):
+    """The windowed fit must give identical models however its rows are
+    partitioned: one partition (every window one partial) and 8 round-robin
+    partitions (each window split over several partials, the re-merge
+    folding them), with and without an extra key — the Chan merge is exact
+    under any partial split."""
+    for key_cols, n_models in (((), 4), (("conv_id",), 12)):
+        a = fit_windowed_pca(windowed_df.coalesce(1), "vec", "ts", "1 hour",
+                             key_cols=key_cols)
+        b = fit_windowed_pca(windowed_df.repartition(8), "vec", "ts",
+                             "1 hour", key_cols=key_cols)
+        assert a.models.keys() == b.models.keys()
+        assert len(a.models) == n_models
+        for gk in a.models:
+            np.testing.assert_allclose(a.models[gk].mu, b.models[gk].mu,
+                                       rtol=1e-10, atol=1e-12)
+            np.testing.assert_allclose(a.models[gk].eigenvalues,
+                                       b.models[gk].eigenvalues,
+                                       rtol=1e-8, atol=1e-10)
+
+
 def test_windowed_model_save_load_roundtrip(spark, windowed_df, tmp_path):
     """WindowedPCA.save/load: a transform-only rerun with the loaded model
     map must produce byte-identical features (the windowed twin of the
