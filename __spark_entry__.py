@@ -794,22 +794,14 @@ def q43_ngram_jaccard(spark, sf):
     # finishes) vs 4.3e6 at 10% (seconds).  max_df_frac resolves the
     # threshold INSIDE the plan (count(1) aggregate broadcast onto the
     # per-gram DF frame) — no separate driver-side full-corpus count action.
-    # size_strategy="window": scan -> shingle -> explode runs ONCE (set
-    # sizes carried as count() over (partition by doc_id) on the gram frame)
-    # instead of a separate re-aggregating branch.  Interleaved-min A/B at
-    # sf0.1 (BENCH/q43_ab.json): window 8.41s vs persist 8.98s vs reagg
-    # 12.49s.  The finalized AQE plan reuses the self-join exchange under
-    # BOTH strategies (post-execution probe); reagg's gap is the sizes
-    # branch re-running the full scan+shingle pass (16 vs 12 partition
-    # evals on the pruning-included probe source = 4 vs 3 full passes).
+    # Set sizes ride on the gram frame as a window count (BENCH/q43_ab.json).
     # max_df=None opts out of the production default's absolute stop-gram
     # cap (q41's max_bucket pattern): the oracle CTE mirrors ONLY the
     # fractional pruning, and above 20k docs the default 2000 cap would
     # bind below 10%*n and silently desync the two sides.
     out = ngram_jaccard_pairs(d, "text", "doc_id", n=3,
                               threshold=Q43_THRESHOLD,
-                              max_df=None, max_df_frac=Q43_MAX_DF_FRAC,
-                              size_strategy="window")
+                              max_df=None, max_df_frac=Q43_MAX_DF_FRAC)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 

@@ -193,7 +193,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 32,
                       bands: int = 8, k: int = 5,
                       portable: bool = False,
-                      cache_banded: bool = False,
                       max_bucket: int | None = 1000) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH.
 
@@ -207,16 +206,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     comma-joined signature slice (a string) instead of xxhash64 — both
     reproducible in DuckDB, making the full candidate set oracle-checkable.
 
-    ``cache_banded=True``: persist the banded frame across the two self-join
-    sides.  Same question as q43's size branch (VERDICT r03 #4): if the
-    self-join does not reuse one exchange, the whole shingle -> signature
-    -> banding pipeline (the expensive part) executes once per side.
-    A/B-measured by scripts/bench_q41.py; see BENCH/q41_ab.json.
-    THE CALLER OWNS UNPERSIST (ADVICE r04): the returned frame is lazy, so
-    this function cannot unpersist without defeating the cache — after the
-    consuming action, release the blocks with
-    ``spark.catalog.clearCache()`` or they accumulate for the lifetime of
-    a long-lived session (the bench scripts do; library users must too).
+    The two self-join sides share one reused exchange of the banded frame,
+    so the banding pipeline runs once without a cache (BENCH/q41_ab.json).
 
     ``max_bucket``: drop (band, band_hash) buckets wider than this before
     the self-join.  "Naturally bounded bucket sizes" fails on degenerate
@@ -237,8 +228,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     """
     banded = minhash_bands(df, text_col, id_col, num_hashes, bands, k,
                            portable)
-    return lsh_pairs_from_bands(banded, id_col, max_bucket=max_bucket,
-                                cache_banded=cache_banded)
+    return lsh_pairs_from_bands(banded, id_col, max_bucket=max_bucket)
 
 
 def minhash_bands(df: DataFrame, text_col: str = "text",
@@ -251,7 +241,10 @@ def minhash_bands(df: DataFrame, text_col: str = "text",
     share one signature pipeline instead of recomputing shingles twice.
     ``band_hash`` is a long (xxhash64 of the signature slice) on the scale
     path, a string on the ``portable`` oracle path."""
-    assert num_hashes % bands == 0
+    if bands <= 0 or num_hashes % bands != 0:
+        raise ValueError(
+            f"bands must be a positive divisor of num_hashes, got "
+            f"num_hashes={num_hashes}, bands={bands}")
     r = num_hashes // bands
     sig = minhash_signature(df, text_col, id_col, num_hashes, k, portable)
     if portable:
@@ -289,6 +282,17 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
         else df.localCheckpoint(eager=True)
 
 
+def _check_max_bucket(max_bucket: int | None) -> None:
+    # 0/negative is ambiguous ('disable'? 'drop everything'?) and the
+    # literal filter (__w <= 0) would silently drop EVERY band row and
+    # turn near-dedup off.  The CLI's '0 disables' convention maps
+    # 0 -> None before it reaches the library.
+    if max_bucket is not None and max_bucket <= 0:
+        raise ValueError(
+            f"max_bucket must be positive, got {max_bucket} "
+            f"(pass None to disable the cap)")
+
+
 def cap_bucket_width(df: DataFrame, keys: list[str],
                      max_bucket: int | None) -> DataFrame:
     """Drop rows of buckets wider than ``max_bucket`` (None = no cap).
@@ -299,20 +303,11 @@ def cap_bucket_width(df: DataFrame, keys: list[str],
     bucket wider than the cap contributes O(width^2) join rows — the
     documented 10^7-empty-docs quadratic — so capping BEFORE the self-join
     bounds the blowup.  Kept as ONE helper so a change to the cap
-    semantics (e.g. the window-vs-broadcast skew trade analysed on
-    ``embedding_near_dup_pairs``) lands everywhere at once (round-5
-    review: three drifting copies).
+    semantics lands on every banded self-join at once.
     """
+    _check_max_bucket(max_bucket)
     if max_bucket is None:
         return df
-    if max_bucket <= 0:
-        # 0/negative is ambiguous ('disable'? 'drop everything'?) and the
-        # literal filter (__w <= 0) would silently drop EVERY band row and
-        # turn near-dedup off (round-5 review).  The CLI's '0 disables'
-        # convention maps 0 -> None before it reaches the library.
-        raise ValueError(
-            f"max_bucket must be positive, got {max_bucket} "
-            f"(pass None to disable the cap)")
     wb = Window.partitionBy(*keys)
     return (df.withColumn("__w", F.count(F.lit(1)).over(wb))
             .filter(F.col("__w") <= max_bucket)
@@ -320,15 +315,11 @@ def cap_bucket_width(df: DataFrame, keys: list[str],
 
 
 def lsh_pairs_from_bands(banded: DataFrame, id_col: str = "doc_id",
-                         max_bucket: int | None = 1000,
-                         cache_banded: bool = False) -> DataFrame:
+                         max_bucket: int | None = 1000) -> DataFrame:
     """Distinct (id_a < id_b) candidate pairs from ``minhash_bands`` rows
-    via the (band, band_hash) equi self-join; ``max_bucket``/``cache_banded``
-    semantics exactly as documented on ``minhash_lsh_pairs`` (which is now
-    ``lsh_pairs_from_bands(minhash_bands(...))``)."""
+    via the (band, band_hash) equi self-join; ``max_bucket`` as documented
+    on ``minhash_lsh_pairs``."""
     banded = cap_bucket_width(banded, ["band", "band_hash"], max_bucket)
-    if cache_banded:
-        banded = banded.persist()
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -343,14 +334,15 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold: float = 0.8,
                         max_df: int | None = 2000,
-                        max_df_frac: float | None = None,
-                        size_strategy: str = "reagg",
-                        persist_grams: bool = False) -> DataFrame:
+                        max_df_frac: float | None = None) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs that share at least one n-gram.
 
     Inverted-index join on n-gram hash (|intersection| via groupBy count),
-    set sizes joined in, Jaccard = inter / (|A| + |B| - inter).  Shuffles
-    (ngram_hash, id) — the standard scalable set-similarity plan.
+    Jaccard = inter / (|A| + |B| - inter).  Shuffles (ngram_hash, id) — the
+    standard scalable set-similarity plan.  Set sizes ride on the gram frame
+    as ``count() over (partition by id)``, so scan -> shingle -> explode
+    runs once instead of again for a separate size aggregate
+    (BENCH/q43_ab.json).
 
     ``max_df``: stop-gram pruning, the guard against the quadratic hot-key
     blowup at scale — a gram shared by m documents emits m^2 join rows, and
@@ -373,34 +365,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     of the corpus size, resolved INSIDE the plan (a count(1) aggregate
     cross-joined onto the tiny per-gram DF frame) — no separate driver-side
     ``df.count()`` action scanning the corpus twice just to set a constant.
-
-    ``size_strategy`` (VERDICT r03 #4 — the pruned gram frame feeds three
-    consumers.  Regenerated evidence, BENCH/q43_ab.json: the finalized AQE
-    plan reuses ONE exchange across the self-join sides under BOTH
-    strategies — an earlier "no reuse" reading came from inspecting a
-    never-executed QueryExecution and is retracted.  Accumulator probe on
-    a 4-partition source, max_df_frac pruning included (the plan q43
-    actually runs; its ndocs count and gram-DF aggregate add two passes to
-    every variant): ``"reagg"`` evaluates it 16/4 = 4 full passes vs
-    ``"window"`` 12/4 = 3 — the delta is the sizes branch re-running
-    scan -> shingle -> explode; the join sides share the reused exchange):
-
-    * ``"reagg"`` — separate ``groupBy(id)`` size branch.  Pays one extra
-      full scan+shingle pass, but every shuffle beyond the join's is
-      map-side-combined partial counts (tiny).
-    * ``"window"`` — carry ``count() over (partition by id)`` on the gram
-      frame itself, so scan -> shingle -> explode runs ONCE and the two
-      post-join size lookups disappear; costs one full gram-frame shuffle
-      by id before the g-join.  Measured A/B at sf0.1, interleaved min
-      (BENCH/q43_ab.json): window 8.41s vs persist 8.98s vs reagg 12.49s
-      — q43 uses this.  At design scale the extra by-id shuffle is the
-      same O(total grams) class as the g-shuffle the join pays anyway,
-      while reagg's saved shuffle buys an extra full scan+shingle pass.
-
-    ``persist_grams``: cache the pruned gram frame across its consumers
-    instead of recomputing (third A/B arm; storage O(total grams)).
-    As with ``cache_banded``, THE CALLER OWNS UNPERSIST — release with
-    ``spark.catalog.clearCache()`` after the consuming action.
     """
     grams = df.select(
         id_col,
@@ -426,35 +390,18 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
             cond = frac_cond if cond is None else (cond | frac_cond)
         frequent = gram_df.filter(cond).select("g")
         grams = grams.join(F.broadcast(frequent), on="g", how="left_anti")
-    if persist_grams:
-        grams = grams.persist()
-    if size_strategy == "window":
-        gsz = grams.withColumn(
-            "__sz", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
-        a, b = gsz.alias("a"), gsz.alias("b")
-        scored = (
-            a.join(b, on="g")
-            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("inter"),
-                 F.min("a.__sz").alias("sz_a"),   # constant per id
-                 F.min("b.__sz").alias("sz_b"))
-        )
-    elif size_strategy == "reagg":
-        sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-        a, b = grams.alias("a"), grams.alias("b")
-        inter = (
-            a.join(b, on="g")
-            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-        sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-        scored = inter.join(sa, "id_a").join(sb, "id_b")
-    else:
-        raise ValueError(f"size_strategy must be reagg|window, got {size_strategy!r}")
+    gsz = grams.withColumn(
+        "__sz", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+    a, b = gsz.alias("a"), gsz.alias("b")
+    scored = (
+        a.join(b, on="g")
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"),
+                 F.col(f"b.{id_col}").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("inter"),
+             F.min("a.__sz").alias("sz_a"),   # constant per id
+             F.min("b.__sz").alias("sz_b"))
+    )
     return (
         scored
         .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
@@ -535,12 +482,9 @@ def simhash_pairs_from_fingerprints(fps: DataFrame, id_col: str = "doc_id",
     ``max_bucket`` degenerate-corpus guard (every empty/near-empty doc
     fingerprints to the SAME value, so one bucket per band would otherwise
     emit ~n^2 join rows; dropping over-wide buckets via a window count on
-    the join's own partitioning costs no extra exchange).  The self-join
-    recomputes the fingerprint pipeline once per side — the same trade
-    ``minhash_lsh_pairs`` A/B-measured for its banded frame
-    (BENCH/q41_ab.json: persist won ~4% at sf0.1 but leaves the caller
-    owning unpersist in a long-lived session); persist ``fps`` yourself
-    before calling if the fingerprint pass dominates at your scale.
+    the join's own partitioning costs no extra exchange).  Nothing is
+    cached, as in ``minhash_lsh_pairs`` (BENCH/q41_ab.json); persist ``fps``
+    yourself before calling if the fingerprint pass dominates at your scale.
     """
     if max_hamming < 0:
         raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
@@ -811,7 +755,6 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
                              threshold: float = 0.95,
                              n_planes: int = 8, n_tables: int = 8,
                              max_bucket: int | None = 1000,
-                             cap_strategy: str = "window",
                              dim: int | None = None,
                              seed: int = 7) -> DataFrame:
     """Embedding-cosine near-dup via multi-table random-hyperplane LSH.
@@ -833,43 +776,16 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
       going quadratic on pathological data.  The default is the finite
       1000 of the MinHash/SimHash siblings, so the library default matches
       its production callers (which all pass a cap); pass
-      ``max_bucket=None`` explicitly for the exact candidate set.
-      ``cap_strategy`` picks how, and the two differ exactly on the
-      adversarial input the cap guards:
-
-      - ``"window"`` — width carried as ``count() over (partition by
-        table, bucket)`` on the tagged frame itself (the q43 trick).  ONE
-        upstream GEMM pass (an accumulator probe showed the anti-join form
-        re-executes it: 12 vs 8 source evals on a 4-partition probe), and
-        the window's hash(table, bucket) exchange is the partitioning the
-        self-join needs.  BUT the pathological bucket's rows all reach one
-        WindowExec task and are sorted/buffered there before the filter
-        drops them: at 1e8 colliding rows that is a ~2.4 GB single-task
-        sort-spill straggler; at 1e10 it is the job.
-      - ``"broadcast"`` — groupBy(table, bucket) count (map-side combine
-        collapses the mega-bucket to one row per map task; the shuffle
-        moves only counts), filter > max_bucket (wide buckets are rare by
-        construction, so the list broadcasts), broadcast ANTI-join drops
-        pathological rows map-side BEFORE any full shuffle sees them.
-        Skew-proof, at the price of one extra evaluation of the upstream
-        scan+GEMM chain (the count branch).
-
-      Default ``"window"``: re-scanning a 100 TB embedding table costs
-      more than a bounded straggler, and ``n_planes`` is sized so buckets
-      stay bounded on sane data.  Choose ``"broadcast"`` when pathological
-      mass is unknown/unbounded, or the upstream is cheap or cached.
-      Identical output either way (tests/test_dedup.py pins both);
+      ``max_bucket=None`` explicitly for the exact candidate set.  The
+      width is a ``count() over (partition by table, bucket)`` window
+      (``cap_bucket_width``), so every row of a pathological bucket
+      reaches one window task before the filter drops it;
     * exact cosine only for distinct candidate pairs, vectors re-joined by
       id (broadcast-able when candidates are few).
     """
     from pyspark.sql.types import ArrayType, LongType
 
-    if cap_strategy not in ("window", "broadcast"):
-        # Validated up front even with max_bucket=None (and before the dim
-        # probe runs a job): a typo must not lie dormant until a production
-        # config enables the cap.
-        raise ValueError(
-            f"cap_strategy must be window|broadcast, got {cap_strategy!r}")
+    _check_max_bucket(max_bucket)  # before the dim probe runs a job
     if dim is None:
         # O(1) build-time probe, but still an extra Spark job over the
         # upstream plan — prefer passing ``dim`` when the embedding width
@@ -904,22 +820,7 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
         F.col(id_col),
         F.posexplode(_buckets(v)).alias("tbl", "bucket"),
     )
-    if max_bucket is not None:
-        if max_bucket <= 0:
-            raise ValueError(
-                f"max_bucket must be positive, got {max_bucket} "
-                f"(pass None to disable the cap)")
-        if cap_strategy == "window":
-            # shared guard (round-5 review: this branch had re-grown an
-            # inline copy of the exact block cap_bucket_width centralizes)
-            tagged = cap_bucket_width(tagged, ["tbl", "bucket"], max_bucket)
-        else:
-            wide = (tagged.groupBy("tbl", "bucket")
-                    .agg(F.count(F.lit(1)).alias("__w"))
-                    .filter(F.col("__w") > max_bucket)
-                    .select("tbl", "bucket"))
-            tagged = tagged.join(F.broadcast(wide),
-                                 on=["tbl", "bucket"], how="left_anti")
+    tagged = cap_bucket_width(tagged, ["tbl", "bucket"], max_bucket)
     a, b = tagged.alias("a"), tagged.alias("b")
     cand = (
         a.join(b, on=["tbl", "bucket"])

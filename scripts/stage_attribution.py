@@ -29,7 +29,6 @@ import os
 import subprocess
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

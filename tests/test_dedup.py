@@ -61,26 +61,47 @@ def test_jaccard_pruning_noop_when_not_binding(spark, sf01_dir):
     assert key(base) == key(pruned)
 
 
-def test_jaccard_size_strategies_agree(spark):
-    """VERDICT r03 #4: the window size-carry variant (shingle chain runs
-    once) and the persisted-grams arm must reproduce the reagg reference
-    exactly — pruned and unpruned."""
+def _bruteforce_jaccard(rows, n, max_df=None, threshold=0.0):
+    """Pairwise Jaccard over character n-gram sets in plain Python: grams
+    of lower(text) at every start in 1..max(len - n + 1, 1) (a shorter text
+    is one gram, itself), a NULL text the single seed gram ``None`` — what
+    ``shingle_hashes`` makes.  Grams in more than ``max_df`` documents are
+    pruned; only pairs sharing a surviving gram are emitted."""
+    def grams(t):
+        if t is None:
+            return {None}
+        t = t.lower()
+        return {t[i:i + n] for i in range(max(len(t) - n + 1, 1))}
+
+    sets = {i: grams(t) for i, t in rows}
+    if max_df is not None:
+        df = {}
+        for g in (g for s in sets.values() for g in s):
+            df[g] = df.get(g, 0) + 1
+        sets = {i: {g for g in s if df[g] <= max_df} for i, s in sets.items()}
+    out = {}
+    for a in sets:
+        for b in sets:
+            inter = len(sets[a] & sets[b])
+            if a < b and inter:
+                jac = inter / len(sets[a] | sets[b])
+                if jac >= threshold:
+                    out[(a, b)] = round(jac, 9)
+    return out
+
+
+def test_jaccard_matches_bruteforce_reference(spark):
+    """The window-count set-size plan against an independent Python
+    Jaccard over n-gram sets, unpruned and with stop-gram pruning."""
     rows = [(i, "xx" + format(i, "04d")) for i in range(20)]
     rows += [(100, "yyabcd"), (101, "yyabcd"), (102, "yyabce"), (103, None)]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    key = lambda df: {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-                      for r in df.collect()}
-    for kw in ({}, {"max_df": 5}):
-        ref = key(ngram_jaccard_pairs(d, "text", "doc_id", n=2,
-                                      threshold=0.01, **kw))
-        win = key(ngram_jaccard_pairs(d, "text", "doc_id", n=2, threshold=0.01,
-                                      size_strategy="window", **kw))
-        per = key(ngram_jaccard_pairs(d, "text", "doc_id", n=2, threshold=0.01,
-                                      persist_grams=True, **kw))
-        assert win == ref and per == ref
-    spark.catalog.clearCache()
-    with pytest.raises(ValueError, match="size_strategy"):
-        ngram_jaccard_pairs(d, size_strategy="nope")
+    for max_df in (None, 5):
+        got = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+               for r in ngram_jaccard_pairs(d, "text", "doc_id", n=2,
+                                            threshold=0.01,
+                                            max_df=max_df).collect()}
+        assert got == _bruteforce_jaccard(rows, 2, max_df, 0.01), max_df
 
 
 def test_jaccard_pruning_binds_on_hot_grams(spark):
@@ -163,21 +184,12 @@ def test_ann_bucket_cap_drops_degenerate_buckets(spark):
     uncapped = embedding_near_dup_pairs(df, "embedding", "vec_id",
                                         threshold=0.5, n_planes=4, n_tables=2)
     assert len(_pairs(uncapped)) == 50 * 49 // 2
-    # Both cap strategies implement the same semantics: "window" (one
-    # upstream pass, pathological bucket buffered in one window task) and
-    # "broadcast" (map-side anti-join drop, extra upstream pass) — the
-    # design-scale tradeoff is in the docstring; outputs must be identical.
-    for strategy in ("window", "broadcast"):
-        capped = embedding_near_dup_pairs(df, "embedding", "vec_id",
-                                          threshold=0.5, n_planes=4,
-                                          n_tables=2, max_bucket=10,
-                                          cap_strategy=strategy)
-        assert len(_pairs(capped)) == 0, strategy  # every bucket wider than cap
-    with pytest.raises(ValueError, match="cap_strategy"):
-        embedding_near_dup_pairs(df, "embedding", "vec_id", max_bucket=10,
-                                 cap_strategy="nope").collect()
+    capped = embedding_near_dup_pairs(df, "embedding", "vec_id",
+                                      threshold=0.5, n_planes=4, n_tables=2,
+                                      max_bucket=10)
+    assert len(_pairs(capped)) == 0  # every bucket wider than cap
     # Mixed corpus — a mega-bucket that trips the cap PLUS small planted
-    # pairs that survive it: the two strategies must emit the same pair set.
+    # pairs that survive it.
     planted = []
     for j in range(5):
         b = rng.normal(size=16) * (1 + j)
@@ -186,13 +198,10 @@ def test_ann_bucket_cap_drops_degenerate_buckets(spark):
                             [float(x) for x in b + rng.normal(scale=1e-3, size=16)]))
     mixed = spark.createDataFrame(rows + planted,
                                   "vec_id long, embedding array<double>")
-    got = {}
-    for strategy in ("window", "broadcast"):
-        got[strategy] = _pairs(embedding_near_dup_pairs(
-            mixed, "embedding", "vec_id", threshold=0.5, n_planes=4,
-            n_tables=2, max_bucket=10, cap_strategy=strategy))
-    assert got["window"] == got["broadcast"]
-    assert len(got["window"]) >= 5  # the planted small-bucket pairs survive
+    got = _pairs(embedding_near_dup_pairs(
+        mixed, "embedding", "vec_id", threshold=0.5, n_planes=4,
+        n_tables=2, max_bucket=10))
+    assert len(got) >= 5  # the planted small-bucket pairs survive
 
 
 # ---------------------------------------------------------------------------
@@ -299,21 +308,6 @@ def test_minhash_identical_docs_always_collide(spark):
         assert (0, 2) not in pairs and (1, 2) not in pairs
 
 
-def test_minhash_cache_banded_equivalence(spark):
-    """cache_banded persists the banded frame across the two self-join
-    sides (see scripts/bench_q41.py for the recompute A/B); the candidate
-    pair set must be identical."""
-    d = spark.createDataFrame(
-        [(i, ("dup text body shared " if i % 3 == 0 else f"unique {i} ") * 3)
-         for i in range(30)], "doc_id long, text string")
-    base = _pairs(minhash_lsh_pairs(d, "text", "doc_id", num_hashes=16,
-                                    bands=4, k=4))
-    cached = _pairs(minhash_lsh_pairs(d, "text", "doc_id", num_hashes=16,
-                                      bands=4, k=4, cache_banded=True))
-    spark.catalog.clearCache()
-    assert base == cached and len(base) >= 1
-
-
 def test_minhash_signature_deterministic(spark):
     d = spark.createDataFrame([(0, "alpha beta gamma delta")],
                               "doc_id long, text string")
@@ -321,6 +315,16 @@ def test_minhash_signature_deterministic(spark):
     s2 = minhash_signature(d, "text", "doc_id", 8, 4, portable=True).collect()
     assert s1[0]["signature"] == s2[0]["signature"]
     assert len(s1[0]["signature"]) == 8
+
+
+def test_minhash_bands_validates_banding(spark):
+    """Banding must split the signature evenly: 30 hashes in 8 bands would
+    band only 24 of them, and 0 bands has no band width.  Both raise
+    ValueError even under ``python -O``."""
+    d = spark.createDataFrame([(0, "alpha beta")], "doc_id long, text string")
+    for num_hashes, bands in ((30, 8), (32, 0)):
+        with pytest.raises(ValueError, match="divisor"):
+            minhash_bands(d, "text", "doc_id", num_hashes, bands)
 
 
 def _lambda_minhash_bands(df, num_hashes=32, bands=8, k=5, portable=False):
@@ -1044,6 +1048,12 @@ def test_cap_bucket_width_rejects_nonpositive(spark):
     with pytest.raises(ValueError, match="positive"):
         embedding_near_dup_pairs(vecs, "embedding", "vec_id",
                                  max_bucket=0).collect()
+    # an all-NULL corpus has no vector for the dim probe to read; the cap
+    # is still rejected instead of an empty result coming back
+    nulls = spark.createDataFrame([(1, None)],
+                                  "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="positive"):
+        embedding_near_dup_pairs(nulls, "embedding", "vec_id", max_bucket=0)
 
 
 def test_exact_dedup_null_id_raises(spark):

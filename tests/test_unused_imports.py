@@ -1,6 +1,7 @@
-"""No module in the package or ``jobs/`` keeps a module-level import it
-never uses.  Plain AST scan, no linter dependency; ``__init__.py`` files
-are skipped because their imports are re-exports."""
+"""No module in the package, ``jobs/``, ``scripts/``, ``__spark_entry__.py``
+or ``bench.py`` keeps a module-level import it never uses.  Plain AST scan,
+no linter dependency; ``__init__.py`` files are skipped because their
+imports are re-exports."""
 
 from __future__ import annotations
 
@@ -13,8 +14,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _modules() -> list[str]:
-    out = []
-    for top in ("featureextraction_jl_spark", "jobs"):
+    out = ["__spark_entry__.py", "bench.py"]
+    for top in ("featureextraction_jl_spark", "jobs", "scripts"):
         for root, _dirs, files in os.walk(os.path.join(REPO, top)):
             out += [os.path.relpath(os.path.join(root, f), REPO)
                     for f in files
