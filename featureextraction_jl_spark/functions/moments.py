@@ -365,14 +365,15 @@ def compute_moments(df: DataFrame, vec_col: str) -> Moments:
     stage); above it they first go through the re-merge worker keyed on
     ``spark_partition_id() % 64`` (one tiny shuffle of partials, never row
     data), so the driver folds at most 64 rows.  The probe is
-    ``df.rdd.getNumPartitions()``.  It is NOT free when ``df`` ends in a
-    shuffle: under AQE, building the RDD runs the map stages below the last
-    exchange as a Spark job (on ``feature_job``'s chain that is the as-of
-    exchange: 0.23–0.33 s warm at perfbench seed 61 on a 4-core VM), and
-    the partials' collect then runs that stage again.
+    ``partials.rdd.getNumPartitions()``: mapInArrow keeps ``df``'s
+    partitioning, so the count is ``df``'s.  When ``df`` ends in a shuffle,
+    building the RDD under AQE runs the map stages below the last exchange
+    as a Spark job (on ``feature_job``'s chain, the as-of exchange).  The
+    probe and the collect share the partial frame's query execution, so
+    the collect reuses that materialized stage instead of running it again.
     """
     partials = _partials_df(df, vec_col)
-    if df.rdd.getNumPartitions() > _BUCKETED_THRESHOLD:
+    if partials.rdd.getNumPartitions() > _BUCKETED_THRESHOLD:
         partials = _remerge(partials.select(
             (F.spark_partition_id() % F.lit(_BUCKETS)).alias("_b"),
             "n", "mean", "m2"), ["_b"])

@@ -231,6 +231,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     return lsh_pairs_from_bands(banded, id_col, max_bucket=max_bucket)
 
 
+def check_banding(num_hashes: int, bands: int) -> None:
+    if bands <= 0 or num_hashes % bands != 0:
+        raise ValueError(
+            f"bands must be a positive divisor of num_hashes, got "
+            f"num_hashes={num_hashes}, bands={bands}")
+
+
 def minhash_bands(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", num_hashes: int = 32,
                   bands: int = 8, k: int = 5,
@@ -241,10 +248,7 @@ def minhash_bands(df: DataFrame, text_col: str = "text",
     share one signature pipeline instead of recomputing shingles twice.
     ``band_hash`` is a long (xxhash64 of the signature slice) on the scale
     path, a string on the ``portable`` oracle path."""
-    if bands <= 0 or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands must be a positive divisor of num_hashes, got "
-            f"num_hashes={num_hashes}, bands={bands}")
+    check_banding(num_hashes, bands)
     r = num_hashes // bands
     sig = minhash_signature(df, text_col, id_col, num_hashes, k, portable)
     if portable:

@@ -107,6 +107,7 @@ from pyspark.sql import functions as F
 from .. import manifest
 from .dedup import (
     cap_bucket_width,
+    check_banding,
     connected_components,
     content_digests,
     eager_checkpoint,
@@ -142,6 +143,11 @@ class IncrementalDedupConfig:
     bands: int = 8
     shingle_k: int = 5
     max_bucket: int | None = 1000
+
+    def __post_init__(self) -> None:
+        # before the first commit freezes a banding minhash_bands rejects
+        # into index.json, which would refuse the corrected rerun
+        check_banding(self.num_hashes, self.bands)
 
     def index_signature(self) -> dict[str, Any]:
         return {"version": 1, "num_hashes": self.num_hashes,

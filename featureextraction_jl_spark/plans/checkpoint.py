@@ -23,9 +23,11 @@ Protocol (manifest-last, crash-safe):
    ``_manifest/model.npz`` + ``_manifest/fit.json`` (n, wall_s, explained
    variance, moment checksum).  Skipped on resume when fingerprint+config
    match.
-3. **Transform stage**, every pending unit in ONE Spark write: filter the
-   input to the pending units (only when some are already done) ->
-   transform-only ``run_features`` -> add the ``unit`` column -> parquet
+3. **Transform stage**, every pending unit in ONE Spark write: the run's
+   one chain build (the fit's, when the fit ran) -> filtered to the pending
+   units (only when some are already done; Catalyst pushes the conv_id
+   filter through the Windows and the as-of Union into both scans, below
+   the Exchange) -> ``project_features`` -> add the ``unit`` column -> parquet
    ``partitionBy("unit")`` with dynamic partition overwrite, which replaces
    only the ``unit=<i>/`` dirs it writes (a static overwrite would delete
    ``_manifest/`` and the resumed units).  One ``Observation`` counts every
@@ -63,11 +65,14 @@ from pyspark.sql import functions as F
 from featureextraction_jl_spark import manifest
 from featureextraction_jl_spark.functions.pca import PCAModel, fit_pca
 from featureextraction_jl_spark.functions.moments import compute_moments
-from featureextraction_jl_spark.plans.windowed_pca import WindowedPCA
+from featureextraction_jl_spark.plans.windowed_pca import (
+    WindowedPCA,
+    fit_windowed_pca,
+)
 from featureextraction_jl_spark.plans.feature_job import (
     FeatureJobConfig,
     build_turn_features,
-    run_features,
+    project_features,
 )
 
 MANIFEST_DIR = "_manifest"
@@ -216,78 +221,6 @@ def run_features_resumable(
     snapshots = (read_table(spark, snapshots_path, fmt)
                  if snapshots_path else None)
 
-    # ---- fit stage -------------------------------------------------------
-    # Global mode persists ONE model.npz; windowed mode (cfg.window_duration)
-    # persists a wmodels/ directory (one .npz per window + index.json — the
-    # WindowedPCA manifest).  config_hash covers window_duration, so
-    # switching modes invalidates every manifest.
-    windowed = cfg.window_duration is not None
-    model_path = os.path.join(mdir, "wmodels" if windowed else "model.npz")
-    model_ready = os.path.exists(
-        os.path.join(model_path, "index.json") if windowed else model_path)
-    fit_man_path = os.path.join(mdir, "fit.json")
-    fit_man = manifest.read(fit_man_path)
-    # The artifact carries its own provenance sidecar (written atomically
-    # AFTER the artifact, BEFORE fit.json): fit.json alone cannot vouch for
-    # the artifact bytes — a crash between a NEWER run's model.save and its
-    # fit.json write leaves a mismatched artifact next to an older-valid
-    # manifest, and resuming would project every remaining unit through the
-    # wrong model (windowed keys would all miss -> silent all-NULL units).
-    meta_path = os.path.join(mdir, "model.meta.json")
-    model_ready = model_ready and valid(manifest.read(meta_path))
-    if valid(fit_man) and model_ready:
-        model = (WindowedPCA.load(model_path) if windowed
-                 else PCAModel.load(model_path))
-    elif windowed:
-        from featureextraction_jl_spark.plans.windowed_pca import (
-            fit_windowed_pca,
-        )
-
-        t0 = time.monotonic()
-        prepared = build_turn_features(transcripts, snapshots, cfg)
-        model = fit_windowed_pca(prepared, "raw_vec", "ts",
-                                 cfg.window_duration, k=cfg.k, mode=cfg.mode)
-        model.save(model_path)
-        manifest.write_atomic(meta_path, {
-            "input_fingerprint": fp, "config_hash": chash,
-            "artifact": os.path.basename(model_path)})
-        fit_man = {
-            "stage": "fit",
-            "input_fingerprint": fp,
-            "config_hash": chash,
-            "windowed": True,
-            "window_duration": cfg.window_duration,
-            "n_rows": int(sum(model.counts.values())
-                          + sum(model.skipped.values())),
-            "windows_fitted": len(model.models),
-            "windows_skipped": len(model.skipped),
-            "wall_s": round(time.monotonic() - t0, 3),
-        }
-        manifest.write_atomic(fit_man_path, fit_man)
-    else:
-        t0 = time.monotonic()
-        prepared = build_turn_features(transcripts, snapshots, cfg)
-        moments = compute_moments(prepared, "raw_vec")
-        model = fit_pca(moments, k=cfg.k, mode=cfg.mode)
-        model.save(model_path)
-        manifest.write_atomic(meta_path, {
-            "input_fingerprint": fp, "config_hash": chash,
-            "artifact": os.path.basename(model_path)})
-        fit_man = {
-            "stage": "fit",
-            "input_fingerprint": fp,
-            "config_hash": chash,
-            "n_rows": int(moments.n),
-            "p": int(moments.mean.shape[0]),
-            "moment_checksum": hashlib.sha256(
-                moments.mean.tobytes() + moments.m2.tobytes()).hexdigest()[:16],
-            "explained_variance_ratio": [
-                round(float(r), 8) for r in model.explained_variance_ratio],
-            "wall_s": round(time.monotonic() - t0, 3),
-        }
-        manifest.write_atomic(fit_man_path, fit_man)
-
-    # ---- transform stage: every pending unit in one write ---------------
     # Stale-unit sweep: a re-run with a smaller n_units would otherwise
     # leave unit=k (k >= n_units) data dirs from the old split on disk, and
     # read_feature_output(validate=False) would union them — duplicating
@@ -318,14 +251,74 @@ def run_features_resumable(
                      if valid(manifest.read(unit_manifest(u)))
                      and os.path.isdir(unit_dir(u))]
     pending = [u for u in range(n_units) if u not in units_skipped]
+
+    # ---- fit stage -------------------------------------------------------
+    # Global mode persists ONE model.npz; windowed mode (cfg.window_duration)
+    # persists a wmodels/ directory (one .npz per window + index.json — the
+    # WindowedPCA manifest).  config_hash covers window_duration, so
+    # switching modes invalidates every manifest.
+    windowed = cfg.window_duration is not None
+    model_path = os.path.join(mdir, "wmodels" if windowed else "model.npz")
+    model_ready = os.path.exists(
+        os.path.join(model_path, "index.json") if windowed else model_path)
+    fit_man_path = os.path.join(mdir, "fit.json")
+    fit_man = manifest.read(fit_man_path)
+    # The artifact carries its own provenance sidecar (written atomically
+    # AFTER the artifact, BEFORE fit.json): fit.json alone cannot vouch for
+    # the artifact bytes — a crash between a NEWER run's model.save and its
+    # fit.json write leaves a mismatched artifact next to an older-valid
+    # manifest, and resuming would project every remaining unit through the
+    # wrong model (windowed keys would all miss -> silent all-NULL units).
+    meta_path = os.path.join(mdir, "model.meta.json")
+    fitted = valid(fit_man) and model_ready \
+        and valid(manifest.read(meta_path))
+    # The chain is built once, over the whole input, and read by both the
+    # fit and the transform; a run with nothing to do never builds it.
+    t0 = time.monotonic()
+    prepared = (build_turn_features(transcripts, snapshots, cfg)
+                if pending or not fitted else None)
+    if fitted:
+        model = (WindowedPCA.load(model_path) if windowed
+                 else PCAModel.load(model_path))
+    else:
+        if windowed:
+            model = fit_windowed_pca(prepared, "raw_vec", "ts",
+                                     cfg.window_duration, k=cfg.k,
+                                     mode=cfg.mode)
+            stats = {"windowed": True, "window_duration": cfg.window_duration,
+                     "n_rows": int(sum(model.counts.values())
+                                   + sum(model.skipped.values())),
+                     "windows_fitted": len(model.models),
+                     "windows_skipped": len(model.skipped)}
+        else:
+            moments = compute_moments(prepared, "raw_vec")
+            model = fit_pca(moments, k=cfg.k, mode=cfg.mode)
+            stats = {"n_rows": int(moments.n), "p": int(moments.mean.shape[0]),
+                     "moment_checksum": hashlib.sha256(
+                         moments.mean.tobytes() + moments.m2.tobytes()
+                     ).hexdigest()[:16],
+                     "explained_variance_ratio": [
+                         round(float(r), 8)
+                         for r in model.explained_variance_ratio]}
+        model.save(model_path)
+        manifest.write_atomic(meta_path, {
+            "input_fingerprint": fp, "config_hash": chash,
+            "artifact": os.path.basename(model_path)})
+        fit_man = {"stage": "fit", "input_fingerprint": fp,
+                   "config_hash": chash, **stats,
+                   "wall_s": round(time.monotonic() - t0, 3)}
+        manifest.write_atomic(fit_man_path, fit_man)
+
+    # ---- transform stage: every pending unit in one write ---------------
     if pending:
         t0 = time.monotonic()
         unit = F.pmod(F.hash("conv_id"), F.lit(n_units))
         if units_skipped:
-            transcripts = transcripts.filter(unit.isin(pending))
-            if snapshots is not None:
-                snapshots = snapshots.filter(unit.isin(pending))
-        feats, _ = run_features(transcripts, snapshots, cfg, model=model)
+            # conv_id is the key of every Window and of the as-of Union, so
+            # Catalyst pushes this filter into both scans, below the
+            # Exchange: a done unit's rows are never shuffled
+            prepared = prepared.filter(unit.isin(pending))
+        feats = project_features(prepared, model, cfg)
         obs = Observation("units")
         out = feats.withColumn("unit", unit).observe(
             obs, *[F.count_if(F.col("unit") == u).alias(str(u))

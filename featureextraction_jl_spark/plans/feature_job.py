@@ -51,6 +51,11 @@ from featureextraction_jl_spark.functions.pca import PCAModel, fit_pca, project_
 from featureextraction_jl_spark.operators.sessionize import sessionize
 from featureextraction_jl_spark.operators.backfill import forward_fill
 from featureextraction_jl_spark.operators.asof import asof_join
+from featureextraction_jl_spark.plans.windowed_pca import (
+    WindowedPCA,
+    fit_windowed_pca,
+    project_windowed,
+)
 
 
 @dataclass
@@ -140,6 +145,35 @@ def build_turn_features(transcripts: DataFrame, snapshots: DataFrame | None,
     return assemble_raw_vector(df, cfg)
 
 
+def project_features(prepared: DataFrame, model,
+                     cfg: FeatureJobConfig) -> DataFrame:
+    """The job's output over a built chain: the passthrough columns plus
+    ``feature_vec``, projected through ``model``, a global PCAModel, or a
+    WindowedPCA when ``cfg.window_duration`` is set (every row projects
+    through its own window's model, or one ``cfg.window_lag_models``
+    earlier).  A model of the other kind raises TypeError."""
+    if cfg.window_duration is not None:
+        if not isinstance(model, WindowedPCA):
+            raise TypeError(
+                "window_duration is set but the pre-fitted model is a "
+                f"global {type(model).__name__}; pass a WindowedPCA")
+        prepared = project_windowed(prepared, model, "raw_vec", "ts",
+                                    out_col="feature_vec",
+                                    lag_models=cfg.window_lag_models)
+        vec = F.col("feature_vec")
+    elif isinstance(model, WindowedPCA):
+        # without it project_udf dies with an opaque AttributeError
+        # instead of pointing at the missing window_duration
+        raise TypeError(
+            "pre-fitted model is a WindowedPCA but window_duration is not "
+            "set; set cfg.window_duration to the duration it was fitted "
+            "with (or pass a global PCAModel)")
+    else:
+        vec = project_udf(model, "raw_vec").alias("feature_vec")
+    return prepared.select("conv_id", "turn_idx", "ts", "role", "text",
+                           "tool", "session_id", vec)
+
+
 def run_features(transcripts: DataFrame, snapshots: DataFrame | None = None,
                  cfg: FeatureJobConfig | None = None,
                  model=None) -> tuple[DataFrame, "PCAModel"]:
@@ -153,53 +187,12 @@ def run_features(transcripts: DataFrame, snapshots: DataFrame | None = None,
     """
     cfg = cfg or FeatureJobConfig()
     prepared = build_turn_features(transcripts, snapshots, cfg)
-
-    if cfg.window_duration is not None:
-        # Per-window models (north star's "windowed PCA/whitening features"):
-        # same prepared chain, but the fit is per tumbling window and every
-        # row projects through its OWN window's model (or an earlier one
-        # with window_lag_models).  ``model`` may be a pre-fitted
-        # WindowedPCA (transform-only mode, mirroring the global path).
-        from featureextraction_jl_spark.plans.windowed_pca import (
-            WindowedPCA,
-            fit_windowed_pca,
-            project_windowed,
-        )
-
-        if model is None:
-            model = fit_windowed_pca(prepared, "raw_vec", "ts",
-                                     cfg.window_duration, k=cfg.k,
-                                     mode=cfg.mode)
-        elif not isinstance(model, WindowedPCA):
-            raise TypeError(
-                "window_duration is set but the pre-fitted model is a "
-                f"global {type(model).__name__}; pass a WindowedPCA")
-        out = project_windowed(prepared, model, "raw_vec", "ts",
-                               out_col="feature_vec",
-                               lag_models=cfg.window_lag_models).select(
-            "conv_id", "turn_idx", "ts", "role", "text", "tool",
-            "session_id", "feature_vec")
-        return out, model
-
-    from featureextraction_jl_spark.plans.windowed_pca import WindowedPCA
-
-    if model is not None and isinstance(model, WindowedPCA):
-        # symmetric twin of the windowed branch's TypeError (round-5
-        # review): without it project_udf dies with an opaque
-        # AttributeError instead of pointing at the missing
-        # window_duration
-        raise TypeError(
-            "pre-fitted model is a WindowedPCA but window_duration is not "
-            "set; set cfg.window_duration to the duration it was fitted "
-            "with (or pass a global PCAModel)")
-    if model is None:
-        # Fit pass reads only raw_vec (column-pruned chain); the projection
-        # pass recomputes the chain with the text payload (module
-        # docstring: recompute beats cache).
-        moments = compute_moments(prepared, "raw_vec")
-        model = fit_pca(moments, k=cfg.k, mode=cfg.mode)
-    out = prepared.select(
-        "conv_id", "turn_idx", "ts", "role", "text", "tool", "session_id",
-        project_udf(model, "raw_vec").alias("feature_vec"),
-    )
-    return out, model
+    # the fit reads only raw_vec (column-pruned chain); the projection
+    # recomputes the chain with the text (module docstring: recompute wins)
+    if model is None and cfg.window_duration is not None:
+        model = fit_windowed_pca(prepared, "raw_vec", "ts",
+                                 cfg.window_duration, k=cfg.k, mode=cfg.mode)
+    elif model is None:
+        model = fit_pca(compute_moments(prepared, "raw_vec"), k=cfg.k,
+                        mode=cfg.mode)
+    return project_features(prepared, model, cfg), model

@@ -298,6 +298,53 @@ def test_resumable_windowed_equals_direct_and_resumes(spark, inputs, tmp_path):
     assert job2["rows"] == job["rows"]
 
 
+def test_one_chain_build_per_run_and_unit_filter_below_exchange(
+        spark, inputs, tmp_path, monkeypatch):
+    """The fit and the transform read one chain build, global or windowed
+    (counted in both modules, so a build inside run_features counts too).
+    A resume filters that chain to the pending units, and Catalyst pushes
+    the filter into both scans, below the as-of Exchange, so a done unit's
+    rows are never shuffled."""
+    import featureextraction_jl_spark.plans.checkpoint as ck
+    import featureextraction_jl_spark.plans.feature_job as fj
+
+    tdir, sdir = inputs
+    builds, feats = [], []
+
+    def build(*args):
+        builds.append(args)
+        return real_build(*args)
+
+    def project(*args):
+        feats.append(real_project(*args))
+        return feats[-1]
+
+    real_build, real_project = ck.build_turn_features, ck.project_features
+    monkeypatch.setattr(ck, "build_turn_features", build)
+    monkeypatch.setattr(fj, "build_turn_features", build)
+    monkeypatch.setattr(ck, "project_features", project)
+    wcfg = FeatureJobConfig(num_buckets=8, k=4, snap_dim=16,
+                            window_duration="7 days")
+    for name, cfg in (("global", CFG), ("windowed", wcfg)):
+        builds.clear()
+        run_features_resumable(spark, tdir, str(tmp_path / name), sdir, cfg,
+                               n_units=N_UNITS)
+        assert len(builds) == 1, name
+
+    out = str(tmp_path / "global")
+    os.remove(os.path.join(out, "_manifest", "unit_1.json"))
+    builds.clear()
+    job = run_features_resumable(spark, tdir, out, sdir, CFG, n_units=N_UNITS)
+    assert len(builds) == 1
+    assert job["units_computed_this_run"] == [1]
+    plan = feats[-1]._jdf.queryExecution().executedPlan().toString()
+    above, below = plan.split("Exchange hashpartitioning", 1)
+    assert "pmod(hash(conv_id" not in above, plan
+    unit_filters = [line for line in below.splitlines()
+                    if "Filter (" in line and "pmod(hash(conv_id" in line]
+    assert len(unit_filters) == 2 and below.count("FileScan") == 2, plan
+
+
 def test_stale_model_artifact_triggers_refit(spark, inputs, direct, tmp_path):
     """A model artifact left by a DIFFERENT run (crash between model.save
     and fit.json: newer artifact beside an older-valid manifest) must not

@@ -159,6 +159,22 @@ def test_banding_param_change_against_existing_index_raises(spark, tmp_path):
         commit_batch(docs, idx, "b2", other)
 
 
+def test_bad_banding_raises_before_the_index_is_created(spark, tmp_path):
+    """A banding that does not divide num_hashes raises before anything is
+    written, so the corrected rerun on the same index dir succeeds instead
+    of failing the frozen-params check against the rejected banding."""
+    docs = _docs(spark, [(0, _unique_text(0)), (1, _unique_text(1))])
+    idx = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="positive divisor"):
+        dedup_and_commit(spark, docs, idx, "b1",
+                         IncrementalDedupConfig(num_hashes=30, bands=8))
+    assert not os.path.exists(os.path.join(idx, "index.json"))
+    surv, man = dedup_and_commit(spark, docs, idx, "b1",
+                                 IncrementalDedupConfig(num_hashes=32, bands=8))
+    assert _ids(surv) == {0, 1}
+    assert committed_batches(idx) == ["b1"]
+
+
 def test_bad_batch_id_raises(spark, tmp_path):
     docs = _docs(spark, [(0, _unique_text(0))])
     with pytest.raises(ValueError, match="batch_id"):

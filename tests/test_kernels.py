@@ -147,6 +147,19 @@ def test_moments_auto_switch_routes_to_bucketed(spark, monkeypatch):
     assert calls["remerge"] == 1 and m.n == 400   # driver path, no new call
 
 
+def test_moments_probe_reuses_the_collected_exchange(spark, spark_jobs):
+    """The partition probe reads the partials' own RDD, so under AQE the
+    map stage below the frame's last exchange runs once, shared by the
+    probe and the collect: 2 jobs, not 3.  The frame must be fresh, since
+    ``DataFrame.rdd`` is cached per object."""
+    pdf = pd.DataFrame({"k": np.arange(len(X)) % 7, "vec": list(X)})
+    df = spark.createDataFrame(pdf).repartition(8, "k")
+    out = []
+    assert spark_jobs(lambda: out.append(compute_moments(df, "vec"))) == 2
+    assert out[0].n == len(X)
+    close(out[0].cov, oracle.cov(X))
+
+
 def test_moments_partials_one_row_per_partition(spark):
     """In-worker Chan merge: the partial frame emits ONE row per non-empty
     partition even when Arrow splits each partition into many batches —
