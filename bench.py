@@ -115,6 +115,7 @@ def headline_queries(sf_dir: str):
         "q41_minhash_pairs",    # LSH self-join
         "q43_ngram_jaccard",    # inverted-index join + binding stop-gram prune
         "q44_cosine_topk",      # similarity search
+        "q45_ann_lsh",          # embedding hyperplane LSH (Arrow UDF buckets)
         "q48_dedup_clusters",   # LSH pairs -> connected components (cached edges)
     ]
     qs = entrymod.queries()

@@ -32,6 +32,15 @@ workers:
   first go through the re-merge keyed on ``spark_partition_id() % 64``, so
   driver traffic stays O(64 * p^2) at any scale.
 
+The vector codec lives here too: :func:`decode_vectors` turns an Arrow
+``list<double>`` column into a matrix plus the kept row positions, and
+:func:`encode_vectors` turns a matrix of kept rows back into a list
+column with NULL for the dropped rows.  The drop rule (a NULL vector, or
+one with a null or NaN element, never contributes) exists only in the
+decoder; the moments workers, the serving UDFs (:func:`vector_udf`), the
+windowed projection, ANN, embedding LSH and the streaming state all use
+it.
+
 No JVM-expression form: raw-sum aggregate expressions lose the Chan
 update's cancellation protection and measured slower than the Arrow
 partials (25.8 s vs 19.4 s at local[8], ``BENCH/moments_ab.log``).
@@ -43,7 +52,6 @@ from dataclasses import dataclass
 from functools import partial, reduce
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -128,22 +136,26 @@ _MOMENT_FIELDS = [StructField("n", LongType()),
                   StructField("m2", ArrayType(DoubleType()))]
 
 
-def _batch_to_matrix(col) -> "tuple[np.ndarray | None, np.ndarray | None]":
+def decode_vectors(col) -> "tuple[np.ndarray | None, np.ndarray | None]":
     """Arrow list column -> ((n, p) float64 matrix, kept row positions).
 
-    The matrix comes from the flat values buffer (~5x faster than np.stack
+    The decoder half of the one vector codec: every Python path that reads
+    an array<double> column (the moments workers, the serving UDFs, the
+    ANN and LSH hashes, the streaming state) decodes through it.  The
+    matrix comes from the flat values buffer (~5x faster than np.stack
     over per-row object arrays, measured in-sandbox) and is None when no
     valid row remains.  The positions index the rows of ``col`` that made
     it into the matrix, in order, so key columns stay aligned; they are
     None when every row was kept.
 
-    THE drop rule of every moments path: a row that is NULL or contains a
-    null OR NaN element never contributes.  Element nulls are invisible to
-    the list-level ``null_count`` and np.asarray would render them as NaN,
-    silently poisoning every downstream moment — they are masked via the
-    child validity.  Ragged batches raise: the old ``flat.size % n == 0``
-    heuristic silently mis-reshaped any ragged batch whose total element
-    count happened to divide the row count, mixing values across rows.
+    THE drop rule of the package: a row that is NULL or contains a null OR
+    NaN element never contributes (moments) and serves as NULL
+    (:func:`encode_vectors`).  Element nulls are invisible to the
+    list-level ``null_count`` and np.asarray would render them as NaN —
+    they are masked via the child validity.  Ragged batches raise: the old
+    ``flat.size % n == 0`` heuristic silently mis-reshaped any ragged
+    batch whose total element count happened to divide the row count,
+    mixing values across rows.
     """
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
@@ -179,6 +191,41 @@ def _batch_to_matrix(col) -> "tuple[np.ndarray | None, np.ndarray | None]":
         keep(~nan)
         m = m[~nan]
     return (m if len(m) else None), kept
+
+
+def encode_vectors(y: "np.ndarray | None", kept: "np.ndarray | None",
+                   n: int) -> pa.Array:
+    """(rows, k) matrix of the kept rows -> Arrow list column of ``n`` rows.
+
+    The encoder half of the codec: row ``kept[i]`` gets ``y[i]``, every
+    other row is NULL (``kept`` None: the rows of ``y`` are all ``n``;
+    ``y`` None: every row is NULL).  The element type is ``y``'s dtype."""
+    if y is None:
+        return pa.nulls(n, pa.list_(pa.float64()))
+    lens = np.full(n, y.shape[1], dtype=np.int32)
+    mask = None
+    if kept is not None:
+        mask = np.ones(n, dtype=bool)
+        mask[kept] = False
+        lens[mask] = 0
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(y.ravel()),
+        mask=None if mask is None else pa.array(mask))
+
+
+def vector_udf(fn):
+    """``fn`` (matrix of the kept rows -> matrix) as a scalar Arrow UDF over
+    an array<double> column: decode, one call, encode, so the rows the
+    codec drops come out NULL.  ``fn``'s model rides the closure."""
+
+    @F.arrow_udf(ArrayType(DoubleType()))
+    def _apply(col: pa.Array) -> pa.Array:
+        x, kept = decode_vectors(col)
+        return encode_vectors(None if x is None else fn(x), kept, len(col))
+
+    return _apply
 
 
 def _canonical(col: pa.Array) -> pa.Array:
@@ -247,14 +294,14 @@ def _arrow_partials(batches, n_keys: int):
 
     Worker state is O(groups * p^2) whatever the partition size.  With no
     key columns this is one row per partition and no per-row work beyond
-    ``_batch_to_matrix``: the first level of the two-level reduction that
+    ``decode_vectors``: the first level of the two-level reduction that
     keeps the flagship's moment pass off the driver at design scale.  Float
     NaN keys stay distinct from NULL here; the re-merge renders them."""
     names, keys, moms = [], [], []
     for b in batches:
         if b.num_rows == 0:
             continue
-        x, kept = _batch_to_matrix(b.column(n_keys))
+        x, kept = decode_vectors(b.column(n_keys))
         if x is None:          # batch had no valid vectors
             continue
         if not n_keys:
@@ -392,61 +439,3 @@ def compute_grouped_moments(df: DataFrame, group_cols: list[str],
     (conv_id, window) or a time bucket).
     """
     return _remerge(_partials_df(df, vec_col, group_cols), group_cols)
-
-
-def pandas_clean_stack(vals: "pd.Series") -> "np.ndarray | None":
-    """pandas twin of ``_batch_to_matrix`` for the streaming state kernel
-    (streaming/state.py): drop NULL rows AND rows containing a null
-    element, raise on ragged groups.  Returns None when no valid rows
-    remain.
-
-    Without the element mask, a single ``[1.0, null, ...]`` vector arrives
-    as NaN and silently poisons its group's mean/M2 (NaN covariance ->
-    eigh LinAlgError or a NaN model in the windowed-PCA fit) — the exact
-    hazard _batch_to_matrix documents and masks on the global path.
-    Genuine NaN VALUES are dropped under the same rule: every moments path
-    (Arrow core, streaming state) shares the contract "rows with a null or
-    NaN element never contribute", so the pinned stream == batch
-    equivalence holds on NaN-bearing data too.
-    """
-    vals = vals.dropna()
-    if len(vals) == 0:
-        return None
-    arrs = vals.to_numpy()
-    lens = np.fromiter((len(v) for v in arrs), dtype=np.int64,
-                       count=len(arrs))
-    if not (lens == lens[0]).all():
-        raise ValueError(
-            f"ragged vector group: lengths "
-            f"{sorted(set(lens.tolist()))[:5]} — moments require "
-            "fixed-dimension vectors (filter or pad upstream)")
-    x = np.stack(arrs).astype(np.float64)
-    x = x[~np.isnan(x).any(axis=1)]
-    return x if len(x) else None
-
-
-def masked_vector_apply(s: "pd.Series", fn) -> "pd.Series":
-    """Apply ``fn`` (matrix -> matrix) to the valid rows of an array-column
-    pandas Series, emitting NULL for NULL vectors AND for vectors carrying
-    a null/NaN element.
-
-    The transform twin of :func:`pandas_clean_stack`'s drop rule, shared by
-    every vectorized projection/standardization UDF (project_udf,
-    inverse_udf, zscore_vec_udf): the fit side drops null-element rows from
-    the moments, so the serving side must map them to NULL rather than
-    emitting a NaN-bearing feature vector that passes an
-    ``IS NOT NULL`` filter and poisons downstream aggregates (round-5
-    review: the global path disagreed with project_windowed's mask on
-    identical input).
-    """
-    mask = s.notna().to_numpy()
-    out = pd.Series([None] * len(s), dtype=object, index=s.index)
-    if not mask.any():
-        return out
-    x = np.stack(s[mask].to_numpy()).astype(np.float64)
-    good = ~np.isnan(x).any(axis=1)
-    if not good.any():
-        return out
-    idx = s.index[mask][good]
-    out[idx] = pd.Series(list(fn(x[good])), index=idx)
-    return out

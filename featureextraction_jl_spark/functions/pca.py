@@ -2,9 +2,10 @@
 
 Fit is driver-side ``numpy.linalg.eigh`` on the tiny p x p covariance — only
 *moments* are ever distributed (SURVEY.md §3.2 step 6).  Projection is a
-scalar pandas UDF over an ``array<double>`` column: one
-``np.stack(batch) @ W`` BLAS call per Arrow batch, never a per-row loop
-(BASELINE.json:6).
+scalar Arrow UDF over an ``array<double>`` column (``vector_udf``): the
+batch's list buffer decodes to one matrix and one ``(X - mu) @ W`` BLAS
+call runs per Arrow batch, never a per-row loop (BASELINE.json:6).  Rows
+the codec drops (NULL, null or NaN element) project to NULL.
 
 Conventions (SURVEY.md §1.4.5–1.4.7, matching Julia LinearAlgebra.eigen +
 the reference's transform structs):
@@ -23,16 +24,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
 
-from featureextraction_jl_spark.functions.moments import (
-    Moments,
-    masked_vector_apply,
-)
+from featureextraction_jl_spark.functions.moments import Moments, vector_udf
 
 EPS = 1e-12
 
@@ -127,20 +122,13 @@ def fit_pca(moments: Moments, k: int | None = None,
 def project_udf(model: PCAModel, col: str | Column) -> Column:
     """Column expression projecting an array<double> column through the model.
 
-    Arrow-batched: each pandas batch becomes one (batch, p) matrix and one
+    Arrow-batched: each batch decodes to one (batch, p) matrix and one
     GEMM.  The model rides the closure (broadcast by Spark with the task).
+    NULL vectors and vectors with a null/NaN element project to NULL: the
+    fit dropped them from the moments.
     """
     mu, w = model.mu, model.projection
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _project(s: pd.Series) -> pd.Series:
-        # NULL vectors AND vectors with a null/NaN element project to NULL
-        # — the fit side dropped them from the moments, so serving them as
-        # NaN features would silently diverge from project_windowed's mask
-        # on identical input (round-5 review).
-        return masked_vector_apply(s, lambda x: (x - mu) @ w)
-
-    return _project(col)
+    return vector_udf(lambda x: (x - mu) @ w)(col)
 
 
 def inverse_udf(model: PCAModel, col: str | Column) -> Column:
@@ -152,10 +140,5 @@ def inverse_udf(model: PCAModel, col: str | Column) -> Column:
         w_inv = np.linalg.pinv(w)
     else:
         w_inv = w.T
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _inverse(s: pd.Series) -> pd.Series:
-        # NULL / null-element in -> NULL out, like project_udf
-        return masked_vector_apply(s, lambda y: y @ w_inv + mu)
-
-    return _inverse(col)
+    # NULL / null-element in -> NULL out, like project_udf
+    return vector_udf(lambda y: y @ w_inv + mu)(col)

@@ -14,8 +14,10 @@ Classic IVF decomposition, Spark-first:
    their probe cells at the SCAN (partition pruning), never touching the
    rest of the corpus.  ``repartition("cell")`` before
    ``partitionBy("cell")`` when writing — otherwise every write task
-   holds a file per cell it sees (tasks x cells small files; measured
-   10x slower at 1M x 256 cells, scripts/bench_ann.py).
+   holds a file per cell it sees (tasks x cells small files).  Measured
+   at 1M rows x 256 cells: 199 s without the repartition, 19.9 s with it;
+   the A/B that kept it is ``BENCH/ann_ab.json``
+   (``index_build.assign_write_sec``).
 3. **Query**: rank the centroids against the query driver-side (tiny GEMM),
    take the ``n_probe`` nearest cells, filter the corpus to those cells
    (the inverted-file probe — at 10^12 vectors with n_cells=2^16 and
@@ -39,49 +41,32 @@ get cell NULL, same as NULL / wrong-dim vectors.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
-#: per-(applicationId, centroid-content) broadcast cache shared by
-#: assign_cells and ivf_topk_batch — a serving loop calling either per
-#: batch would otherwise ship and pin a fresh copy of the centroid matrix
-#: on every call (at n_cells=2^16, dim=128 that is ~67 MB of never-freed
-#: broadcast blocks PER CALL; round-5 review).  Same failure class —
-#: and same fix shape — as WindowedPCA._bc_cache.  Bounded FIFO: evicted
-#: entries are unpersist-ed (NOT destroyed — a still-pending lazy plan may
-#: reference them; unpersist frees the executor copies and the broadcast
-#: re-ships from the driver if such a plan later executes).
-_BC_CACHE: dict = {}
-_BC_CACHE_MAX = 8
+from featureextraction_jl_spark.functions.moments import (
+    decode_vectors,
+    encode_vectors,
+)
+from featureextraction_jl_spark.session import broadcast_once
 
 
-def _broadcast_centroids(sc, cents: np.ndarray, c_sq: np.ndarray):
-    """Broadcast (cents, c_sq) once per (application, matrix content).
+def _broadcast_centroids(sc, centroids) -> tuple:
+    """(broadcast of (unit centroids, their squared norms), dim), one
+    broadcast per caller-owned centroid array (``session.broadcast_once``).
+    A serving loop calling assign_cells or ivf_topk_batch per batch would
+    otherwise ship and pin a fresh copy of the matrix on every call (at
+    n_cells=2^16, dim=128 that is ~67 MB per call; round-5 review)."""
+    owner = np.asarray(centroids)   # the caller's array itself
 
-    Entries of any other application (a stopped SparkContext) are dropped
-    and unpersisted on every call, so they never wait for FIFO pressure."""
-    import hashlib
+    def build():
+        cents = np.ascontiguousarray(owner, dtype=np.float64)
+        return cents, (cents * cents).sum(axis=1)
 
-    def evict(k):
-        try:
-            _BC_CACHE.pop(k).unpersist()
-        except Exception:
-            pass    # app shutting down; nothing to free
-
-    for k in [k for k in _BC_CACHE if k[0] != sc.applicationId]:
-        evict(k)
-    key = (sc.applicationId, cents.shape,
-           hashlib.sha1(cents.tobytes()).hexdigest())
-    bc = _BC_CACHE.get(key)
-    if bc is None:
-        while len(_BC_CACHE) >= _BC_CACHE_MAX:
-            evict(next(iter(_BC_CACHE)))
-        bc = sc.broadcast((cents, c_sq))
-        _BC_CACHE[key] = bc
-    return bc
+    return broadcast_once(sc, owner, "ivf_centroids", build), owner.shape[1]
 
 
 def train_ivf_centroids(df: DataFrame, vec_col: str, n_cells: int,
@@ -148,36 +133,38 @@ def train_ivf_centroids(df: DataFrame, vec_col: str, n_cells: int,
     return cents
 
 
-def _nearest_cells(bc_value: tuple, s: pd.Series, ok: pd.Series,
-                   n: int, scalar: bool = False) -> pd.Series:
-    """Shared spherical-assignment kernel for assign_cells (scalar top-1)
-    and ivf_topk_batch's probe (top-n arrays): mask invalid/zero-norm
-    vectors, L2-normalize, one GEMM against the broadcast centroids, take
-    the top-n cells by L2 (== cosine on the unit sphere).  One body so a
-    fix to the masking/normalization can never drift between the two
-    callers.  ``scalar=True`` returns the single nearest cell id per row
-    (assign shape); otherwise arrays of n ids (probe shape, even at n=1)."""
-    cents_, c_sq_ = bc_value
-    # ok.eq(True): True only where the JVM validity flag is literally True
-    # (None/NaN -> False) — the old fillna(False).astype(bool) chain trips
-    # pandas' deprecated-downcasting FutureWarning per Arrow batch and its
-    # behavior changes under future.no_silent_downcasting (round-5 review)
-    mask = ok.eq(True)
-    out = pd.Series([None] * len(s), dtype=object, index=s.index)
-    if mask.any():
-        x = np.stack(s[mask].to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(x, axis=1)
-        ix = s.index[mask][nrm > 0]
-        if len(ix):
-            x = x[nrm > 0] / nrm[nrm > 0, None]
-            # argmin ||x-c||^2 = argmin c.c - 2 x.c (x.x == 1 per row)
-            d = c_sq_[None, :] - 2.0 * (x @ cents_.T)
-            if scalar:
-                out[ix] = pd.Series(d.argmin(axis=1).astype(object), index=ix)
-            else:
-                top = np.argsort(d, axis=1)[:, :n].astype(object)
-                out[ix] = pd.Series(list(top), index=ix)
-    return out
+def _nearest_cells(bc_value: tuple, col: pa.Array, n: int
+                   ) -> "tuple[np.ndarray | None, np.ndarray | None]":
+    """Shared spherical-assignment kernel for assign_cells (top-1) and
+    ivf_topk_batch's probe (top-n): decode the vectors (the codec drops
+    NULL and null/NaN-element rows), drop zero-norm rows, L2-normalize,
+    one GEMM against the broadcast centroids, take the top-n cells by L2
+    (== cosine on the unit sphere).  Returns ((rows, n) cell ids, kept row
+    positions) in the codec's shape; one body so the masking and
+    normalization cannot drift between the two callers."""
+    cents, c_sq = bc_value
+    x, kept = decode_vectors(col)
+    if x is None:
+        return None, kept
+    nrm = np.linalg.norm(x, axis=1)
+    nz = nrm > 0
+    if not nz.all():
+        kept = np.flatnonzero(nz) if kept is None else kept[nz]
+        x, nrm = x[nz], nrm[nz]
+        if not len(x):
+            return None, kept
+    x = x / nrm[:, None]
+    # argmin ||x-c||^2 = argmin c.c - 2 x.c (x.x == 1 per row)
+    d = c_sq[None, :] - 2.0 * (x @ cents.T)
+    top = d.argmin(axis=1)[:, None] if n == 1 else np.argsort(d, axis=1)[:, :n]
+    return top.astype(np.int32), kept
+
+
+def _valid_vectors(col: str, dim: int) -> Column:
+    """The vector column with every NULL or wrong-dim row made NULL in the
+    JVM, so ragged rows never reach the codec's ragged check."""
+    return F.when(F.col(col).isNotNull() & (F.size(col) == F.lit(dim)),
+                  F.col(col).cast("array<double>"))
 
 
 def assign_cells(df: DataFrame, vec_col: str, centroids: np.ndarray,
@@ -185,24 +172,25 @@ def assign_cells(df: DataFrame, vec_col: str, centroids: np.ndarray,
     """Attach the nearest-centroid cell id — one GEMM per Arrow batch.
 
     The centroid matrix rides an explicit broadcast; NULL / wrong-dim /
-    zero-norm vectors get cell NULL (they can never be probed, matching
-    the ANN family's null handling — a zero vector has no cosine).
-    Rows are L2-normalized before the GEMM so assignment happens in the
-    same spherical geometry the quantizer was trained in.
+    zero-norm vectors, and vectors with a null or NaN element, get cell
+    NULL (they can never be probed, matching the ANN family's null
+    handling — a zero vector has no cosine).  Rows are L2-normalized
+    before the GEMM so assignment happens in the same spherical geometry
+    the quantizer was trained in.
     """
-    cents = np.ascontiguousarray(centroids, dtype=np.float64)
-    c_sq = (cents * cents).sum(axis=1)
-    bc = _broadcast_centroids(df.sparkSession.sparkContext, cents, c_sq)
-    dim = cents.shape[1]
+    bc, dim = _broadcast_centroids(df.sparkSession.sparkContext, centroids)
 
-    @F.pandas_udf(IntegerType())
-    def _assign(s: pd.Series, ok: pd.Series) -> pd.Series:
-        # validity computed JVM-side (isNotNull & size==dim) — no per-row
-        # Python predicate in the assignment hot path
-        return _nearest_cells(bc.value, s, ok, 1, scalar=True)
+    @F.arrow_udf(IntegerType())
+    def _assign(col: pa.Array) -> pa.Array:
+        top, kept = _nearest_cells(bc.value, col, 1)
+        cells = np.zeros(len(col), dtype=np.int32)
+        valid = np.zeros(len(col), dtype=bool)
+        if top is not None:
+            rows = slice(None) if kept is None else kept
+            cells[rows], valid[rows] = top[:, 0], True
+        return pa.array(cells, pa.int32(), mask=~valid)
 
-    valid = F.col(vec_col).isNotNull() & (F.size(vec_col) == F.lit(dim))
-    return df.withColumn(out_col, _assign(F.col(vec_col), valid))
+    return df.withColumn(out_col, _assign(_valid_vectors(vec_col, dim)))
 
 
 def _cosine_to_query(vec_col: Column, q: np.ndarray) -> Column:
@@ -278,19 +266,19 @@ def ivf_topk_batch(assigned: DataFrame, queries: DataFrame,
 
     Returns (query_id, vec_id, cosine, rank) with rank 1..k per query.
     """
-    cents = np.ascontiguousarray(centroids, dtype=np.float64)
-    c_sq = (cents * cents).sum(axis=1)
-    bc = _broadcast_centroids(queries.sparkSession.sparkContext, cents, c_sq)
-    dim = cents.shape[1]
+    bc, dim = _broadcast_centroids(queries.sparkSession.sparkContext,
+                                   centroids)
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _probe_cells(s: pd.Series, ok: pd.Series) -> pd.Series:
-        return _nearest_cells(bc.value, s, ok, n_probe)
+    @F.arrow_udf(ArrayType(IntegerType()))
+    def _probe_cells(col: pa.Array) -> pa.Array:
+        top, kept = _nearest_cells(bc.value, col, n_probe)
+        if top is None:
+            return pa.nulls(len(col), pa.list_(pa.int32()))
+        return encode_vectors(top, kept, len(col))
 
-    valid = (F.col(query_vec_col).isNotNull()
-             & (F.size(query_vec_col) == F.lit(dim)))
     probed = (queries
-              .withColumn("__cells", _probe_cells(F.col(query_vec_col), valid))
+              .withColumn("__cells",
+                          _probe_cells(_valid_vectors(query_vec_col, dim)))
               .filter(F.col("__cells").isNotNull())
               .select(query_id_col, query_vec_col,
                       F.explode("__cells").alias(cell_col)))

@@ -10,12 +10,16 @@ higher-order functions) — Python only where NumPy is genuinely needed.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
+
+from featureextraction_jl_spark.functions.moments import (
+    decode_vectors,
+    encode_vectors,
+)
 
 
 def latest_row(df: DataFrame, key, order_desc) -> DataFrame:
@@ -772,7 +776,7 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
 
     Plan shape (the 100 TB path):
     * all n_tables*n_planes dot products in ONE Arrow-batched GEMM per batch
-      (pandas UDF), not n*t separate array folds;
+      (an Arrow UDF over the vector codec), not n*t separate array folds;
     * candidate generation = equi self-join on (table, bucket) emitting ONLY
       id pairs, dedup-ed BEFORE vectors are touched;
     * ``max_bucket`` drops degenerate buckets (e.g. all-zeros embeddings)
@@ -802,22 +806,26 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
                 [], f"id_a {dict(df.dtypes)[id_col]}, "
                     f"id_b {dict(df.dtypes)[id_col]}, cosine double"))
         dim = len(first[vec_col])
-    # Null / ragged / null-element vectors cannot be hashed or scored —
-    # drop them up front (same guard as the moments paths) instead of
-    # letting np.stack kill the stage hours into a 100 TB scan.
+    # Null / ragged / null- or NaN-element vectors cannot be hashed or
+    # scored — drop them up front in the JVM (the codec's drop rule), so
+    # the hash side and the cosine side see the same rows.  A NaN vector
+    # that reached the hash would land in bucket 0 of every table (NaN >= 0
+    # is false) and could push that bucket over ``max_bucket``.
     v0 = F.col(vec_col)
     df = df.filter(v0.isNotNull() & (F.size(v0) == F.lit(dim))
-                   & ~F.exists(v0, lambda x: x.isNull()))
+                   & ~F.exists(v0, lambda x: x.isNull() | F.isnan(x)))
     planes = hyperplanes(n_tables, n_planes, dim, seed)
     pmat = planes.reshape(n_tables * n_planes, dim)  # (t*m, dim)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _buckets(s: pd.Series) -> pd.Series:
-        x = np.stack(s.to_numpy()).astype(np.float64)          # (b, dim)
+    @F.arrow_udf(ArrayType(LongType()))
+    def _buckets(col: pa.Array) -> pa.Array:
+        x, kept = decode_vectors(col)                          # (b, dim)
+        if x is None:
+            return pa.nulls(len(col), pa.list_(pa.int64()))
         signs = (x @ pmat.T) >= 0.0                            # (b, t*m) one GEMM
         b = signs.reshape(len(x), n_tables, n_planes) @ weights  # (b, t)
-        return pd.Series(list(b.astype(np.int64)))
+        return encode_vectors(b.astype(np.int64), kept, len(col))
 
     v = F.col(vec_col).cast("array<double>")
     tagged = df.select(

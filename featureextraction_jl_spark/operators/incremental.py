@@ -350,6 +350,17 @@ def anchored_survivor_ids(cc: DataFrame, corpus_ids: DataFrame,
             .select(F.col("__keep").alias(id_col)))
 
 
+#: appended to every config-hash mismatch: commits written before the hash
+#: payload became (banding params, id_col, text_col) carry hashes this
+#: package never computes, so an identical-config retry of such a batch
+#: also lands here
+_REBUILD_HINT = (
+    "; if the config did not change, the index may predate the current "
+    "config hash (banding params, id_col, text_col) — rebuild it by "
+    "re-running dedup_and_commit over every batch into an empty index "
+    "directory")
+
+
 def _check_committed(index_dir: str, batch_id: str,
                      cfg: IncrementalDedupConfig) -> dict[str, Any] | None:
     """Validate ``batch_id`` and return the already-committed manifest if
@@ -371,7 +382,7 @@ def _check_committed(index_dir: str, batch_id: str,
                 f"batch {batch_id!r} is already committed with "
                 f"config_hash={man.get('config_hash')!r}; this config "
                 f"hashes to {chash!r} — refusing to silently skip a "
-                f"different commit")
+                f"different commit{_REBUILD_HINT}")
         return {**man, "already_committed": True}
     retired = _retired_config_hashes(index_dir)
     if batch_id in retired:
@@ -385,7 +396,8 @@ def _check_committed(index_dir: str, batch_id: str,
             raise ValueError(
                 f"batch {batch_id!r} was committed (then compacted) with "
                 f"config_hash={rhash!r}; this config hashes to {chash!r} "
-                f"— refusing to silently skip a different commit")
+                f"— refusing to silently skip a different commit"
+                f"{_REBUILD_HINT}")
         return {"batch_id": batch_id, "already_committed": True,
                 "compacted": True, "config_hash": rhash}
     return None

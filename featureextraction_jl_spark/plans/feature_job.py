@@ -11,8 +11,11 @@ scan -> char_len projection (text bytes never shuffle in the fit pass)
         partition (in-worker Chan merge); auto-switches to the executor-side
         bucketed reduce above 2048 partitions, so driver traffic is
         O(buckets * p^2) at the 10^12-turn design point]
-     -> driver-side PCA/whitening fit (p x p eigh) -> broadcast model
-     -> Arrow-batched projection UDF -> features + byte-equal text passthrough
+     -> driver-side PCA/whitening fit (p x p eigh); the model rides the
+        projection's closure
+     -> Arrow UDF projection (the list buffer decodes straight to a matrix
+        through the vector codec, one GEMM per batch; NULL for the rows the
+        codec drops) -> features + byte-equal text passthrough
 
 Measured plan decisions (local[32], 6.6M-turn fixture):
 
@@ -31,7 +34,9 @@ Measured plan decisions (local[32], 6.6M-turn fixture):
   cache; codegen fusion is lost), so the chain is never persisted.
 * Arrow-batched projection: one BLAS GEMM per Arrow batch beat a p*k
   codegen multiply-add expression, 4.6s vs 7.7s (5 reps, 1.26M turns,
-  local[32]) and 38.3s vs 69.6s at local[8] (``BENCH/proj_ab.log``).
+  local[32]) and 38.3s vs 69.6s at local[8] (``BENCH/proj_ab.log``; the
+  batch side was then a pandas UDF, since replaced by an Arrow UDF that
+  skips the per-row NumPy objects).
 
 Zero temporal leakage by construction: every input to the vector at
 (conv_id, ts) is a backward-looking Window (rowsBetween ... currentRow), the

@@ -23,10 +23,11 @@ Scale shape (the 100 TB argument):
   10^4 windows fit in well under a second; ``max_models`` guards the driver
   against a mis-bucketed explosion (10^12 distinct groups) by raising with
   the count instead of OOMing mid-collect;
-* projection ships the model map as an explicit ``sc.broadcast`` (once per
-  executor, not per task — at 10^5 windows the map is ~100 MB) and runs ONE
-  GEMM per (window, Arrow batch) slice — batches are grouped by window key
-  in NumPy, never per-row Python.
+* projection ships the model map as one broadcast per (fitted object, lag)
+  (``session.broadcast_once``: once per executor, not per task — at 10^5
+  windows the map is ~100 MB) and runs ONE GEMM per (window, Arrow batch)
+  slice — an Arrow UDF decodes the batch with the vector codec and groups
+  its rows by key in NumPy, never per-row Python.
 
 Leakage property (test-pinned): a row's features depend ONLY on rows in its
 own (keys, window) group — perturbing every other window leaves them
@@ -46,16 +47,19 @@ model match is independent of both the driver OS timezone and the Spark
 session timezone; the datetime in each model key is the naive-UTC label of
 that epoch (see ``_win_dt``).  NULL extra keys (e.g. NULL conv_id) are real
 groups on both sides: the fit keeps them (Spark groupBy semantics) and the
-projection matches them (``dropna=False`` + NaN->None normalization).
+projection groups with the moments core's own key index, where NULL is a
+group of its own.  A float NaN key looks up the NULL-key model, since the
+fit's re-merge emits NaN keys as NULL.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -63,11 +67,17 @@ from pyspark.sql.types import ArrayType, DoubleType
 
 from featureextraction_jl_spark import manifest
 from featureextraction_jl_spark.functions.moments import (
+    _canonical,
+    _group_index,
+    _split_by_code,
     compute_grouped_moments,
+    decode_vectors,
+    encode_vectors,
     merge_moment_rows,
 )
 from featureextraction_jl_spark.functions.pca import PCAModel, fit_pca
 from featureextraction_jl_spark.functions.timeutil import epoch_seconds
+from featureextraction_jl_spark.session import broadcast_once
 
 #: driver-side guard: refuse to collect more per-group moment rows than this
 #: (a mis-bucketed group key at design scale would otherwise stream 10^12
@@ -112,12 +122,6 @@ class WindowedPCA:
     #: rows accumulated per fitted group (manifests/metrics; not required
     #: for projection)
     counts: dict = None
-    #: per-(applicationId, lag) broadcast of the projection lut, reused
-    #: across project_windowed calls on the same fitted object — the
-    #: resumable runner projects once PER UNIT, and re-broadcasting a
-    #: ~100 MB model map 256 times would pile ~25 GB of never-destroyed
-    #: broadcast blocks onto the block manager
-    _bc_cache: dict = field(default_factory=dict, repr=False, compare=False)
 
     def save(self, dir_path: str) -> None:
         """Persist as a directory: one ``.npz`` per window model plus an
@@ -205,13 +209,6 @@ def _window_epoch(ts_col: str, duration: str) -> Column:
     return (F.floor(e / F.lit(w)) * F.lit(w)).cast("double")
 
 
-def _norm_gk(v):
-    """Normalize a pandas group-key component for model-map lookup: NaN/NaT
-    (pandas' rendering of a NULL Spark key under ``dropna=False``) -> None,
-    matching the ``None`` the fit side collects for NULL keys."""
-    return None if pd.isna(v) else v
-
-
 def fit_windowed_pca(df: DataFrame, vec_col: str, ts_col: str, duration: str,
                      key_cols: tuple | list = (), k: int | None = None,
                      mode: str = "pca_whiten",
@@ -275,10 +272,11 @@ def project_windowed(df: DataFrame, fitted: WindowedPCA, vec_col: str,
                      lag_models: int = 0) -> DataFrame:
     """Project each row through ITS window's model (Arrow-batched).
 
-    One pandas UDF over (key cols..., window start, vec): each batch is
-    sliced per distinct group key and projected with one GEMM per slice.
-    Rows whose group has no model (n < 2, or — with ``lag_models`` — a
-    window with no predecessor) get NULL.
+    One Arrow UDF over (key cols..., window start, vec): each batch's
+    vectors decode to one matrix, its kept rows are grouped by (keys...,
+    window) and each group is projected with one GEMM.  Rows the codec
+    drops, rows with NULL ts and rows whose group has no model (n < 2,
+    or — with ``lag_models`` — a window with no predecessor) get NULL.
 
     ``lag_models=n``: use the model fitted on the window n steps EARLIER
     (strict point-in-time serving: every model input is older than the
@@ -286,12 +284,6 @@ def project_windowed(df: DataFrame, fitted: WindowedPCA, vec_col: str,
     not calendar months).
     """
     key_cols = fitted.key_cols
-    # Model lookup keyed by (keys..., window-start epoch seconds).  The
-    # model-key datetime is naive-UTC BY CONSTRUCTION (_win_dt derives it
-    # from the JVM epoch), so pd.Timestamp(...).value recovers that epoch
-    # exactly; the UDF side receives the SAME JVM expression's value
-    # (epoch_seconds over the window start) as a double — no timezone, OS
-    # or session, participates in the match on either side.
     if lag_models < 0:
         raise ValueError(
             f"lag_models must be >= 0, got {lag_models}: a negative lag "
@@ -300,64 +292,52 @@ def project_windowed(df: DataFrame, fitted: WindowedPCA, vec_col: str,
     lag_s = 0.0
     if lag_models:
         lag_s = lag_models * _duration_seconds(fitted.duration)
-    # Explicit sc.broadcast, NOT the closure: a closure-captured map is
-    # re-serialized into every task binary, so at max_models=10^5 windows
-    # (~10^5 * p*k doubles ~ 100 MB) every task ships the whole model map.
-    # The broadcast moves it once per EXECUTOR over the torrent protocol;
-    # the closure carries only the handle.  Cached per (app, lag) on the
-    # fitted object so per-unit resumable calls reuse ONE broadcast.
-    sc = df.sparkSession.sparkContext
-    bc_key = (sc.applicationId, lag_s)
-    bc = fitted._bc_cache.get(bc_key)
-    if bc is None:
-        lut = {}
-        for gk, model in fitted.models.items():
-            key = gk[:-1] + (pd.Timestamp(gk[-1]).value / 1e9 + lag_s,)
-            lut[key] = (model.mu, model.projection)
-        bc = sc.broadcast(lut)
-        fitted._bc_cache[bc_key] = bc
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _project(*cols: pd.Series) -> pd.Series:
+    # Model lookup keyed by (keys..., window-start epoch seconds).  The
+    # model-key datetime is naive-UTC BY CONSTRUCTION (_win_dt derives it
+    # from the JVM epoch), so pd.Timestamp(...).value recovers that epoch
+    # exactly; the UDF receives the SAME JVM expression's value as a double
+    # — no timezone, OS or session, participates in the match.
+    def lut() -> dict:
+        return {gk[:-1] + (pd.Timestamp(gk[-1]).value / 1e9 + lag_s,):
+                (model.mu, model.projection)
+                for gk, model in fitted.models.items()}
+
+    # An explicit broadcast, NOT the closure: a closure-captured map is
+    # re-serialized into every task binary, so at max_models=10^5 windows
+    # (~10^5 * p*k doubles ~ 100 MB) every task would ship the whole map.
+    # The broadcast moves it once per EXECUTOR; repeated projections of
+    # one fitted object with one lag share it.
+    bc = broadcast_once(df.sparkSession.sparkContext, fitted, lag_s, lut)
+
+    @F.arrow_udf(ArrayType(DoubleType()))
+    def _project(*cols: pa.Array) -> pa.Array:
         models = bc.value
         *keys, win, vecs = cols
-        out = pd.Series([None] * len(vecs), dtype=object, index=vecs.index)
-        # ``win`` is already epoch seconds (double, JVM-computed); NaN for
-        # NULL ts rows.  Those rows can never match a model (the fit
-        # filters NULL windows), so exclude them from the groupby up front:
-        # besides being dead work, a NaN in a SINGLE-column groupby
-        # (key_cols=()) raises 'Categorical categories cannot be null'
-        # under dropna=False in pandas 2.x (round-5 review) — their output
-        # stays the initialized None.
-        gk_frame = pd.DataFrame({i: k for i, k in enumerate(keys)} |
-                                {"__w": win})
-        gk_frame = gk_frame[win.notna()]
-        valid = vecs.notna()
-        # dropna=False: a NULL extra key (e.g. NULL conv_id) is a real group
-        # on the fit side (Spark groupBy keeps it) — the pandas default
-        # would silently drop those rows from projection, NULLing them while
-        # the manifest says their model exists.
-        for gk, idx in gk_frame.groupby(list(gk_frame.columns),
-                                        dropna=False).groups.items():
-            gk = gk if isinstance(gk, tuple) else (gk,)
-            mw = models.get(tuple(_norm_gk(v) for v in gk))
-            if mw is None:
-                continue
-            mu, w = mw
-            take = idx[valid.loc[idx]]
-            if len(take) == 0:
-                continue
-            x = np.stack(vecs.loc[take].to_numpy()).astype(np.float64)
-            # vectors with a null ELEMENT arrive as NaN rows: project them
-            # to NULL like the fit side dropped them (pandas_clean_stack) —
-            # an unmasked NaN row would emit NaN features that pass a
-            # feature_vec IS NULL filter downstream
-            good = ~np.isnan(x).any(axis=1)
-            take = take[good]
-            if len(take) == 0:
-                continue
-            out.loc[take] = pd.Series(list((x[good] - mu) @ w), index=take)
-        return out
+        n = len(vecs)
+        x, kept = decode_vectors(vecs)
+        if x is None:
+            return encode_vectors(None, None, n)
+        rows = np.arange(n) if kept is None else kept
+        gcols = [_canonical(c if kept is None else c.take(kept))
+                 for c in [*keys, win]]
+        codes, first = _group_index(gcols)
+        # NULL is a group of its own; a float NaN key looks up the NULL-key
+        # model, as the fit's re-merge emits it.  A NULL window (NULL ts)
+        # matches no model.
+        gks = zip(*[[None if v != v else v for v in c.take(first).to_pylist()]
+                    for c in gcols])
+        got, ys = [], []
+        for gk, ix in zip(gks, _split_by_code(codes, len(first))):
+            mw = models.get(gk)
+            if mw is not None:
+                got.append(rows[ix])
+                ys.append((x[ix] - mw[0]) @ mw[1])
+        if not got:
+            return encode_vectors(None, None, n)
+        pos = np.concatenate(got)
+        order = np.argsort(pos)
+        return encode_vectors(np.concatenate(ys)[order], pos[order], n)
 
     win_col = _window_epoch(ts_col, fitted.duration)
     args = [F.col(c) for c in key_cols] + [win_col, F.col(vec_col)]

@@ -8,6 +8,7 @@ session here so the Arrow / AQE / shuffle settings that the design depends on
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -152,3 +153,42 @@ def get_spark(app_name: str = "featureextraction_jl_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: the one model-broadcast cache: (applicationId, id(owner), key) -> the
+#: Broadcast.  Entries leave when their owner is garbage-collected or when
+#: a call comes from another application.
+_BROADCASTS: dict = {}
+
+
+def _drop_broadcast(k) -> None:
+    bc = _BROADCASTS.pop(k, None)
+    if bc is not None:
+        try:
+            # unpersist, NOT destroy: a still-pending lazy plan may use it;
+            # unpersist frees the executor copies and the broadcast
+            # re-ships from the driver if such a plan later runs
+            bc.unpersist()
+        except Exception:
+            pass    # app shutting down; nothing to free
+
+
+def broadcast_once(sc, owner, key, build):
+    """``sc.broadcast(build())`` once per (application, ``owner``, ``key``).
+
+    Serving paths that ship a fitted model (the windowed model map, the ANN
+    centroids) call this per projection, so a loop over units or query
+    batches reuses one broadcast instead of pinning a fresh copy per call.
+    The cache keys by the owner's identity, never its bytes: a copy of the
+    owner gets its own broadcast.  ``weakref.finalize`` drops and
+    unpersists the entry when the owner is collected; entries of any other
+    application (a stopped SparkContext) are dropped on every call."""
+    app = sc.applicationId
+    for k in [k for k in _BROADCASTS if k[0] != app]:
+        _drop_broadcast(k)
+    k = (app, id(owner), key)
+    bc = _BROADCASTS.get(k)
+    if bc is None:
+        bc = _BROADCASTS[k] = sc.broadcast(build())
+        weakref.finalize(owner, _drop_broadcast, k).atexit = False
+    return bc

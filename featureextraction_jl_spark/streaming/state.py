@@ -7,8 +7,10 @@ batch path uses — so the streamed result equals the batch result on the same
 rows (merge-invariance, tested), and both equal the reference's
 ``Statistics.mean/cov`` semantics.
 
-Arrow-vectorized throughout: each micro-batch group arrives as pandas frames,
-reduced with one BLAS GEMM (``batch_moments``) — never a per-row Python loop.
+Vectorized throughout: each micro-batch group arrives as pandas frames; its
+vector column goes back into one Arrow list array and through the vector
+codec (``decode_vectors``, the same drop rule as every batch path), then one
+BLAS GEMM (``batch_moments``) — never a per-row Python loop.
 
 The one stateful form is ``applyInPandasWithState`` (Spark 3.4+), which
 also carries the ``state_ttl_ms`` eviction option.
@@ -20,6 +22,7 @@ from typing import Any, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -27,8 +30,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from featureextraction_jl_spark.functions.moments import (
     Moments,
     batch_moments,
+    decode_vectors,
     merge_moments,
-    pandas_clean_stack,
 )
 
 _STATE_SCHEMA = "n long, mean array<double>, m2 array<double>"
@@ -72,13 +75,13 @@ def streaming_moments(stream: DataFrame, key_col: str, vec_col: str,
         else:
             acc = Moments(0, np.zeros(0), np.zeros((0, 0)))
         for pdf in pdfs:
-            # pandas_clean_stack: NULL vectors AND null-element vectors are
+            # the codec: NULL vectors AND null/NaN-element vectors are
             # dropped, ragged raises — the batch paths' semantics, and the
             # poison-pill guard: an unmasked null element folds NaN into the
-            # CUMULATIVE state (every later emission NaN forever), and a
-            # ragged vector fails the micro-batch, which the checkpoint
-            # re-offers on every restart, wedging the query.
-            x = pandas_clean_stack(pdf[vec_col])
+            # CUMULATIVE state (every later emission NaN forever).
+            # from_pandas=True turns NaN elements into nulls.
+            x, _ = decode_vectors(pa.array(
+                pdf[vec_col], type=pa.list_(pa.float64()), from_pandas=True))
             if x is None:
                 continue
             acc = merge_moments(acc, batch_moments(x))

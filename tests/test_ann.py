@@ -175,36 +175,65 @@ def test_ivf_empty_and_degenerate_inputs(spark):
         train_ivf_centroids(all_zero, "embedding", n_cells=2, dim=DIM)
 
 
+def _entries(owner) -> list:
+    """Live model-broadcast cache keys whose owner is ``owner``."""
+    from featureextraction_jl_spark.session import _BROADCASTS
+
+    return [k for k in _BROADCASTS if k[1] == id(owner)]
+
+
 def test_centroid_broadcast_reused_across_calls(spark, corpus):
     """assign_cells / ivf_topk_batch must not ship a fresh broadcast of the
     same centroid matrix per call (round-5 review: a per-batch serving loop
-    piled never-freed broadcast blocks) — identical content reuses ONE
-    broadcast; different content gets its own."""
-    from featureextraction_jl_spark.operators.ann import (
-        _BC_CACHE,
-        _broadcast_centroids,
-    )
+    piled never-freed broadcast blocks) — the same array object reuses ONE
+    broadcast, and nothing is hashed.  The cache keys by identity, not
+    content: a copy of the array gets its own broadcast."""
+    from featureextraction_jl_spark.operators.ann import _broadcast_centroids
 
     sc = spark.sparkContext
-    cents = np.ascontiguousarray(np.eye(4), dtype=np.float64)
-    c_sq = (cents * cents).sum(axis=1)
-    before = len(_BC_CACHE)
-    b1 = _broadcast_centroids(sc, cents, c_sq)
-    b2 = _broadcast_centroids(sc, cents.copy(), c_sq)   # same CONTENT
-    assert b1 is b2 and len(_BC_CACHE) == before + 1
-    other = np.ascontiguousarray(np.eye(4) * 2.0, dtype=np.float64)
-    b3 = _broadcast_centroids(sc, other, (other * other).sum(axis=1))
-    assert b3 is not b1 and len(_BC_CACHE) == before + 2
+    cents = np.eye(4)
+    b1, dim = _broadcast_centroids(sc, cents)
+    b2, _ = _broadcast_centroids(sc, cents)             # same OBJECT
+    assert b1 is b2 and dim == 4 and len(_entries(cents)) == 1
+    copy = cents.copy()                                 # same CONTENT
+    b3, _ = _broadcast_centroids(sc, copy)
+    assert b3 is not b1 and len(_entries(copy)) == 1
+    np.testing.assert_array_equal(b3.value[0], b1.value[0])
+    # both public entry points share the one broadcast of one array
+    df, _ = corpus
+    c = train_ivf_centroids(df, "embedding", n_cells=4, dim=DIM)
+    ivf_topk_batch(assign_cells(df, "embedding", c), df.select(F.col("vec_id").alias("query_id"),
+                                 F.col("embedding").alias("query_vec")), c)
+    assert len(_entries(c)) == 1
+
+
+def test_broadcast_unpersisted_when_owner_collected(spark):
+    """Deleting a broadcast's owner (a fitted model, the caller's centroid
+    array) drops its cache entry and unpersists the broadcast
+    (weakref.finalize on the owner)."""
+    import gc
+
+    from featureextraction_jl_spark.session import _BROADCASTS, broadcast_once
+
+    class Owner:
+        pass
+
+    unpersisted = []
+    owner = Owner()
+    bc = broadcast_once(spark.sparkContext, owner, "k", lambda: np.eye(2))
+    key = _entries(owner)[0]
+    unpersist = bc.unpersist
+    bc.unpersist = lambda *a: unpersisted.append(unpersist(*a) is None)
+    del owner
+    gc.collect()
+    assert key not in _BROADCASTS and unpersisted == [True]
 
 
 def test_centroid_broadcast_cache_drops_stopped_apps(spark):
     """An entry of another (stopped) application is dropped and
-    unpersisted on the next call, instead of staying pinned until FIFO
-    pressure evicts it."""
-    from featureextraction_jl_spark.operators.ann import (
-        _BC_CACHE,
-        _broadcast_centroids,
-    )
+    unpersisted on the next call, instead of staying pinned."""
+    from featureextraction_jl_spark.operators.ann import _broadcast_centroids
+    from featureextraction_jl_spark.session import _BROADCASTS
 
     class StaleBroadcast:
         unpersisted = False
@@ -213,10 +242,9 @@ def test_centroid_broadcast_cache_drops_stopped_apps(spark):
             self.unpersisted = True
 
     stale = StaleBroadcast()
-    key = ("app-of-a-stopped-context", (2, 2), "0" * 40)
-    _BC_CACHE[key] = stale
-    cents = np.ascontiguousarray(np.eye(2) * 3.0, dtype=np.float64)
-    _broadcast_centroids(spark.sparkContext, cents,
-                         (cents * cents).sum(axis=1))
-    assert key not in _BC_CACHE
+    key = ("app-of-a-stopped-context", 0, "ivf_centroids")
+    _BROADCASTS[key] = stale
+    cents = np.eye(2) * 3.0
+    _broadcast_centroids(spark.sparkContext, cents)
+    assert key not in _BROADCASTS
     assert stale.unpersisted

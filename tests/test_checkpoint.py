@@ -223,6 +223,46 @@ def test_write_atomic_fsyncs_file_and_directory(tmp_path, monkeypatch):
     assert manifest.read(str(tmp_path / "missing.json")) is None
 
 
+def test_manifest_format_version(tmp_path):
+    """Every manifest is stamped format_version 1; read() hands it back
+    without the field, and an unknown version raises naming the path and
+    both versions."""
+    from featureextraction_jl_spark import manifest
+
+    path = str(tmp_path / "m.json")
+    manifest.write_atomic(path, {"a": 1})
+    with open(path) as f:
+        assert json.load(f) == {"a": 1, "format_version": 1}
+    assert manifest.read(path) == {"a": 1}
+    with open(path, "w") as f:
+        json.dump({"a": 1, "format_version": 2}, f)
+    with pytest.raises(ValueError, match=r"m\.json.*format_version 2.*1"):
+        manifest.read(path)
+
+
+def test_manifest_without_format_version_still_resumes(spark, inputs,
+                                                       tmp_path):
+    """Manifests written before format_version existed read as version 1:
+    a finished run whose manifests lack the field resumes every unit."""
+    tdir, sdir = inputs
+    out = str(tmp_path / "out")
+    run_features_resumable(spark, tdir, out, sdir, CFG, n_units=N_UNITS)
+    mdir = os.path.join(out, "_manifest")
+    stripped = 0
+    for name in os.listdir(mdir):
+        if name.endswith(".json"):
+            path = os.path.join(mdir, name)
+            with open(path) as f:
+                man = json.load(f)
+            stripped += man.pop("format_version") == 1
+            with open(path, "w") as f:
+                json.dump(man, f)
+    assert stripped >= N_UNITS + 1
+    job = run_features_resumable(spark, tdir, out, sdir, CFG, n_units=N_UNITS)
+    assert job["units_computed_this_run"] == []
+    assert job["units_resumed"] == list(range(N_UNITS))
+
+
 def test_manifest_invalidation_keys():
     # config changes and input changes must invalidate manifests
     assert config_hash(CFG, 4) != config_hash(CFG, 8)

@@ -876,6 +876,29 @@ def test_ann_null_and_ragged_embeddings_filtered(spark):
     assert empty.count() == 0
 
 
+def test_embedding_lsh_nan_vectors_do_not_fill_bucket_zero(spark):
+    """A vector with a NaN element hashes to bucket 0 of every table if it
+    reaches the GEMM (NaN >= 0 is false), so a few of them can push that
+    bucket over ``max_bucket`` and lose the valid pairs in it.  They are
+    dropped before the hash, like NULL elements: the near-dup pair next to
+    -plane (bucket 0) survives a cap of 3 beside three NaN vectors."""
+    from featureextraction_jl_spark.operators.dedup import hyperplanes
+
+    dim = 8
+    plane = hyperplanes(1, 1, dim, seed=7)[0, 0]
+    rng = np.random.default_rng(3)
+    base = -plane / np.linalg.norm(plane)
+    pair = [(i, [float(x) for x in base + rng.normal(scale=1e-3, size=dim)])
+            for i in (0, 1)]
+    nans = [(10 + i, [float("nan")] + [1.0] * (dim - 1)) for i in range(3)]
+    df = spark.createDataFrame(pair + nans,
+                               "vec_id long, embedding array<double>")
+    got = embedding_near_dup_pairs(df, "embedding", "vec_id", threshold=0.9,
+                                   n_planes=1, n_tables=1, max_bucket=3,
+                                   dim=dim, seed=7)
+    assert _pairs(got) == {(0, 1)}
+
+
 def test_minhash_max_bucket_caps_degenerate_buckets(spark):
     """Degenerate texts (empty/near-empty) all share one signature, so m
     such docs put m rows in one (band, band_hash) bucket -> m^2 join rows;

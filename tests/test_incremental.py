@@ -128,6 +128,24 @@ def test_recommit_is_idempotent_and_config_mismatch_raises(spark, tmp_path):
                                             shingle_k=3))
 
 
+
+def test_legacy_config_hash_mismatch_names_the_rebuild(spark, tmp_path):
+    """A commit whose config_hash predates the current hash payload fails
+    the identical-config retry; the error says the index may predate the
+    hash and names the rebuild (README: rebuilding an incremental dedup
+    index)."""
+    from featureextraction_jl_spark import manifest
+
+    docs = _docs(spark, [(0, _unique_text(0)), (1, _unique_text(1))])
+    idx = str(tmp_path / "idx")
+    commit_batch(docs, idx, "b1", CFG)
+    path = os.path.join(idx, "manifests", "b1.json")
+    manifest.write_atomic(path, {**manifest.read(path),
+                                 "config_hash": "0123456789abcdef"})
+    with pytest.raises(ValueError, match="predate.*rebuild"):
+        commit_batch(docs, idx, "b1", CFG)
+
+
 def test_recommit_with_commit_irrelevant_knobs_is_noop(spark, tmp_path):
     """id_col/text_col/max_bucket are per-call knobs that cannot change
     what a commit writes (exact-stage digests + UNCAPPED bands), so a

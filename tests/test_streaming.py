@@ -80,7 +80,7 @@ def test_streaming_moments_equal_batch(spark, tmp_path):
             # null ELEMENT: worse than a crash — unmasked it folds NaN into
             # the CUMULATIVE state and every later emission for that key is
             # NaN forever (batch paths drop these rows via
-            # _batch_to_matrix/pandas_clean_stack; the stream must match)
+            # decode_vectors; the stream must match)
             poisoned = list(vecs[42])
             poisoned[3] = None
             vecs[42] = poisoned

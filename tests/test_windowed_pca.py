@@ -417,7 +417,7 @@ def test_windowed_epoch_key_matches_f_window_starts(spark):
 
 def test_windowed_null_element_vec_projects_null_not_nan(spark):
     """A vector with a null ELEMENT is excluded from the fit
-    (pandas_clean_stack) — the projection must give it NULL too, never NaN
+    (decode_vectors) — the projection must give it NULL too, never NaN
     features that pass a feature_vec IS NULL filter downstream."""
     rows = [("a", T0 + dt.timedelta(minutes=m), [float(m), 1.0 + m % 3])
             for m in range(6)]
@@ -436,16 +436,22 @@ def test_windowed_null_element_vec_projects_null_not_nan(spark):
 
 def test_windowed_projection_broadcast_reused_across_calls(spark, windowed_df):
     """project_windowed on the same fitted object reuses ONE broadcast per
-    (application, lag): the resumable runner projects once per unit, and
-    re-broadcasting a ~100 MB model map 256 times would pile never-destroyed
-    broadcast blocks onto the block manager."""
+    (application, lag): a caller that projects the same fitted model more
+    than once (per input slice, per serving batch) must not re-broadcast a
+    ~100 MB model map each time and pile never-destroyed broadcast blocks
+    onto the block manager."""
+    from featureextraction_jl_spark.session import _BROADCASTS
+
+    def entries():
+        return [k for k in _BROADCASTS if k[1] == id(fitted)]
+
     _, fitted = run_windowed_features(windowed_df, "vec", "ts", "1 hour")
-    assert len(fitted._bc_cache) == 1  # run_windowed_features projected once
+    assert len(entries()) == 1  # run_windowed_features projected once
     a = project_windowed(windowed_df, fitted, "vec", "ts")
     b = project_windowed(windowed_df, fitted, "vec", "ts")
-    assert len(fitted._bc_cache) == 1  # same broadcast object, not three
+    assert len(entries()) == 1  # same broadcast object, not three
     lagged = project_windowed(windowed_df, fitted, "vec", "ts", lag_models=1)
-    assert len(fitted._bc_cache) == 2  # distinct lag -> distinct lut
+    assert len(entries()) == 2  # distinct lag -> distinct lut
     # and the reuse changes nothing about the output
     x = a.toPandas().sort_values(["conv_id", "ts"]).reset_index(drop=True)
     y = b.toPandas().sort_values(["conv_id", "ts"]).reset_index(drop=True)
@@ -455,9 +461,9 @@ def test_windowed_projection_broadcast_reused_across_calls(spark, windowed_df):
 
 def test_windowed_nan_float_key_semantics(spark):
     """Float-key edge cases: NaN keys collapse to the NULL group
-    CONSISTENTLY on the fit and projection sides (the pandas->Arrow group
-    emission renders NaN keys as NULL, and the projection's NaN->None
-    normalization matches), so NaN-only corpora work; a window holding
+    CONSISTENTLY on the fit and projection sides (the re-merge emits NaN
+    keys as NULL, and the projection looks a NaN key up under the NULL
+    key), so NaN-only corpora work; a window holding
     BOTH a NULL and a NaN key group would silently overwrite one model
     with the other — that collision raises instead."""
     # NaN-only float key: collapses to the None group, rows still project
