@@ -11,31 +11,30 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+
+from featureextraction_jl_spark.operators.windows import entity_window
+
+
+def filled(col: str, w: WindowSpec) -> Column:
+    """``col``'s most recent non-null value up to the current row of ``w``."""
+    running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return F.last(col, ignorenulls=True).over(running)
 
 
 def forward_fill(df: DataFrame, key, order, cols: Sequence[str]) -> DataFrame:
-    key = [key] if isinstance(key, str) else list(key)
-    order = [order] if isinstance(order, str) else list(order)
-    w = (
-        Window.partitionBy(*key).orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = entity_window(key, order)
     out = df
     for c in cols:
-        out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
+        out = out.withColumn(c, filled(c, w))
     return out
 
 
 def backward_fill(df: DataFrame, key, order, cols: Sequence[str]) -> DataFrame:
     """Offline-only: reads FUTURE rows; never use inside the feature path."""
-    key = [key] if isinstance(key, str) else list(key)
-    order = [order] if isinstance(order, str) else list(order)
-    w = (
-        Window.partitionBy(*key).orderBy(*order)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
+    w = entity_window(key, order).rowsBetween(Window.currentRow,
+                                              Window.unboundedFollowing)
     out = df
     for c in cols:
         out = out.withColumn(c, F.first(c, ignorenulls=True).over(w))

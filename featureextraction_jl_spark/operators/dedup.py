@@ -290,7 +290,7 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
         else df.localCheckpoint(eager=True)
 
 
-def _check_max_bucket(max_bucket: int | None) -> None:
+def check_max_bucket(max_bucket: int | None) -> None:
     # 0/negative is ambiguous ('disable'? 'drop everything'?) and the
     # literal filter (__w <= 0) would silently drop EVERY band row and
     # turn near-dedup off.  The CLI's '0 disables' convention maps
@@ -313,7 +313,7 @@ def cap_bucket_width(df: DataFrame, keys: list[str],
     bounds the blowup.  Kept as ONE helper so a change to the cap
     semantics lands on every banded self-join at once.
     """
-    _check_max_bucket(max_bucket)
+    check_max_bucket(max_bucket)
     if max_bucket is None:
         return df
     wb = Window.partitionBy(*keys)
@@ -793,7 +793,7 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
     """
     from pyspark.sql.types import ArrayType, LongType
 
-    _check_max_bucket(max_bucket)  # before the dim probe runs a job
+    check_max_bucket(max_bucket)  # before the dim probe runs a job
     if dim is None:
         # O(1) build-time probe, but still an extra Spark job over the
         # upstream plan — prefer passing ``dim`` when the embedding width

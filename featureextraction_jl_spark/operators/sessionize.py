@@ -8,10 +8,27 @@ The streaming twin is ``F.session_window`` (streaming/ingest.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from featureextraction_jl_spark.functions.timeutil import epoch_seconds
+from featureextraction_jl_spark.operators.windows import entity_window
+
+
+def ts_gap(ts_col: str, w: WindowSpec) -> Column:
+    """Seconds since the previous row of ``w`` (NULL on its first row)."""
+    return epoch_seconds(ts_col) - F.lag(epoch_seconds(ts_col)).over(w)
+
+
+def session_ids(gap: Column, w: WindowSpec, gap_seconds: float) -> Column:
+    """0-based session id: the running count over ``w`` of rows whose
+    ``gap`` (:func:`ts_gap` over ``w``) exceeds ``gap_seconds``."""
+    new_session = F.when(gap > F.lit(float(gap_seconds)), 1).otherwise(0)
+    # the running frame derives from the SAME spec — a second hand-built
+    # spec can drift (an order tweak applied to one silently misnumbers
+    # sessions)
+    running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return F.sum(new_session).over(running).cast("long")
 
 
 def sessionize(df: DataFrame, key="conv_id", ts_col: str = "ts",
@@ -22,16 +39,9 @@ def sessionize(df: DataFrame, key="conv_id", ts_col: str = "ts",
     ``order`` defaults to the timestamp itself; pass e.g. ``[ts_col,
     "turn_idx"]`` for a deterministic total order under duplicate ts.
     """
-    key = [key] if isinstance(key, str) else list(key)
-    order = [ts_col] if order is None else list(order)
-    w = Window.partitionBy(*key).orderBy(*[F.col(c) for c in order])
-    gap = epoch_seconds(ts_col) - F.lag(epoch_seconds(ts_col)).over(w)
-    new_session = F.when(gap > F.lit(float(gap_seconds)), 1).otherwise(0)
-    # derive the running frame from the SAME spec — a second hand-built
-    # spec can drift (an order tweak applied to one silently misnumbers
-    # sessions)
-    running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(out_col, F.sum(new_session).over(running).cast("long"))
+    w = entity_window(key, [ts_col] if order is None else order)
+    return df.withColumn(out_col,
+                         session_ids(ts_gap(ts_col, w), w, gap_seconds))
 
 
 def session_bounds(df: DataFrame, key="conv_id", ts_col: str = "ts",

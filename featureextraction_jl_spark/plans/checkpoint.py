@@ -63,15 +63,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from featureextraction_jl_spark import manifest
-from featureextraction_jl_spark.functions.pca import PCAModel, fit_pca
-from featureextraction_jl_spark.functions.moments import compute_moments
-from featureextraction_jl_spark.plans.windowed_pca import (
-    WindowedPCA,
-    fit_windowed_pca,
-)
+from featureextraction_jl_spark.functions.pca import PCAModel
+from featureextraction_jl_spark.plans.windowed_pca import WindowedPCA
 from featureextraction_jl_spark.plans.feature_job import (
     FeatureJobConfig,
     build_turn_features,
+    fit_model,
     project_features,
 )
 
@@ -281,25 +278,7 @@ def run_features_resumable(
         model = (WindowedPCA.load(model_path) if windowed
                  else PCAModel.load(model_path))
     else:
-        if windowed:
-            model = fit_windowed_pca(prepared, "raw_vec", "ts",
-                                     cfg.window_duration, k=cfg.k,
-                                     mode=cfg.mode)
-            stats = {"windowed": True, "window_duration": cfg.window_duration,
-                     "n_rows": int(sum(model.counts.values())
-                                   + sum(model.skipped.values())),
-                     "windows_fitted": len(model.models),
-                     "windows_skipped": len(model.skipped)}
-        else:
-            moments = compute_moments(prepared, "raw_vec")
-            model = fit_pca(moments, k=cfg.k, mode=cfg.mode)
-            stats = {"n_rows": int(moments.n), "p": int(moments.mean.shape[0]),
-                     "moment_checksum": hashlib.sha256(
-                         moments.mean.tobytes() + moments.m2.tobytes()
-                     ).hexdigest()[:16],
-                     "explained_variance_ratio": [
-                         round(float(r), 8)
-                         for r in model.explained_variance_ratio]}
+        model, stats = fit_model(prepared, cfg)
         model.save(model_path)
         manifest.write_atomic(meta_path, {
             "input_fingerprint": fp, "config_hash": chash,

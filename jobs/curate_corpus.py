@@ -63,6 +63,8 @@ from featureextraction_jl_spark.functions.text import (
     token_count_cols,
 )
 from featureextraction_jl_spark.operators.dedup import (
+    check_banding,
+    check_max_bucket,
     embedding_near_dup_pairs,
     exact_dedup,
     minhash_lsh_pairs,
@@ -120,6 +122,9 @@ class CurateConfig:
             raise ValueError(
                 "neardup_method='embedding' requires embeddings_path "
                 "(parquet with one vector per doc)")
+        if self.neardup_method == "minhash":
+            check_banding(self.num_hashes, self.bands)
+        check_max_bucket(self.max_bucket)
 
 
 # Knobs each stage body actually reads — the stage's manifest hashes only
@@ -177,7 +182,7 @@ def _stage_neardup(exact: DataFrame, cfg: CurateConfig) -> DataFrame:
         pairs = simhash_pairs(
             exact, cfg.text_col, cfg.id_col, max_hamming=cfg.max_hamming,
             max_bucket=cfg.max_bucket)
-    elif cfg.neardup_method == "embedding":
+    else:  # "embedding", the one method __post_init__ has left
         # Vectors ride a side table, not the document rows: the stats/exact
         # parquet stays text-only (no wide array column written twice) and
         # the id-equi join below is the only place vectors meet docs.  A
@@ -196,10 +201,6 @@ def _stage_neardup(exact: DataFrame, cfg: CurateConfig) -> DataFrame:
             vecs, cfg.vec_col, cfg.id_col, threshold=cfg.emb_threshold,
             n_planes=cfg.emb_planes, n_tables=cfg.emb_tables,
             max_bucket=cfg.max_bucket)
-    else:
-        raise ValueError(
-            f"neardup_method must be 'minhash', 'simhash' or 'embedding', "
-            f"got {cfg.neardup_method!r}")
     return near_dedup_survivors(exact, pairs, cfg.id_col)
 
 

@@ -70,6 +70,10 @@ def main(argv=None) -> int:
     from featureextraction_jl_spark.plans.checkpoint import run_features_resumable
     from featureextraction_jl_spark.session import engine_confs
 
+    # a bad --window raises here, before a JVM starts
+    cfg = FeatureJobConfig(gap_seconds=args.gap_seconds, num_buckets=args.buckets,
+                           k=args.k, mode=args.mode, snap_dim=args.snap_dim,
+                           window_duration=args.window)
     builder = SparkSession.builder.appName("fe-run-features")
     for key, val in engine_confs().items():
         if not key.startswith("spark.driver."):  # driver opts fixed at submit
@@ -77,9 +81,6 @@ def main(argv=None) -> int:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    cfg = FeatureJobConfig(gap_seconds=args.gap_seconds, num_buckets=args.buckets,
-                           k=args.k, mode=args.mode, snap_dim=args.snap_dim,
-                           window_duration=args.window)
     job = run_features_resumable(spark, args.transcripts, args.out,
                                  snapshots_path=args.snapshots, cfg=cfg,
                                  n_units=args.units, fmt=args.fmt)

@@ -275,6 +275,23 @@ def test_manifest_invalidation_keys():
     assert config_hash(CFG, 4) == "3799be82418e03fb"
 
 
+@pytest.mark.parametrize("bad", [
+    {"mode": "whiten"}, {"rolling_turns": -1}, {"window_lag_models": -1},
+    {"window_duration": "1 month"}])
+def test_bad_feature_config_raises_before_the_fit_manifest(
+        spark, inputs, tmp_path, bad):
+    """A config the fit or the projection would reject raises before the
+    moment pass writes model.npz and fit.json (mode='whiten' used to fit,
+    write both, and only then raise in PCAModel.projection)."""
+    tdir, sdir = inputs
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError):
+        run_features_resumable(spark, tdir, out, sdir,
+                               FeatureJobConfig(num_buckets=8, k=4, **bad),
+                               n_units=N_UNITS)
+    assert not os.path.exists(os.path.join(out, "_manifest", "fit.json"))
+
+
 def test_shrinking_n_units_removes_stale_outputs(spark, inputs, direct, tmp_path):
     """Re-running with a smaller n_units must delete the old split's
     unit=k (k >= new n_units) dirs — reading every unit dir would

@@ -207,6 +207,17 @@ def test_unknown_neardup_method_raises_at_construction():
         CurateConfig(neardup_method="bogus")
 
 
+@pytest.mark.parametrize("bad", [{"bands": 7}, {"max_bucket": 0}])
+def test_bad_neardup_config_raises_before_any_stage(spark, sf_dir, tmp_path,
+                                                    bad):
+    """Banding that does not divide num_hashes, or a cap of 0, raises before
+    the stats and exact stages are paid and their manifests written."""
+    out = str(tmp_path / "curated")
+    with pytest.raises(ValueError):
+        curate_corpus(spark, _docs_path(sf_dir), out, CurateConfig(**bad))
+    assert not os.path.exists(os.path.join(out, "_manifest", "stage_exact.json"))
+
+
 def _write_emb_vectors(spark, emb, *, seed=0, planted=(0, 1, 2), n=30):
     """(Re)write ONLY the side embedding table with one planted near-dup
     cluster: vectors for ``planted`` ids share a base direction (cosine

@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 
 from featureextraction_jl_spark.functions.moments import compute_grouped_moments
 from featureextraction_jl_spark.plans import FeatureJobConfig, run_features
+from featureextraction_jl_spark.plans.feature_job import build_turn_features
 from featureextraction_jl_spark.sources import generate_transcripts, generate_snapshots
+from tests import oracle
 
 CFG = FeatureJobConfig(snap_dim=4, k=5, num_buckets=8)
 
@@ -141,28 +143,120 @@ def test_flagship_null_text_does_not_poison_model(spark, data):
 def test_flagship_plan_invariants(spark, data):
     """SURVEY.md §4 plan promises, pinned so refactors can't regress them.
 
-    * at most 3 Exchanges in the projection-pass plan (the as-of union
-      window's hash(conv_id) exchange is the only FULL-data one; anything
-      extra would re-shuffle 10^12 turns at scale);
+    * one Exchange in the fit pass and in the projection pass: the as-of
+      union window's hash(conv_id) exchange (anything extra would
+      re-shuffle 10^12 turns at scale);
     * no BatchEvalPython (row-at-a-time Python) anywhere — the only Python
       is the Arrow-batched projection (ArrowEvalPython);
-    * the windows after the as-of reuse its clustering: every Sort beyond
-      the exchange is sort-only (no hashpartitioning re-introduction).
+    * ONE Sort: the as-of sweep's (key, ts, left_order, side) sort; the
+      chain's (ts, turn_idx) order is a prefix of it (asof_join
+      left_order), so Catalyst elides every later Sort — a second one is a
+      full re-sort of every turn per pass at scale;
+    * three Windows: the as-of sweep, one for every function of the
+      (conv_id; ts, turn_idx) spec that reads only the input — lag(ts)
+      once, lag(char_len), avg(char_len), last(tool) — and one for
+      sum(new_session), the only function that reads another's output.
     """
+    import re
     t, s = data
     out, _model = run_features(t, s, CFG)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = plan.count("Exchange")
-    assert n_exchanges <= 3, f"plan has {n_exchanges} Exchanges:\n{plan[:4000]}"
-    assert "BatchEvalPython" not in plan, "row-at-a-time Python crept in"
+    fit = build_turn_features(t, s, CFG).select("ts", "raw_vec")
+    for name, df in (("fit", fit), ("transform", out)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        counts = {op: len(re.findall(rf"\b{op} \[", plan))
+                  for op in ("Window", "Sort")}
+        counts["Exchange"] = plan.count("Exchange ")
+        assert counts == {"Window": 3, "Sort": 1, "Exchange": 1}, \
+            f"{name} pass: {counts}\n{plan[:6000]}"
+        assert "BatchEvalPython" not in plan, "row-at-a-time Python crept in"
+        # lag's argument is a pre-projected column: resolve it to its
+        # defining expression and keep the ones over ts
+        lags = re.findall(r"\blag\((\w+#\d+)", plan)
+        over_ts = [a for a in lags if re.search(
+            rf"[(\[,] ?[^,\[]*\bts#\d+[^,\[]* AS {re.escape(a)}\b", plan)]
+        assert len(lags) == 2 and len(over_ts) == 1, f"{name}: {lags}\n{plan}"
     assert "ArrowEvalPython" in plan, "projection should be Arrow-batched"
-    # ONE sort total: the as-of sweep's (key, ts, left_order, side) sort is
-    # the only one — sessionize/lag/backfill/assembly orderings are prefixes
-    # of it (asof_join left_order), so Catalyst elides their Sorts.  A second
-    # Sort here means a full re-sort of every turn per pass at scale.
-    import re
-    n_sorts = len(re.findall(r"\bSort \[", plan))
-    assert n_sorts <= 1, f"plan has {n_sorts} Sorts:\n{plan[:4000]}"
+
+
+def _oracle_fixture(spark):
+    """Two conversations with snapshots and one without: duplicate ts,
+    NULL and empty text, NULL tool before and after a tool, gaps just
+    below, at and above gap_seconds (1800 s), a snapshot tied with a turn
+    and snapshots before the first and after the last turn."""
+    t0 = pd.Timestamp("2024-03-01")
+    turns = [  # conv_id, turn_idx, role, text, tool, seconds after t0
+        ("a", 0, "user", "hello there", None, 0),
+        ("a", 1, "assistant", None, "search", 0),
+        ("a", 2, "tool", "result rows", None, 1799),
+        ("a", 3, "user", "", None, 3600),
+        ("a", 4, "assistant", "ok then", "calc", 5400),
+        ("a", 5, "tool", None, None, 9000),
+        ("a", 6, "user", "later", None, 9000),
+        ("b", 0, "user", "why", None, 100),
+        ("b", 1, "assistant", "because " * 20, None, 100),
+        ("b", 2, "user", None, None, 5000),
+        ("c", 0, "user", "x", "search", 50),
+        ("c", 1, "assistant", "y y", None, 1900),
+        ("c", 2, "tool", "zz", None, 2000),
+    ]
+    tp = pd.DataFrame(turns, columns=["conv_id", "turn_idx", "role", "text",
+                                      "tool", "sec"])
+    tp["ts"] = t0 + pd.to_timedelta(tp.pop("sec"), unit="s")
+    sp = pd.DataFrame({
+        "conv_id": ["a", "a", "b", "b"],
+        "snapshot_ts": t0 + pd.to_timedelta([1000, 5400, 50, 6000], unit="s"),
+        "snap_vec": [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0], [7.0, 8.0]],
+        "snap_score": [0.0] * 4,
+    })
+    t = spark.createDataFrame(tp, "conv_id string, turn_idx int, role string, "
+                                  "text string, tool string, ts timestamp")
+    s = spark.createDataFrame(sp, "conv_id string, snapshot_ts timestamp, "
+                                  "snap_vec array<double>, snap_score double")
+    return tp, sp, t, s
+
+
+def test_raw_vec_matches_pandas_oracle(spark):
+    """Every component of every row's raw_vec equals the vector built in
+    pandas from the as-of, sessionize and forward-fill oracles — the
+    whitening gate passes whatever the base components are, this does not."""
+    cfg = FeatureJobConfig(snap_dim=2, k=2, rolling_turns=2)
+    tp, sp, t, s = _oracle_fixture(spark)
+    got = build_turn_features(t, s, cfg) \
+        .select("conv_id", "turn_idx", "session_id", "tool", "raw_vec") \
+        .toPandas().set_index(["conv_id", "turn_idx"]).sort_index()
+
+    merged = oracle.asof_backward(tp, sp, "conv_id", "ts", "snapshot_ts")
+    want = []
+    for _conv, g in merged.groupby("conv_id"):
+        g = g.sort_values(["ts", "turn_idx"])
+        char_len = g["text"].str.len().fillna(0.0).astype(float)
+        session = oracle.sessionize(g["ts"], cfg.gap_seconds)
+        tool = oracle.forward_fill(g["tool"])
+        base = np.column_stack([
+            np.log1p(char_len),
+            np.log1p(g["ts"].diff().dt.total_seconds()).fillna(0.0),
+            session,
+            np.log1p(g["turn_idx"].astype(float)),
+            np.log1p(char_len.shift(1)).fillna(0.0),
+            np.log1p(char_len.rolling(cfg.rolling_turns + 1,
+                                      min_periods=1).mean()),
+            g["role"] == "assistant",
+            g["role"] == "tool",
+            tool.notna(),
+        ]).astype(float)
+        snap = np.stack([np.asarray(v) if isinstance(v, list) else np.zeros(2)
+                         for v in g["snap_vec"]])
+        want.append(g[["conv_id", "turn_idx"]].assign(
+            session_id=session.to_numpy(), tool=tool.to_numpy(),
+            raw_vec=list(np.hstack([base, snap]))))
+    want = pd.concat(want).set_index(["conv_id", "turn_idx"]).sort_index()
+
+    assert list(got.index) == list(want.index)
+    assert got["session_id"].tolist() == want["session_id"].tolist()
+    assert got["tool"].tolist() == want["tool"].tolist()
+    np.testing.assert_allclose(np.stack(got["raw_vec"].to_numpy()),
+                               np.stack(want["raw_vec"].to_numpy()),
+                               rtol=1e-12, atol=0)
 
 
 def test_scan_pushdown_and_pruning(spark, sf01_dir):
