@@ -79,7 +79,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full point-in-time feature job over sf0.001 events."""
     sf_dir = "/root/testdata/sf0.001"
     transcripts = _events_as_transcripts(spark, sf_dir)
-    cfg = FeatureJobConfig(snap_dim=0, k=5, num_buckets=8, gap_seconds=1800.0)
+    cfg = FeatureJobConfig(snap_dim=0, k=5, gap_seconds=1800.0)
     out, _model = run_features(transcripts, snapshots=None, cfg=cfg)
     return out
 

@@ -67,9 +67,7 @@ def bench_flagship(spark, tdir: str, sdir: str,
     t = spark.read.parquet(tdir)
     s = spark.read.parquet(sdir)
     n_turns = t.count()
-    cfg = FeatureJobConfig(snap_dim=16, k=8, num_buckets=int(
-        os.environ.get("SPARK_GRAFT_BUCKETS", "64")),
-        window_duration=window_duration)
+    cfg = FeatureJobConfig(snap_dim=16, k=8, window_duration=window_duration)
     t0 = time.monotonic()
     out, _model = run_features(t, s, cfg)
     materialize(out)

@@ -22,5 +22,4 @@ from featureextraction_jl_spark.functions.pca import (  # noqa: F401
 from featureextraction_jl_spark.functions.zscore import (  # noqa: F401
     zscore_global,
     zscore_by_group,
-    center_global,
 )

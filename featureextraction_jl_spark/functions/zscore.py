@@ -1,4 +1,5 @@
-"""Centering and z-score standardization (SURVEY.md §2 ops A1–A2).
+"""Z-score standardization (SURVEY.md §2 op A2; centering, A1, is the
+mean subtraction inside every projection and z-score below).
 
 Julia StatsBase.zscore semantics: (x - mu)/sigma with Bessel-corrected sigma;
 sigma == 0 -> output 0.0 (guard pinned in SURVEY.md §1.4.3).
@@ -32,14 +33,6 @@ def _guarded(col: Column, mu: Column, sigma: Column) -> Column:
     return (F.when(col.isNull(), F.lit(None).cast("double"))
             .when(sigma == 0.0, F.lit(0.0))
             .otherwise((col - mu) / sigma))
-
-
-def center_global(df: DataFrame, cols: list[str], moments_by_col: dict[str, float]) -> DataFrame:
-    """X - mu per column with precomputed means — pure column arithmetic (A1)."""
-    return df.select(
-        *[c for c in df.columns if c not in cols],
-        *[(F.col(c) - F.lit(moments_by_col[c])).alias(c) for c in cols],
-    )
 
 
 def zscore_global(df: DataFrame, cols: list[str]) -> DataFrame:

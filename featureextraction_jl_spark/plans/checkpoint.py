@@ -14,34 +14,31 @@ partitions by conv_id, so the per-unit decomposition is exact — computing
 a subset of units equals the same units of one global run (tested in
 tests/test_checkpoint.py).
 
-Protocol (manifest-last, crash-safe):
+Protocol: the resume ledger of :mod:`featureextraction_jl_spark.manifest`
+(check, invalidate, data, commit, summary) over ``_manifest/``:
 
 1. **Fingerprint** the input (file listing: relative path, size, mtime ->
-   sha256).  On Iceberg the fingerprint is the snapshot id — same role:
-   detect that a manifest refers to the same immutable input.
-2. **Fit stage**: global moment accumulation + driver-side eigh, persisted as
-   ``_manifest/model.npz`` + ``_manifest/fit.json`` (n, wall_s, explained
-   variance, moment checksum).  Skipped on resume when fingerprint+config
-   match.
+   sha256; on Iceberg the snapshot id).  **Check**: a unit is skipped when
+   ``unit_<i>.json`` matches fingerprint and config hash and ``unit=<i>/``
+   exists; the fit when ``fit.json`` and the ``model.meta.json`` sidecar
+   match and the artifact exists.
+2. **Fit stage**: remove both, fit (global moments + driver-side eigh),
+   save ``model.npz`` (or ``wmodels/``), commit the sidecar and ``fit.json``.
 3. **Transform stage**, every pending unit in ONE Spark write: the run's
-   one chain build (the fit's, when the fit ran) -> filtered to the pending
-   units (only when some are already done; Catalyst pushes the conv_id
-   filter through the Windows and the as-of Union into both scans, below
-   the Exchange) -> ``project_features`` -> add the ``unit`` column -> parquet
-   ``partitionBy("unit")`` with dynamic partition overwrite, which replaces
-   only the ``unit=<i>/`` dirs it writes (a static overwrite would delete
-   ``_manifest/`` and the resumed units).  One ``Observation`` counts every
-   unit's rows in the same pass.  A pending unit with no rows gets a
-   ``unit=<i>/`` holding an empty file that carries the schema.  Then each
-   unit's bytes/files are listed and ``_manifest/unit_<i>.json`` is written
-   atomically (:func:`featureextraction_jl_spark.manifest.write_atomic`).
-4. ``_manifest/job.json`` aggregates per-unit metrics (rows, bytes, seconds).
+   one chain build, filtered to the pending units when some are done
+   (Catalyst pushes the conv_id filter into both scans, below the
+   Exchange) -> ``project_features`` -> ``unit`` column -> parquet
+   ``partitionBy("unit")`` with dynamic partition overwrite (only the
+   ``unit=<i>/`` dirs it writes are replaced).  The pending units'
+   manifests are removed before the write; one ``Observation`` counts each
+   unit's rows in the same pass; a unit without rows gets an empty file
+   carrying the schema; then each unit's manifest is committed.
+4. **Summary**: ``job.json`` aggregates per-unit rows, bytes and seconds.
 
-Crash window: a crash between the data write and a unit's manifest write
-redoes that unit; the data write is idempotent (its unit dir is
-overwritten).  Because the pending units share one write, a driver crash
-DURING the write redoes every pending unit, not only the unfinished ones;
-failed tasks are still retried by Spark inside the write.
+A crash after the write and before a unit's commit leaves that unit's data
+without a manifest (the previous run's was removed before the write), so
+:func:`read_feature_output` refuses the output and a re-run redoes the
+unit.  A driver crash DURING the shared write redoes every pending unit.
 
 The unit split is a hash-slice filter over a full scan, not storage
 pruning: Spark's Murmur3 does not match Iceberg's ``bucket(n, conv_id)``
@@ -64,6 +61,12 @@ from pyspark.sql import functions as F
 
 from featureextraction_jl_spark import manifest
 from featureextraction_jl_spark.functions.pca import PCAModel
+from featureextraction_jl_spark.manifest import (
+    MANIFEST_DIR,
+    Ledger,
+    SimulatedCrash,
+    input_fingerprint,
+)
 from featureextraction_jl_spark.plans.windowed_pca import WindowedPCA
 from featureextraction_jl_spark.plans.feature_job import (
     FeatureJobConfig,
@@ -71,12 +74,10 @@ from featureextraction_jl_spark.plans.feature_job import (
     fit_model,
     project_features,
 )
+from featureextraction_jl_spark.sources.tables import read_table, read_transcripts
 
-MANIFEST_DIR = "_manifest"
-
-
-class SimulatedCrash(RuntimeError):
-    """Raised by the test-only fail_after_units hook to model a mid-run kill."""
+__all__ = ["MANIFEST_DIR", "SimulatedCrash", "config_hash", "input_fingerprint",
+           "read_feature_output", "run_features_resumable"]
 
 
 # ---------------------------------------------------------------------------
@@ -102,47 +103,6 @@ def iceberg_fingerprint(spark: SparkSession, *tables: str) -> str:
     return h.hexdigest()[:16]
 
 
-def input_fingerprint(*paths: str) -> str:
-    """sha256 over the (path, size, mtime_ns) listing of the input files.
-
-    Iceberg equivalent: the table's current snapshot id.  Both answer "is
-    this manifest about the same immutable input bytes?".
-    """
-    h = hashlib.sha256()
-    for root in paths:
-        if root is None:
-            h.update(b"<none>")
-            continue
-        if os.path.isfile(root):
-            # single-file parquet input (e.g. the driver's
-            # documents.parquet): same (name, size, mtime) identity as the
-            # directory listing below
-            st = os.stat(root)
-            h.update(f"{os.path.basename(root)}|{st.st_size}|"
-                     f"{st.st_mtime_ns}\n".encode())
-            continue
-        if not os.path.isdir(root):
-            # os.walk on a missing/remote path yields NOTHING, which would
-            # silently fingerprint every such input identically — and on
-            # resume with different data the model/units would be wrongly
-            # reused.  Remote inputs (s3://, hdfs://, Iceberg tables) need a
-            # snapshot-id based fingerprint instead of a file listing.
-            raise FileNotFoundError(
-                f"input_fingerprint: {root!r} is not a local directory; "
-                "for remote/Iceberg inputs pass a snapshot-id fingerprint "
-                "(see module docstring) instead of a path listing")
-        for dirpath, dirnames, filenames in sorted(os.walk(root)):
-            dirnames.sort()
-            for name in sorted(filenames):
-                if name.startswith(("_", ".")):
-                    continue
-                full = os.path.join(dirpath, name)
-                st = os.stat(full)
-                rel = os.path.relpath(full, root)
-                h.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-    return h.hexdigest()
-
-
 #: how a conversation is assigned its unit; part of config_hash, so output
 #: split any other way is recomputed, never mixed with this split
 UNIT_SPLIT = "pmod(hash(conv_id), n_units)"
@@ -152,6 +112,15 @@ def config_hash(cfg: FeatureJobConfig, n_units: int) -> str:
     payload = json.dumps({**asdict(cfg), "n_units": n_units,
                           "unit_split": UNIT_SPLIT}, sort_keys=True)
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
+
+
+def _units_on_disk(out_dir: str) -> list[int]:
+    """The sorted ``i`` of every ``unit=<i>/`` dir under ``out_dir``."""
+    names = [e for e in os.listdir(out_dir) if e.startswith("unit=")]
+    try:
+        return sorted(int(e.split("=", 1)[1]) for e in names)
+    except ValueError:
+        raise ValueError(f"unparseable unit dir among {names} under {out_dir}")
 
 
 def _dir_stats(path: str) -> tuple[int, int]:
@@ -185,68 +154,47 @@ def run_features_resumable(
     Re-invoking with the same inputs/config/out_dir skips every unit whose
     manifest is valid — a killed run resumes where it stopped.  Changed input
     bytes or config invalidate all manifests (fingerprint mismatch) and the
-    job recomputes from scratch.  ``fail_after_units`` (tests only) raises
-    :class:`SimulatedCrash` after that many unit manifests of this run have
-    been written, i.e. after the data write.
+    job recomputes from scratch.  ``fail_after_units`` (tests only) is the
+    ledger's crash hook: :class:`SimulatedCrash` is raised in place of the
+    unit manifest after this run's first ``fail_after_units``, i.e. after
+    the data write.
     """
     cfg = cfg or FeatureJobConfig()
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
+    ledger = Ledger(out_dir, fail_after_units)
 
     # Iceberg inputs are catalog names, not local dirs: fingerprint them by
-    # snapshot id (a file listing would raise FileNotFoundError before the
-    # Iceberg reader branch could ever run).
+    # snapshot id, not by a file listing
     fp = (iceberg_fingerprint(spark, transcripts_path, snapshots_path)
           if fmt == "iceberg"
           else input_fingerprint(transcripts_path, snapshots_path))
     chash = config_hash(cfg, n_units)
-
-    def valid(man: dict[str, Any] | None) -> bool:
-        return bool(man) and man.get("input_fingerprint") == fp \
-            and man.get("config_hash") == chash
+    expect = {"input_fingerprint": fp, "config_hash": chash}
 
     # Through the schema-asserting reader, not a bare spark.read.parquet:
     # a transcripts dir with ts stored as long or a missing column must
     # fail HERE with the contract error, not deep in the plan; ``fmt``
     # ("iceberg") selects the catalog branch on a real cluster.
-    from featureextraction_jl_spark.sources.tables import (
-        read_table,
-        read_transcripts,
-    )
-
     transcripts = read_transcripts(spark, transcripts_path, fmt)
     snapshots = (read_table(spark, snapshots_path, fmt)
                  if snapshots_path else None)
-
-    # Stale-unit sweep: a re-run with a smaller n_units would otherwise
-    # leave unit=k (k >= n_units) data dirs from the old split on disk, and
-    # read_feature_output(validate=False) would union them — duplicating
-    # rows while job.json (which sums only 0..n_units-1) reports clean totals.
-    for entry in os.listdir(out_dir):
-        if entry.startswith("unit="):
-            try:
-                k = int(entry.split("=", 1)[1])
-            except ValueError:
-                continue
-            if k >= n_units:
-                shutil.rmtree(os.path.join(out_dir, entry))
-                stale_man = os.path.join(mdir, f"unit_{k}.json")
-                if os.path.exists(stale_man):
-                    os.remove(stale_man)
 
     def unit_dir(u: int) -> str:
         return os.path.join(out_dir, f"unit={u}")
 
     def unit_manifest(u: int) -> str:
-        return os.path.join(mdir, f"unit_{u}.json")
+        return ledger.path(f"unit_{u}.json")
 
-    # Skip only when the manifest is valid AND its data still exists: a
-    # lost/deleted unit dir with a surviving manifest would otherwise be
-    # silently omitted from the output while job.json reports its rows as
-    # present.
+    # Stale-unit sweep: a re-run with a smaller n_units would otherwise
+    # leave unit=k (k >= n_units) data dirs from the old split on disk, and
+    # read_feature_output(validate=False) would union them — duplicating
+    # rows while job.json (which sums only 0..n_units-1) reports clean totals.
+    for k in _units_on_disk(out_dir):
+        if k >= n_units:
+            ledger.invalidate(unit_manifest(k))
+            shutil.rmtree(unit_dir(k))
+
     units_skipped = [u for u in range(n_units)
-                     if valid(manifest.read(unit_manifest(u)))
-                     and os.path.isdir(unit_dir(u))]
+                     if ledger.valid(unit_manifest(u), expect, unit_dir(u))]
     pending = [u for u in range(n_units) if u not in units_skipped]
 
     # ---- fit stage -------------------------------------------------------
@@ -255,20 +203,18 @@ def run_features_resumable(
     # WindowedPCA manifest).  config_hash covers window_duration, so
     # switching modes invalidates every manifest.
     windowed = cfg.window_duration is not None
-    model_path = os.path.join(mdir, "wmodels" if windowed else "model.npz")
-    model_ready = os.path.exists(
-        os.path.join(model_path, "index.json") if windowed else model_path)
-    fit_man_path = os.path.join(mdir, "fit.json")
-    fit_man = manifest.read(fit_man_path)
-    # The artifact carries its own provenance sidecar (written atomically
-    # AFTER the artifact, BEFORE fit.json): fit.json alone cannot vouch for
-    # the artifact bytes — a crash between a NEWER run's model.save and its
-    # fit.json write leaves a mismatched artifact next to an older-valid
-    # manifest, and resuming would project every remaining unit through the
-    # wrong model (windowed keys would all miss -> silent all-NULL units).
-    meta_path = os.path.join(mdir, "model.meta.json")
-    fitted = valid(fit_man) and model_ready \
-        and valid(manifest.read(meta_path))
+    model_path = ledger.path("wmodels" if windowed else "model.npz")
+    model_data = (os.path.join(model_path, "index.json") if windowed
+                  else model_path)
+    fit_man_path = ledger.path("fit.json")
+    # The artifact carries its own provenance sidecar, committed AFTER the
+    # artifact and BEFORE fit.json: fit.json alone cannot vouch for the
+    # artifact bytes, and a foreign artifact beside a valid fit.json would
+    # project every remaining unit through the wrong model (windowed keys
+    # would all miss -> silent all-NULL units).
+    meta_path = ledger.path("model.meta.json")
+    fit_man = ledger.valid(fit_man_path, expect, model_data)
+    fitted = bool(fit_man and ledger.valid(meta_path, expect, model_data))
     # The chain is built once, over the whole input, and read by both the
     # fit and the transform; a run with nothing to do never builds it.
     t0 = time.monotonic()
@@ -278,15 +224,15 @@ def run_features_resumable(
         model = (WindowedPCA.load(model_path) if windowed
                  else PCAModel.load(model_path))
     else:
+        ledger.invalidate(fit_man_path, meta_path)
         model, stats = fit_model(prepared, cfg)
         model.save(model_path)
-        manifest.write_atomic(meta_path, {
-            "input_fingerprint": fp, "config_hash": chash,
-            "artifact": os.path.basename(model_path)})
-        fit_man = {"stage": "fit", "input_fingerprint": fp,
-                   "config_hash": chash, **stats,
+        ledger.commit(meta_path, {
+            **expect, "artifact": os.path.basename(model_path)},
+            counted=False)
+        fit_man = {"stage": "fit", **expect, **stats,
                    "wall_s": round(time.monotonic() - t0, 3)}
-        manifest.write_atomic(fit_man_path, fit_man)
+        ledger.commit(fit_man_path, fit_man, counted=False)
 
     # ---- transform stage: every pending unit in one write ---------------
     if pending:
@@ -302,14 +248,13 @@ def run_features_resumable(
         out = feats.withColumn("unit", unit).observe(
             obs, *[F.count_if(F.col("unit") == u).alias(str(u))
                    for u in pending])
+        ledger.invalidate(*map(unit_manifest, pending))
         out.write.mode("overwrite") \
             .option("partitionOverwriteMode", "dynamic") \
             .partitionBy("unit").parquet(out_dir)
         # the wall of the one write shared by every pending unit
         wall_s = round(time.monotonic() - t0, 3)
-        for i, u in enumerate(pending):
-            if fail_after_units is not None and i >= fail_after_units:
-                raise SimulatedCrash(f"injected crash before manifest of unit {u}")
+        for u in pending:
             rows = int(obs.get[str(u)])
             if not rows:
                 # partitionBy makes no dir for a unit without rows: write
@@ -318,42 +263,25 @@ def run_features_resumable(
                 spark.createDataFrame([], feats.schema).write \
                     .mode("overwrite").parquet(unit_dir(u))
             n_files, n_bytes = _dir_stats(unit_dir(u))
-            manifest.write_atomic(unit_manifest(u), {
-                "stage": "transform",
-                "unit": u,
-                "n_units": n_units,
-                "input_fingerprint": fp,
-                "config_hash": chash,
-                "model": os.path.basename(model_path),
-                "rows": rows,
-                "output_files": n_files,
-                "output_bytes": n_bytes,
-                "wall_s": wall_s,
-            })
+            ledger.commit(unit_manifest(u), {
+                "stage": "transform", "unit": u, "n_units": n_units, **expect,
+                "model": os.path.basename(model_path), "rows": rows,
+                "output_files": n_files, "output_bytes": n_bytes,
+                "wall_s": wall_s})
 
     # ---- job summary -----------------------------------------------------
-    unit_mans = []
-    for u in range(n_units):
-        man = manifest.read(unit_manifest(u))
-        if man is None:
-            # a manifest written above vanished before aggregation
-            raise RuntimeError(
-                f"unit manifest missing or unreadable at summary time: "
-                f"{unit_manifest(u)}")
-        unit_mans.append(man)
-    job = {
-        "input_fingerprint": fp,
-        "config_hash": chash,
-        "n_units": n_units,
-        "units_computed_this_run": pending,
-        "units_resumed": units_skipped,
-        "rows": sum(m["rows"] for m in unit_mans),
-        "output_bytes": sum(m["output_bytes"] for m in unit_mans),
-        "wall_s_per_unit": {str(m["unit"]): m["wall_s"] for m in unit_mans},
-        "fit": fit_man,
-    }
-    manifest.write_atomic(os.path.join(mdir, "job.json"), job)
-    return job
+    return ledger.summarize(
+        [unit_manifest(u) for u in range(n_units)],
+        lambda mans: {
+            **expect,
+            "n_units": n_units,
+            "units_computed_this_run": pending,
+            "units_resumed": units_skipped,
+            "rows": sum(m["rows"] for m in mans),
+            "output_bytes": sum(m["output_bytes"] for m in mans),
+            "wall_s_per_unit": {str(m["unit"]): m["wall_s"] for m in mans},
+            "fit": fit_man,
+        })
 
 
 def read_feature_output(spark: SparkSession, out_dir: str,
@@ -363,24 +291,13 @@ def read_feature_output(spark: SparkSession, out_dir: str,
     ``validate`` (default) checks the unit manifests BEFORE the union:
     every unit dir must carry a readable manifest, all manifests must agree
     on ONE (input_fingerprint, config_hash) version, and the unit set must
-    be complete for the recorded n_units — otherwise a run that
-    crashed mid-recompute over changed input leaves unit=0 holding v2 rows
-    beside v1 units, and a bare read would return the mixed union with no
-    error.  Pass validate=False to inspect partial output.  Either way the
-    unit dirs listed here are read by name (with ``basePath``, so ``unit``
-    stays a partition column), not through a glob.
+    be complete for the recorded n_units.  Pass validate=False to inspect
+    partial output.  Either way the unit dirs are read by name (with
+    ``basePath``, so ``unit`` stays a partition column), not by a glob.
     """
-    units = []
-    for entry in os.listdir(out_dir):
-        if entry.startswith("unit="):
-            try:
-                units.append(int(entry.split("=", 1)[1]))
-            except ValueError:
-                raise ValueError(
-                    f"unparseable unit dir {entry!r} under {out_dir}")
+    units = _units_on_disk(out_dir)
     if not units:
         raise FileNotFoundError(f"no unit=<i> output under {out_dir}")
-    units.sort()
     if validate:
         mdir = os.path.join(out_dir, MANIFEST_DIR)
         versions, n_units_seen = set(), set()
@@ -388,9 +305,11 @@ def read_feature_output(spark: SparkSession, out_dir: str,
             man = manifest.read(os.path.join(mdir, f"unit_{k}.json"))
             if not man:
                 raise ValueError(
-                    f"unit={k} has data but no readable manifest — "
-                    f"crashed or foreign output; validate=False to read "
-                    f"anyway")
+                    f"unit={k} has data but no readable manifest — a "
+                    f"crashed or foreign write, whose rows may be mixed "
+                    f"with another input/config version; re-run "
+                    f"run_features_resumable to completion, or "
+                    f"validate=False to read anyway")
             versions.add((man.get("input_fingerprint"),
                           man.get("config_hash")))
             n_units_seen.add(man.get("n_units"))

@@ -75,7 +75,6 @@ from featureextraction_jl_spark.plans.windowed_pca import (
 @dataclass
 class FeatureJobConfig:
     gap_seconds: float = 1800.0
-    num_buckets: int = 64
     k: int = 8                      # PCA components
     mode: str = "pca_whiten"        # pca | pca_whiten | zca
     snap_dim: int = 16              # dim of snapshot vectors

@@ -33,10 +33,14 @@ is a narrow map (one scan, writes the text once with its signals);
 exact shuffles (digest, id) only; neardup is the expensive stage
 (banding self-join + iterative CC) isolated behind its own resume point,
 so a crash in hour 10 of CC never re-pays the stats/exact scans; final
-is a narrow filter.  Each stage's parquet write is idempotent
-(per-stage-dir overwrite) and the manifest is written AFTER the data
-(``manifest.write_atomic``: fsynced, then renamed into place), so a
-crash between the two redoes only that stage.
+is a narrow filter.
+
+Crash safety is the feature runner's protocol through the same
+:class:`~featureextraction_jl_spark.manifest.Ledger`: per stage, check the
+chain, remove the stage's manifest, overwrite its data, commit its
+manifest last; then summarize in ``job.json``.  A crash between a stage's
+data and its manifest leaves the stage without one, so
+:func:`read_curated` refuses it and a re-run redoes it.
 """
 
 from __future__ import annotations
@@ -71,12 +75,16 @@ from featureextraction_jl_spark.operators.dedup import (
     near_dedup_survivors,
     simhash_pairs,
 )
-from featureextraction_jl_spark.manifest import read as read_manifest, write_atomic
-from featureextraction_jl_spark.plans.checkpoint import (
+from featureextraction_jl_spark.manifest import (
     MANIFEST_DIR,
+    Ledger,
     SimulatedCrash,
     input_fingerprint,
+    read as read_manifest,
 )
+
+__all__ = ["STAGES", "CurateConfig", "SimulatedCrash", "curate_corpus",
+           "read_curated"]
 
 STAGES = ("stats", "exact", "neardup", "final")
 
@@ -240,40 +248,35 @@ def curate_corpus(
     Re-invoking with the same input/config/out_dir skips every stage whose
     manifest chain is valid; a killed run resumes at the first incomplete
     stage.  Changed input bytes or config invalidate the chain from the
-    first affected stage onward.
+    first affected stage onward.  ``fail_after_stages`` (tests only) raises
+    :class:`SimulatedCrash` in place of the stage manifest after this run's
+    first ``fail_after_stages``, i.e. after that stage's data is written.
     """
     cfg = cfg or CurateConfig()
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
+    ledger = Ledger(out_dir, fail_after_stages)
     fp = input_fingerprint(documents_path)
 
     upstream_hash = "<source>"
     stages_done, stages_skipped = [], []
     for i, stage in enumerate(STAGES):
-        spath = os.path.join(mdir, f"stage_{stage}.json")
+        spath = ledger.path(f"stage_{stage}.json")
         data_dir = os.path.join(out_dir, f"stage={stage}")
-        chash = _config_hash(cfg, stage)
-        # Side inputs a stage reads beyond the staged chain: the neardup
-        # stage's embeddings table.  Its BYTES must invalidate the stage
-        # the same way the documents bytes do — the config hash alone only
-        # sees the path string, and re-written vectors at the same path
-        # would otherwise resume over a stale pair graph.  None for every
-        # other stage/method, which also keeps pre-existing manifests
-        # (no "aux_fingerprint" key -> .get() None) chain-valid.
+        # The neardup stage's embeddings table is a side input: its BYTES
+        # invalidate the stage as the documents' do (the config hash sees
+        # only its path).  None for every other stage/method, which keeps
+        # manifests without an "aux_fingerprint" key chain-valid.
         aux_fp = (input_fingerprint(cfg.embeddings_path)
                   if stage == "neardup" and cfg.neardup_method == "embedding"
                   else None)
-        man = read_manifest(spath)
-        if (man and man.get("input_fingerprint") == fp
-                and man.get("config_hash") == chash
-                and man.get("aux_fingerprint") == aux_fp
-                and man.get("upstream_manifest") == upstream_hash
-                and os.path.isdir(data_dir)):
+        expect = {"input_fingerprint": fp,
+                  "config_hash": _config_hash(cfg, stage),
+                  "aux_fingerprint": aux_fp,
+                  "upstream_manifest": upstream_hash}
+        man = ledger.valid(spath, expect, data_dir)
+        if man:
             upstream_hash = _manifest_hash(man)
             stages_skipped.append(stage)
             continue
-        if fail_after_stages is not None and len(stages_done) >= fail_after_stages:
-            raise SimulatedCrash(f"injected crash before stage {stage!r}")
         t0 = time.monotonic()
         source = (spark.read.parquet(documents_path) if i == 0
                   else spark.read.parquet(
@@ -288,44 +291,26 @@ def curate_corpus(
         out = _STAGE_FNS[stage](source, cfg)
         obs = Observation(f"curate_{stage}")
         out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # Invalidate BEFORE overwriting the data: a kill between the data
-        # write and the new manifest write must leave the stage manifest
-        # MISSING, not the old run's still-chain-valid manifest pointing at
-        # new-input rows (read_curated walks manifests only).
-        if os.path.exists(spath):
-            os.remove(spath)
+        ledger.invalidate(spath)
         out.write.mode("overwrite").parquet(data_dir)
-        man = {
-            "stage": stage,
-            "input_fingerprint": fp,
-            "config_hash": chash,
-            "aux_fingerprint": aux_fp,
-            "upstream_manifest": upstream_hash,
-            "rows_out": int(obs.get["rows"]),
-            "wall_s": round(time.monotonic() - t0, 3),
-        }
-        write_atomic(spath, man)
+        man = {"stage": stage, **expect,
+               "rows_out": int(obs.get["rows"]),
+               "wall_s": round(time.monotonic() - t0, 3)}
+        ledger.commit(spath, man)
         upstream_hash = _manifest_hash(man)
         stages_done.append(stage)
 
-    stage_mans = {}
-    for stage in STAGES:
-        man = read_manifest(os.path.join(mdir, f"stage_{stage}.json"))
-        if man is None:
-            raise RuntimeError(
-                f"stage manifest missing at summary time: {stage}")
-        stage_mans[stage] = man
-    job = {
-        "input_fingerprint": fp,
-        "config_hash": _config_hash(cfg),
-        "stages_computed_this_run": stages_done,
-        "stages_resumed": stages_skipped,
-        "rows_out_per_stage": {s: m["rows_out"] for s, m in stage_mans.items()},
-        "wall_s_per_stage": {s: m["wall_s"] for s, m in stage_mans.items()},
-        "rows_final": stage_mans["final"]["rows_out"],
-    }
-    write_atomic(os.path.join(mdir, "job.json"), job)
-    return job
+    return ledger.summarize(
+        [ledger.path(f"stage_{s}.json") for s in STAGES],
+        lambda mans: {
+            "input_fingerprint": fp,
+            "config_hash": _config_hash(cfg),
+            "stages_computed_this_run": stages_done,
+            "stages_resumed": stages_skipped,
+            "rows_out_per_stage": {m["stage"]: m["rows_out"] for m in mans},
+            "wall_s_per_stage": {m["stage"]: m["wall_s"] for m in mans},
+            "rows_final": mans[-1]["rows_out"],
+        })
 
 
 def read_curated(spark: SparkSession, out_dir: str,

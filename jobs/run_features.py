@@ -8,7 +8,7 @@ Cluster usage (design target, BASELINE.json:6):
         jobs/run_features.py \\
         --transcripts <iceberg-or-parquet path> \\
         --snapshots <path> --out <path> \\
-        --buckets 4096 --units 256 --k 8 --mode pca_whiten
+        --units 256 --k 8 --mode pca_whiten
 
 Pure Python payload — numpy/pandas/pyarrow come from the cluster runtime, so
 no wheels are shipped.  The job is resumable: re-submitting after a failure
@@ -39,7 +39,6 @@ def parse_args(argv=None):
     p.add_argument("--transcripts", required=True)
     p.add_argument("--snapshots", default=None)
     p.add_argument("--out", required=True)
-    p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--units", type=int, default=8,
                    help="resumable units (conv_id hash slices), written in "
                         "one Spark job as unit=<i>/ dirs")
@@ -71,8 +70,8 @@ def main(argv=None) -> int:
     from featureextraction_jl_spark.session import engine_confs
 
     # a bad --window raises here, before a JVM starts
-    cfg = FeatureJobConfig(gap_seconds=args.gap_seconds, num_buckets=args.buckets,
-                           k=args.k, mode=args.mode, snap_dim=args.snap_dim,
+    cfg = FeatureJobConfig(gap_seconds=args.gap_seconds, k=args.k,
+                           mode=args.mode, snap_dim=args.snap_dim,
                            window_duration=args.window)
     builder = SparkSession.builder.appName("fe-run-features")
     for key, val in engine_confs().items():

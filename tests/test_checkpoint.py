@@ -20,7 +20,7 @@ from featureextraction_jl_spark.plans.checkpoint import (
 )
 from featureextraction_jl_spark.sources import generate_snapshots, generate_transcripts
 
-CFG = FeatureJobConfig(num_buckets=8, k=4, snap_dim=16)
+CFG = FeatureJobConfig(k=4, snap_dim=16)
 N_UNITS = 4
 
 
@@ -202,7 +202,11 @@ def test_torn_unit_manifest_tmp_recomputes_unit(spark, inputs, direct,
         run_features_resumable(spark, tdir, out, sdir, CFG, n_units=N_UNITS)
 
 
-def test_write_atomic_fsyncs_file_and_directory(tmp_path, monkeypatch):
+@pytest.mark.parametrize("op", ["write_atomic", "invalidate"])
+def test_write_atomic_fsyncs_file_and_directory(tmp_path, monkeypatch, op):
+    """write_atomic fsyncs the file, then its directory; the ledger's
+    invalidate fsyncs the manifest directory after a removal, and does
+    nothing when there is nothing to remove."""
     import stat
 
     from featureextraction_jl_spark import manifest
@@ -214,13 +218,24 @@ def test_write_atomic_fsyncs_file_and_directory(tmp_path, monkeypatch):
         synced.append(stat.S_ISDIR(os.fstat(fd).st_mode))
         real_fsync(fd)
 
-    monkeypatch.setattr(os, "fsync", spy)
-    path = str(tmp_path / "m.json")
-    manifest.write_atomic(path, {"b": 1, "a": [2]})
-    assert synced == [False, True]          # the file, then its directory
-    assert os.listdir(tmp_path) == ["m.json"]
-    assert manifest.read(path) == {"a": [2], "b": 1}
-    assert manifest.read(str(tmp_path / "missing.json")) is None
+    if op == "write_atomic":
+        monkeypatch.setattr(os, "fsync", spy)
+        path = str(tmp_path / "m.json")
+        manifest.write_atomic(path, {"b": 1, "a": [2]})
+        assert synced == [False, True]      # the file, then its directory
+        assert os.listdir(tmp_path) == ["m.json"]
+        assert manifest.read(path) == {"a": [2], "b": 1}
+        assert manifest.read(str(tmp_path / "missing.json")) is None
+    else:
+        ledger = manifest.Ledger(str(tmp_path))
+        path = ledger.path("unit_0.json")
+        manifest.write_atomic(path, {"a": 1})
+        monkeypatch.setattr(os, "fsync", spy)
+        ledger.invalidate(path)
+        assert synced == [True]             # the manifest directory
+        assert os.listdir(ledger.dir) == []
+        ledger.invalidate(path)             # a fresh out_dir: no fsync
+        assert synced == [True]
 
 
 def test_manifest_format_version(tmp_path):
@@ -266,13 +281,14 @@ def test_manifest_without_format_version_still_resumes(spark, inputs,
 def test_manifest_invalidation_keys():
     # config changes and input changes must invalidate manifests
     assert config_hash(CFG, 4) != config_hash(CFG, 8)
-    assert config_hash(CFG, 4) != config_hash(FeatureJobConfig(num_buckets=8, k=5), 4)
+    assert config_hash(CFG, 4) != config_hash(FeatureJobConfig(k=5), 4)
     assert input_fingerprint("/root/testdata/sf0.001") \
         != input_fingerprint("/root/testdata/sf0.01")
-    # pinned literals: a config field removed or renamed must not change
-    # the hash, or every existing _manifest/ dir would silently recompute
-    assert config_hash(FeatureJobConfig(), 8) == "d73602dbb50832ff"
-    assert config_hash(CFG, 4) == "3799be82418e03fb"
+    # pinned literals: the hash changes only deliberately, since every
+    # existing _manifest/ dir then recomputes once (last changed when the
+    # unread num_buckets field was removed)
+    assert config_hash(FeatureJobConfig(), 8) == "a83224f55bf6ce6a"
+    assert config_hash(CFG, 4) == "4999190471b2ea0a"
 
 
 @pytest.mark.parametrize("bad", [
@@ -287,7 +303,7 @@ def test_bad_feature_config_raises_before_the_fit_manifest(
     out = str(tmp_path / "out")
     with pytest.raises(ValueError):
         run_features_resumable(spark, tdir, out, sdir,
-                               FeatureJobConfig(num_buckets=8, k=4, **bad),
+                               FeatureJobConfig(k=4, **bad),
                                n_units=N_UNITS)
     assert not os.path.exists(os.path.join(out, "_manifest", "fit.json"))
 
@@ -325,7 +341,7 @@ def test_resumable_windowed_equals_direct_and_resumes(spark, inputs, tmp_path):
     direct windowed run_features, and a second invocation resumes every
     unit AND skips the fit (loads the saved WindowedPCA)."""
     tdir, sdir = inputs
-    wcfg = FeatureJobConfig(num_buckets=8, k=None, mode="pca_whiten",
+    wcfg = FeatureJobConfig(k=None, mode="pca_whiten",
                             snap_dim=16, window_duration="7 days")
     out = str(tmp_path / "wout")
     job = run_features_resumable(spark, tdir, out, sdir, wcfg, n_units=N_UNITS)
@@ -380,7 +396,7 @@ def test_one_chain_build_per_run_and_unit_filter_below_exchange(
     monkeypatch.setattr(ck, "build_turn_features", build)
     monkeypatch.setattr(fj, "build_turn_features", build)
     monkeypatch.setattr(ck, "project_features", project)
-    wcfg = FeatureJobConfig(num_buckets=8, k=4, snap_dim=16,
+    wcfg = FeatureJobConfig(k=4, snap_dim=16,
                             window_duration="7 days")
     for name, cfg in (("global", CFG), ("windowed", wcfg)):
         builds.clear()
@@ -416,7 +432,7 @@ def test_stale_model_artifact_triggers_refit(spark, inputs, direct, tmp_path):
 
     # simulate the foreign artifact: poison model.npz AND its sidecar with
     # a different config's hash, keep fit.json (still valid for CFG)
-    other = FeatureJobConfig(num_buckets=8, k=2, snap_dim=16)
+    other = FeatureJobConfig(k=2, snap_dim=16)
     t = spark.read.parquet(tdir)
     s = spark.read.parquet(sdir)
     _, wrong_model = run_features(t, s, other)

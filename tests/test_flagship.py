@@ -17,7 +17,7 @@ from featureextraction_jl_spark.plans.feature_job import build_turn_features
 from featureextraction_jl_spark.sources import generate_transcripts, generate_snapshots
 from tests import oracle
 
-CFG = FeatureJobConfig(snap_dim=4, k=5, num_buckets=8)
+CFG = FeatureJobConfig(snap_dim=4, k=5)
 
 
 @pytest.fixture(scope="module")
@@ -304,7 +304,7 @@ def test_flagship_windowed_models_option(spark, data):
 
     t, s = data
     cfg = FeatureJobConfig(snap_dim=4, k=None, mode="pca_whiten",
-                           num_buckets=8, window_duration="7 days")
+                           window_duration="7 days")
     out, fitted = run_features(t, s, cfg)
     assert isinstance(fitted, WindowedPCA)
     assert len(fitted.models) > 1  # data genuinely spans several windows
@@ -344,7 +344,7 @@ def test_flagship_windowed_plan_invariants(spark, data):
 
     t, s = data
     cfg = FeatureJobConfig(snap_dim=4, k=None, mode="pca_whiten",
-                           num_buckets=8, window_duration="7 days")
+                           window_duration="7 days")
     out, _fitted = run_features(t, s, cfg)
     plan = out._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange")

@@ -62,7 +62,7 @@ def test_spark_submit_smoke(spark, tmp_path):
          "--py-files", zip_path,
          os.path.join(REPO, "jobs", "run_features.py"),
          "--transcripts", tdir, "--out", out,
-         "--buckets", "4", "--units", "2", "--k", "3", "--snap-dim", "4"],
+         "--units", "2", "--k", "3", "--snap-dim", "4"],
         capture_output=True, text=True, timeout=600,
         cwd=str(tmp_path),  # off-repo: the zip must satisfy the import
     )
